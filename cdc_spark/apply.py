@@ -136,74 +136,56 @@ class CdcApply:
             F.col("table").isNotNull()
             & ~F.col("op").isin("begin", "commit", "generic")
         )
-        # Batch persistence is OFF by default (cfg.persist_batches): the
-        # envelope is consumed by 3 jobs (ctrl agg, winner agg, payload
-        # recovery), but the first two prune to a handful of narrow
-        # columns, so three pruned re-reads of the source are measurably
-        # cheaper than materializing the whole wide batch into the cache
-        # (guide §5: caching is only worth it when recompute costs more
-        # than the memory pressure; measured at 20M rows/batch the cache
-        # build alone exceeded the entire unpersisted pipeline). Every
-        # supported source recomputes deterministically: file segments and
-        # parquet re-read, the rate source is offset-derived, and the
-        # pg-logical reader replays planned ranges via readBetweenOffsets
-        # (WAL retained until the slot flush in commit()).
-        if self.cfg.persist_batches:
-            df = df.persist()
-        try:
-            # control plane: ONE aggregation job, O(tables) result
-            ctrl = (
-                df.groupBy("table")
-                .agg(
-                    F.max("lsn").alias("lsn_hwm"),
-                    F.max(F.when(F.col("op") == "truncate", F.col("lsn"))).alias(
-                        "tr_lsn"
-                    ),
-                    F.sort_array(
-                        F.collect_set(
-                            F.when(
-                                F.col("op") == "schema_change",
-                                F.struct("lsn", "schema_change"),
-                            )
-                        )
-                    ).alias("changes"),
-                    # HLL distinct-key estimate rides the SAME aggregation —
-                    # it feeds the narrow-dedup broadcast guard at zero
-                    # extra jobs (rsd 5%; the guard adds 10% headroom).
-                    # The sketch hashes an 8-byte xxhash64 of the key
-                    # columns, not a concatenated string: same cardinality
-                    # estimate (it feeds a thresholded guess, and xxhash64
-                    # collisions are far below the 5% rsd), no per-row
-                    # string materialization (measured ~7s/20M-row batch)
-                    F.approx_count_distinct(
-                        F.xxhash64(*self.cfg.key), 0.05
-                    ).alias("n_keys_est"),
-                )
-                .collect()
-            )
-            if len(ctrl) > 1:
-                # demuxed tables write to independent lakes; run their merge
-                # jobs concurrently (Spark schedules jobs from multiple
-                # driver threads in parallel). Lakes are created up front so
-                # the cache dict is not mutated across threads.
-                from concurrent.futures import ThreadPoolExecutor
-
-                for row in ctrl:
-                    self.lake_for(row["table"])
-                with ThreadPoolExecutor(max_workers=min(4, len(ctrl))) as ex:
-                    results = list(
-                        ex.map(
-                            lambda row: self._apply_table(df, batch_id, row, t0),
-                            ctrl,
+        # control plane: ONE aggregation job, O(tables) result
+        ctrl = (
+            df.groupBy("table")
+            .agg(
+                F.max("lsn").alias("lsn_hwm"),
+                F.max(F.when(F.col("op") == "truncate", F.col("lsn"))).alias(
+                    "tr_lsn"
+                ),
+                F.sort_array(
+                    F.collect_set(
+                        F.when(
+                            F.col("op") == "schema_change",
+                            F.struct("lsn", "schema_change"),
                         )
                     )
-            else:
-                results = [self._apply_table(df, batch_id, row, t0) for row in ctrl]
-            self._maybe_maintain(batch_id, [r["table"] for r in ctrl])
-            return results
-        finally:
-            if self.cfg.persist_batches:
-                df.unpersist()
+                ).alias("changes"),
+                # HLL distinct-key estimate rides the SAME aggregation —
+                # it feeds the narrow-dedup broadcast guard at zero
+                # extra jobs (rsd 5%; the guard adds 10% headroom).
+                # The sketch hashes an 8-byte xxhash64 of the key
+                # columns, not a concatenated string: same cardinality
+                # estimate (it feeds a thresholded guess, and xxhash64
+                # collisions are far below the 5% rsd), no per-row
+                # string materialization (measured ~7s/20M-row batch)
+                F.approx_count_distinct(
+                    F.xxhash64(*self.cfg.key), 0.05
+                ).alias("n_keys_est"),
+            )
+            .collect()
+        )
+        if len(ctrl) > 1:
+            # demuxed tables write to independent lakes; run their merge
+            # jobs concurrently (Spark schedules jobs from multiple
+            # driver threads in parallel). Lakes are created up front so
+            # the cache dict is not mutated across threads.
+            from concurrent.futures import ThreadPoolExecutor
+
+            for row in ctrl:
+                self.lake_for(row["table"])
+            with ThreadPoolExecutor(max_workers=min(4, len(ctrl))) as ex:
+                results = list(
+                    ex.map(
+                        lambda row: self._apply_table(df, batch_id, row, t0),
+                        ctrl,
+                    )
+                )
+        else:
+            results = [self._apply_table(df, batch_id, row, t0) for row in ctrl]
+        self._maybe_maintain(batch_id, [r["table"] for r in ctrl])
+        return results
 
     def _apply_table(self, df: DataFrame, batch_id: int, ctrl, t0: float) -> dict:
         table = ctrl["table"]
@@ -321,11 +303,10 @@ class CdcApply:
             projected = projected.unionByName(p)
 
         # -- LWW dedup (A2) + merge (E1) under one persist
-        cached_winners = None
         if self.cfg.dedup_narrow:
             from .dedup import lww_dedup_auto
 
-            deduped, _strategy, cached_winners = lww_dedup_auto(
+            deduped, _strategy = lww_dedup_auto(
                 projected,
                 key=key,
                 order_col="_lsn",
@@ -389,12 +370,6 @@ class CdcApply:
                 affected_buckets=[r["bucket"] for r in bstats],
                 batch_rows=sum(r["upserts"] + r["deletes"] for r in bstats),
                 bucket_key_ranges=bucket_ranges,
-                # per-bucket batch volume (same lineage job): lets a
-                # mid-size batch take the bucket-chunked join strategy
-                # instead of falling straight to the lake-shuffling agg
-                bucket_batch_rows={
-                    r["bucket"]: r["upserts"] + r["deletes"] for r in bstats
-                },
             )
             self._write_metrics(table, batch_id, bstats, info, t0)
             if self.cfg.neardup_index:
@@ -408,8 +383,6 @@ class CdcApply:
                 )
         finally:
             deduped.unpersist()
-            if cached_winners is not None:
-                cached_winners.unpersist()
         return info
 
     def _neardups_lake(self, table: str) -> LakeTable:

@@ -88,15 +88,6 @@ class EngineConfig:
     #: ~30%; at KB-scale payloads with few winners narrow wins (the round-3
     #: measurement). Raise this for wide-payload workloads.
     dedup_narrow_max_winners: int = 1_000_000
-    #: persist each microbatch's envelope frame for the duration of its
-    #: apply. OFF by default: the batch is consumed by three jobs, but two
-    #: of them prune to narrow columns, so pruned re-reads of the source
-    #: beat materializing the wide batch into cache (measured; see
-    #: apply_batch). All shipped sources recompute deterministically
-    #: (files re-read, rate is offset-derived, pg-logical replays via
-    #: readBetweenOffsets). Turn ON for a custom source whose recompute
-    #: is expensive or side-effecting.
-    persist_batches: bool = False
     #: key-prefix block width for the batch-side multi-interval range
     #: stats: the lineage job groups by (bucket, first key column's
     #: string-cast prefix of this length) so a batch spanning hot AND cold

@@ -86,8 +86,8 @@ def lww_dedup_auto(
     *,
     salt: int = 1,
     broadcast_max_rows: int = 5_000_000,
-    estimated_winners: int | None = None,
-) -> tuple[DataFrame, str, DataFrame | None]:
+    estimated_winners: int,
+) -> tuple[DataFrame, str]:
     """Narrow LWW dedup with a broadcast-budget guard.
 
     The narrow variant broadcasts the per-key winner set; a batch with more
@@ -96,37 +96,16 @@ def lww_dedup_auto(
     to the wide ``lww_dedup`` reduce when over budget — the same auto-pick
     discipline as the merge's ``batch_rows`` strategy switch.
 
-    ``estimated_winners`` lets the caller supply a distinct-key estimate it
-    already has (the apply pipeline folds an HLL ``approx_count_distinct``
-    into its existing control aggregation — ZERO extra jobs); the estimate
-    is compared with 10% headroom to absorb HLL error. Without an estimate
-    the winner set is counted exactly (one narrow (key, lsn)-only job) and
-    the materialized cache is reused for the broadcast.
+    ``estimated_winners`` is a distinct-key estimate the caller already has
+    (the apply pipeline folds an HLL ``approx_count_distinct`` into its
+    existing control aggregation — ZERO extra jobs); the estimate is
+    compared with 10% headroom to absorb HLL error.
 
-    Returns ``(deduped, strategy, cached)`` where strategy is ``"narrow"``
-    or ``"wide"`` and ``cached`` is the persisted winner frame the caller
-    must unpersist after materializing the result (None when no cache was
-    needed)."""
-    if estimated_winners is not None:
-        if estimated_winners <= broadcast_max_rows * 0.9:
-            return (
-                lww_dedup_narrow(df, key=key, order_col=order_col),
-                "narrow",
-                None,
-            )
-        return lww_dedup(df, key=key, order_col=order_col, salt=salt), "wide", None
-    winners = (
-        df.select(*key, order_col)
-        .groupBy(*key)
-        .agg(F.max(order_col).alias(order_col))
-        .persist()
-    )
-    n_winners = winners.count()
-    if n_winners <= broadcast_max_rows:
-        out = df.join(F.broadcast(winners), [*key, order_col], "left_semi")
-        return out.dropDuplicates(list(key)), "narrow", winners
-    winners.unpersist()
-    return lww_dedup(df, key=key, order_col=order_col, salt=salt), "wide", None
+    Returns ``(deduped, strategy)`` where strategy is ``"narrow"`` or
+    ``"wide"``."""
+    if estimated_winners <= broadcast_max_rows * 0.9:
+        return lww_dedup_narrow(df, key=key, order_col=order_col), "narrow"
+    return lww_dedup(df, key=key, order_col=order_col, salt=salt), "wide"
 
 
 def collapse_duplicate_lsns(df: DataFrame, order_col: str = "lsn") -> DataFrame:

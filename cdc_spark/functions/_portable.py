@@ -55,114 +55,3 @@ def duck_shingles(expr: str, n: int = 3) -> str:
 def mh_params(k: int = 16) -> list[tuple[int, int]]:
     return [(2 * i + 3, i * i + 1) for i in range(k)]
 
-
-# --------------------------------------------------------------------------
-# fused Spark-side fast paths (value-identical to the reference expressions
-# above — these only change HOW Spark computes the same numbers, never what
-# they are; the DuckDB oracles keep using the canonical forms)
-# --------------------------------------------------------------------------
-
-#: code-point field width for the injective shingle packing (below); max
-#: Unicode code point 0x10FFFF + 1 < 2^21
-_PACK_BITS = 21
-
-
-def spark_char_codes(expr: str) -> str:
-    """Spark SQL: ``array<bigint>`` of the string's code points.
-
-    Value-identical to ``ascii(substring(expr, i, 1))`` per position
-    (verified incl. astral-plane and combining characters), but LINEAR:
-    ``split('')`` walks the string once, while each ``substring(expr, i,
-    1)`` re-walks the UTF-8 bytes from the start — O(len^2) for the loop
-    the poly hash / shingle builders need. Only valid for non-empty
-    strings (``split('', '')`` yields ``['']`` -> code 0, conflating empty
-    with NUL — callers must CASE-guard ``length(expr) = 0``)."""
-    return f"transform(split({expr}, ''), _c -> CAST(ascii(_c) AS BIGINT))"
-
-
-def spark_shingle_hash_array(expr: str, n: int = 3) -> str:
-    """Spark SQL: ``array<bigint>`` of the poly hashes of EVERY n-gram
-    shingle position of ``expr`` (with multiplicity, in position order).
-
-    Value set == { spark_poly_hash(s) : s in spark_shingles(expr, n) }:
-    per position the hash chain is the identical per-step
-    ``(acc * MULT + code) % MOD`` fold the canonical expressions compute —
-    only the per-shingle string materialization, the per-shingle
-    ``sequence``/``aggregate`` machinery and the ``array_distinct`` over
-    strings are gone. Multiplicity differs from the distinct canonical
-    form, so this is ONLY for consumers that are multiplicity-insensitive
-    (MinHash takes a min over the array). The empty string hashes to SEED
-    (same CASE guard as spark_poly_hash); strings shorter than ``n``
-    produce one whole-string hash (== hashing their single short
-    shingle)."""
-    whole = (
-        f"aggregate(cds, CAST({SEED} AS BIGINT), "
-        f"(acc, c) -> (acc * {MULT} + c) % {MOD})"
-    )
-    h = f"CAST({SEED} AS BIGINT)"
-    for t in range(n):
-        h = f"((({h}) * {MULT} + element_at(cds, i + {t})) % {MOD})"
-    return (
-        f"(CASE WHEN length({expr}) = 0 THEN array(CAST({SEED} AS BIGINT)) "
-        f"ELSE element_at(transform(array({spark_char_codes(expr)}), cds -> "
-        f"CASE WHEN size(cds) <= {n} THEN array({whole}) "
-        f"ELSE transform(sequence(1, size(cds) - {n - 1}), i -> {h}) END), 1) "
-        f"END)"
-    )
-
-
-def spark_packed_shingles(expr: str, n: int = 3) -> str:
-    """Spark SQL: ``array<bigint>`` with every n-gram shingle position of
-    ``expr`` packed INJECTIVELY into one BIGINT: ``(code+1)`` per
-    character, ``_PACK_BITS`` bits each, zero-padded at the tail (only a
-    missing character packs to 0, so length is recoverable and no two
-    distinct shingle strings share a packed value). Therefore
-    ``array_distinct`` over these equals ``array_distinct`` over the
-    shingle strings — without materializing per-shingle strings or
-    deduplicating via string hashing. Supports n <= 3 (3 x 21 bits < 63).
-    """
-    if n > 3:
-        raise ValueError(f"packed shingles support n <= 3, got {n}")
-    mults = [1 << (_PACK_BITS * (n - 1 - t)) for t in range(n)]
-    full = " + ".join(
-        f"(element_at(cds, i + {t}) + 1) * {m}L" for t, m in enumerate(mults)
-    )
-    shorts = []
-    for ln in range(0, n):  # whole-string shingle for length < n
-        if ln == 0:
-            shorts.append(f"WHEN length({expr}) = 0 THEN array(0L)")
-        else:
-            packed = " + ".join(
-                f"(element_at(cds, {t + 1}) + 1) * {mults[t]}L"
-                for t in range(ln)
-            )
-            shorts.append(f"WHEN size(cds) = {ln} THEN array({packed})")
-    return (
-        f"(CASE WHEN length({expr}) = 0 THEN array(0L) "
-        f"ELSE element_at(transform(array({spark_char_codes(expr)}), cds -> "
-        f"CASE {' '.join(shorts[1:])} "
-        f"ELSE transform(sequence(1, size(cds) - {n - 1}), i -> {full}) END), 1) "
-        f"END)"
-    )
-
-
-def spark_hash_of_packed(col: str, n: int = 3) -> str:
-    """Spark SQL: the canonical poly hash of the shingle STRING a packed
-    BIGINT (``spark_packed_shingles``) encodes — pure integer arithmetic,
-    per-step ``(acc * MULT + code) % MOD`` exactly like spark_poly_hash.
-    Zero fields (only ever at the tail) mean 'no character'."""
-    if n > 3:
-        raise ValueError(f"packed shingles support n <= 3, got {n}")
-    mask = (1 << _PACK_BITS) - 1
-    h = f"CAST({SEED} AS BIGINT)"
-    for t in range(n):
-        shift = _PACK_BITS * (n - 1 - t)
-        # shiftright(), not the '>>' operator: '>>' does not parse inside
-        # higher-order-function lambdas (grammar conflict with '->')
-        fld = f"shiftright({col}, {shift}) & {mask}"
-        step = f"((({h}) * {MULT} + ({fld}) - 1) % {MOD})"
-        if t == 0:
-            h = step
-        else:
-            h = f"(CASE WHEN ({fld}) = 0 THEN {h} ELSE {step} END)"
-    return f"(CASE WHEN ({col}) = 0 THEN CAST({SEED} AS BIGINT) ELSE {h} END)"

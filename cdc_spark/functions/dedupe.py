@@ -138,8 +138,8 @@ hs AS (SELECT doc_id, {duck_poly_hash('sh')} AS h FROM sh)
 def _shingle_pos_index(lens, n):
     """(idx, npos, seg_starts): flat code-array index of every full n-gram
     position across concatenated docs. ``lens`` int64 per-doc char counts;
-    docs shorter than or equal to n contribute zero positions (they hash as
-    one whole-string shingle, handled scalar by the callers)."""
+    docs shorter than n contribute zero positions (they hash as one
+    whole-string shingle, handled scalar by the callers)."""
     import numpy as np
 
     starts = np.concatenate(([0], np.cumsum(lens)))[:-1]

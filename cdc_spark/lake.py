@@ -178,34 +178,6 @@ def bucket_expr(key: tuple[str, ...], n_buckets: int):
     return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
 
 
-def _pack_buckets(
-    bucket_rows: dict, budget: int, max_groups: int
-) -> list[list[int]] | None:
-    """First-fit-decreasing bin pack of the batch's buckets into chunks of
-    at most ``budget`` batch rows each — the plan for the 'chunked' merge
-    strategy (each chunk's key set broadcasts on its own). Returns None
-    when infeasible: a single bucket alone exceeds the budget (its join
-    side would not be safely broadcastable) or the batch needs more than
-    ``max_groups`` chunks (plan-size guard) — the caller then falls back
-    to the shuffle 'agg' strategy."""
-    bins: list[list] = []  # [rows, [buckets]]
-    for bkt, rows in sorted(
-        bucket_rows.items(), key=lambda kv: (-kv[1], kv[0])
-    ):
-        if rows > budget:
-            return None
-        for bin_ in bins:
-            if bin_[0] + rows <= budget:
-                bin_[0] += rows
-                bin_[1].append(bkt)
-                break
-        else:
-            bins.append([rows, [bkt]])
-            if len(bins) > max_groups:
-                return None
-    return [sorted(b[1]) for b in bins]
-
-
 #: per-file interval cap: row-group intervals beyond this are coalesced by
 #: merging the SMALLEST gaps first, so the kept intervals preserve the
 #: largest holes — the ones that actually let a merge skip the file
@@ -384,8 +356,7 @@ def project_to(
 
 class LakeTable:
     #: above this many batch rows the broadcast 'join' merge strategy falls
-    #: back to bucket-chunked joins and, past the chunk budget, to the
-    #: shuffle 'agg' strategy (a broadcast must fit executor mem)
+    #: back to the shuffle 'agg' strategy (a broadcast must fit executor mem)
     broadcast_max_rows = 5_000_000
     #: range shards per 'append' (merge-on-read) delta commit: each shard is
     #: one key-sorted file with tight footer ranges, so later point-set
@@ -393,11 +364,6 @@ class LakeTable:
     #: probed keys. Size to ~cluster write parallelism in production; small
     #: here so per-batch file count stays bounded between compactions.
     append_shards = 4
-    #: chunked-join budget: the batch may exceed broadcast_max_rows by up
-    #: to this factor if its buckets bin-pack into at most this many
-    #: broadcastable chunks (each chunk = its own broadcast join; the plan
-    #: unions the chunks, so the count is bounded to keep plan size sane)
-    chunk_max_groups = 32
     #: the 'join' strategy's costs scale with |batch keys| (two key-set
     #: broadcasts: the batch's (key, lsn) set and the stale set) while its
     #: benefit — touched lake rows crossing NO exchange — scales with the
@@ -863,10 +829,8 @@ class LakeTable:
         extra_summary: dict | None = None,
         affected_buckets: list[int] | None = None,
         batch_rows: int | None = None,
-        strategy: str | None = None,
         new_schema_changes: list | None = None,
         bucket_key_ranges: dict | None = None,
-        bucket_batch_rows: dict | None = None,
     ) -> dict:
         """Copy-on-write upsert of a deduped batch + single atomic commit.
 
@@ -878,8 +842,10 @@ class LakeTable:
         (exactly-once under Spark's replay-on-restart, E2).
 
         Three physical strategies (result-identical, covered by the same
-        oracle tests):
+        oracle tests), reported as ``info["strategy"]``:
 
+        - ``append``: exactly the merge-on-read tables' commit (see
+          ``create``); COW tables take ``join`` or ``agg``.
         - ``join`` (default when the batch is broadcastable): lake bytes
           NEVER shuffle. The deduped batch's (key, lsn) set is broadcast;
           survivors of the old files are a map-side left join + filter,
@@ -889,24 +855,14 @@ class LakeTable:
           once — the shape that survives 100 TB, where shuffling the lake
           through an exchange would dominate (and this VM's memory-bandwidth
           ceiling shows exactly that effect locally).
-        - ``chunked`` (mid-size batches, up to ~chunk_max_groups x the
-          broadcast budget): the batch's buckets are bin-packed
-          (``_pack_buckets``, fed by ``bucket_batch_rows`` from the
-          caller's existing lineage job) into chunks whose key sets each
-          broadcast; every chunk runs the join strategy against only its
-          own buckets' files and the chunks union into one write — lake
-          bytes STILL never cross an exchange.
-        - ``mixed`` (chunkable batch with individually-over-budget hot
-          buckets): the small buckets run chunked joins, ONLY the hot
-          buckets take the agg shuffle — the lake exchange is bounded by
-          the genuinely hot buckets, not every touched one.
-        - ``agg`` (fallback for huge batches): union old+batch, per-key
-          max_by reduce (partial-aggregated), repartition by bucket.
-          Shuffles touched lake rows; used when no bucket stats exist or
-          the chunk count would exceed ``chunk_max_groups``.
+        - ``agg``: union old+batch, per-key max_by reduce (partial-
+          aggregated), repartition by bucket. Shuffles touched lake rows;
+          taken when ``batch_rows`` exceeds ``broadcast_max_rows`` or the
+          touched lake rows are fewer than ``batch_rows *
+          join_min_lake_ratio``.
 
-        ``batch_rows`` / ``bucket_batch_rows`` (when known, e.g. from the
-        caller's lineage job) pick the strategy automatically.
+        ``batch_rows`` (when known, e.g. from the caller's lineage job)
+        drives that pick; without it a COW merge takes ``join``.
         """
         cur = self._meta
         if batch_id <= cur["last_batch"]["id"]:
@@ -951,17 +907,8 @@ class LakeTable:
         appended = False
 
         mor = bool(cur.get("merge_on_read"))
-        if strategy is None and mor:
-            strategy = "append"
-        if batch_df is not None and (strategy == "append") != mor:
-            # COW strategies assume one stored row per key (their old-file
-            # reads don't LWW-resolve), and appends on a COW table would
-            # silently break that invariant the other way round
-            raise ValueError(
-                f"strategy='append' is exactly the merge-on-read commit "
-                f"path (table merge_on_read={mor}, got {strategy!r})"
-            )
-        if batch_df is not None and strategy == "append":
+        strategy = None
+        if batch_df is not None and mor:
             # O(batch) delta commit: no old file is read or rewritten. The
             # batch is key-range sharded + key-sorted so each delta file's
             # footer ranges are tight — later point-set reads skip deltas
@@ -978,6 +925,7 @@ class LakeTable:
             rewritten = len(files)
             files.extend(cur["files"])
             appended = True
+            strategy = "append"
         elif batch_df is not None:
             b = batch_df.withColumn(
                 "_bucket", bucket_expr(self.key, self.n_buckets)
@@ -991,68 +939,20 @@ class LakeTable:
                 affected = sorted(
                     r[0] for r in b.select("_bucket").distinct().collect()
                 )
-        chunk_plan = None
-        agg_buckets: list = []
-
-        def _plan_over_budget() -> str:
-            """Pick between chunked / mixed / agg for an over-budget batch:
-            join-chunk every bucket that fits the broadcast budget, and
-            shuffle (agg) ONLY the buckets that are individually too hot —
-            the lake exchange is then bounded by the genuinely hot buckets
-            instead of every touched one."""
-            nonlocal chunk_plan, agg_buckets
-            if not bucket_batch_rows:
-                return "agg"
-            small = {
-                k: v for k, v in bucket_batch_rows.items()
-                if v <= self.broadcast_max_rows
-            }
-            if not small:  # every bucket is hot: plain agg over all
-                return "agg"
-            agg_buckets = sorted(
-                k for k, v in bucket_batch_rows.items()
-                if v > self.broadcast_max_rows
-            )
-            chunk_plan = _pack_buckets(
-                small, self.broadcast_max_rows, self.chunk_max_groups
-            )
-            if chunk_plan is None:  # too many chunks: plan-size guard
-                agg_buckets = []
-                return "agg"
-            if agg_buckets:
-                return "mixed"
-            return "chunked"
-
-        if strategy is None:
-            if batch_rows is None or batch_rows <= self.broadcast_max_rows:
-                strategy = "join"
-                # batch ~ touched-lake-sized: the two key-set broadcasts
-                # cost more than one shuffle of the union — take agg
-                # (see join_min_lake_ratio; manifest row counts, no job)
-                if batch_rows is not None and affected:
-                    aset = set(affected)
-                    touched_rows = sum(
-                        f.get("rows") or 0
-                        for f in cur["files"]
-                        if f["bucket"] in aset
-                    )
-                    if (
-                        touched_rows
-                        and touched_rows
-                        < batch_rows * self.join_min_lake_ratio
-                    ):
-                        strategy = "agg"
-            else:
-                strategy = _plan_over_budget()
-        elif strategy in ("chunked", "mixed"):
-            if not bucket_batch_rows:
-                raise ValueError(
-                    f"strategy={strategy!r} needs bucket_batch_rows"
-                )
-            strategy = _plan_over_budget()
         if affected and not appended:
             touched = [f for f in cur["files"] if f["bucket"] in affected]
             untouched = [f for f in cur["files"] if f["bucket"] not in affected]
+            # batch over the broadcast budget, or ~ touched-lake-sized: the
+            # two key-set broadcasts cost more than one shuffle of the union
+            # — take agg (see join_min_lake_ratio; manifest row counts, no
+            # job)
+            touched_rows = sum(f.get("rows") or 0 for f in touched)
+            strategy = "join"
+            if batch_rows is not None and (
+                batch_rows > self.broadcast_max_rows
+                or 0 < touched_rows < batch_rows * self.join_min_lake_ratio
+            ):
+                strategy = "agg"
             if bucket_key_ranges:
                 # file skipping WITHIN an affected bucket: a file ALL of
                 # whose key intervals (per-row-group, so a mixed hot+cold
@@ -1143,62 +1043,17 @@ class LakeTable:
                     .sortWithinPartitions("_bucket", *key)
                 )
 
-            if strategy in ("chunked", "mixed") and chunk_plan is not None:
-                # one broadcast join per broadcastable bucket chunk; under
-                # 'mixed' the individually-over-budget buckets get their
-                # own agg (shuffle bounded to the hot buckets); everything
-                # unions into a single write + commit, and the join-side
-                # lake rows still never cross an exchange
-                merged = None
-                planned = {bkt for grp in chunk_plan for bkt in grp}
-                planned |= set(agg_buckets)
-                groups = list(chunk_plan)
-                for bkt in affected:
-                    if bkt not in planned:
-                        # caller stats missed this bucket: its batch size is
-                        # UNKNOWN, so it cannot be proven broadcastable —
-                        # route it to the agg (shuffle) group instead of
-                        # defaulting to a possibly-over-budget broadcast
-                        # join (the exact case broadcast_max_rows guards)
-                        agg_buckets.append(bkt)
-                for group in groups:
-                    gset = set(group)
-                    b_g = b.filter(F.col("_bucket").isin(group))
-                    old_g = _load_old(
-                        [f for f in touched if f["bucket"] in gset]
-                    )
-                    part = (
-                        b_g.repartition(
-                            max(len(group), 1), "_bucket"
-                        ).sortWithinPartitions("_bucket", *key)
-                        if old_g is None
-                        else _join_merge(old_g, b_g, len(group))
-                    )
-                    merged = (
-                        part if merged is None else merged.unionByName(part)
-                    )
-                if agg_buckets:
-                    b_a = b.filter(F.col("_bucket").isin(agg_buckets))
-                    old_a = _load_old(
-                        [f for f in touched if f["bucket"] in set(agg_buckets)]
-                    )
-                    part = _agg_merge(old_a, b_a, len(agg_buckets))
-                    merged = (
-                        part if merged is None else merged.unionByName(part)
-                    )
+            old = _load_old(touched)
+            if old is None:
+                merged = b.repartition(
+                    max(len(affected), 1), "_bucket"
+                ).sortWithinPartitions("_bucket", *key)
+            elif strategy == "join":
+                merged = _join_merge(old, b, len(affected))
             else:
-                old = _load_old(touched)
-                if old is None:
-                    merged = b.repartition(
-                        max(len(affected), 1), "_bucket"
-                    ).sortWithinPartitions("_bucket", *key)
-                elif strategy == "join":
-                    merged = _join_merge(old, b, len(affected))
-                else:
-                    # partial aggregation collapses per-key map-side before
-                    # the single shuffle; sortWithinPartitions gives
-                    # key-sorted files
-                    merged = _agg_merge(old, b, len(affected))
+                # partial aggregation collapses per-key map-side before the
+                # single shuffle; sortWithinPartitions gives key-sorted files
+                merged = _agg_merge(old, b, len(affected))
             # per-attempt unique staging dir: a writer that loses the manifest
             # race must leave only orphan files, never clobber the winner's
             # already-published data (its files are GC'd by expire_snapshots)
@@ -1242,9 +1097,7 @@ class LakeTable:
             "batch_id": batch_id,
             "affected_buckets": affected,
             "files_written": rewritten,
-            "strategy": strategy if (affected or appended) else None,
-            "chunks": len(chunk_plan) if chunk_plan else None,
-            "agg_buckets": len(agg_buckets) if agg_buckets else None,
+            "strategy": strategy,
         }
 
     # ----------------------------------------------------------- compaction

@@ -49,30 +49,46 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def change_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _events(spark, sf_dir)
-    return e.select(
-        F.col("event_id").alias("lsn"),
-        F.when(e.event_type == "error", F.lit("delete"))
-        .when(e.event_type == "signup", F.lit("insert"))
-        .otherwise(F.lit("update"))
-        .alias("op"),
-        F.concat(F.lit("t"), F.pmod("user_id", F.lit(4)).cast("string")).alias("tbl"),
-        F.concat(F.lit("repo-"), F.pmod("user_id", F.lit(40)).cast("string")).alias(
-            "repo"
-        ),
-        F.concat(F.lit("f"), F.pmod("event_id", F.lit(7)).cast("string")).alias(
-            "path"
-        ),
-        F.md5(F.col("event_id").cast("string")).alias("commit"),
-        F.concat(
+def _repo_path_ints():
+    """(repo, path) as the two small ints they are built from — a
+    bijection, so reducing on them equals reducing on the strings."""
+    return F.pmod("user_id", F.lit(40)), F.pmod("event_id", F.lit(7))
+
+
+def _chg_strings(lsn, r, p) -> dict:
+    """The Spark form of ``CHG_SQL``'s op mapping and repo/path/content
+    builders over a raw event row (``lsn`` = event_id, ``r``/``p`` from
+    ``_repo_path_ints``) — shared by ``change_view`` and ``q_lww_dedup``
+    so the two cannot drift apart."""
+    et = F.col("event_type")
+    return {
+        "op": F.when(et == "error", F.lit("delete"))
+        .when(et == "signup", F.lit("insert"))
+        .otherwise(F.lit("update")),
+        "repo": F.concat(F.lit("repo-"), r.cast("string")),
+        "path": F.concat(F.lit("f"), p.cast("string")),
+        "content": F.concat(
             F.lit("u"),
             F.col("user_id").cast("string"),
             F.lit(":"),
-            F.col("event_type"),
+            et,
             F.lit("@"),
-            F.col("event_id").cast("string"),
-        ).alias("content"),
+            lsn.cast("string"),
+        ),
+    }
+
+
+def change_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = _events(spark, sf_dir)
+    s = _chg_strings(F.col("event_id"), *_repo_path_ints())
+    return e.select(
+        F.col("event_id").alias("lsn"),
+        s["op"].alias("op"),
+        F.concat(F.lit("t"), F.pmod("user_id", F.lit(4)).cast("string")).alias("tbl"),
+        s["repo"].alias("repo"),
+        s["path"].alias("path"),
+        F.md5(F.col("event_id").cast("string")).alias("commit"),
+        s["content"].alias("content"),
     )
 
 
@@ -94,30 +110,22 @@ def q_lww_dedup(spark, sf_dir):
     from .dedup import lww_dedup
 
     e = _events(spark, sf_dir)
+    r, p = _repo_path_ints()
     raw = e.select(
         F.col("event_id").alias("lsn"),
         "user_id",
         "event_type",
-        F.pmod("user_id", F.lit(40)).alias("_r"),
-        F.pmod("event_id", F.lit(7)).alias("_p"),
+        r.alias("_r"),
+        p.alias("_p"),
     )
     out = lww_dedup(raw, key=("_r", "_p"), order_col="lsn")
+    s = _chg_strings(F.col("lsn"), F.col("_r"), F.col("_p"))
     return out.select(
-        F.concat(F.lit("repo-"), F.col("_r").cast("string")).alias("repo"),
-        F.concat(F.lit("f"), F.col("_p").cast("string")).alias("path"),
+        s["repo"].alias("repo"),
+        s["path"].alias("path"),
         F.col("lsn").alias("last_lsn"),
-        F.when(F.col("event_type") == "error", F.lit("delete"))
-        .when(F.col("event_type") == "signup", F.lit("insert"))
-        .otherwise(F.lit("update"))
-        .alias("last_op"),
-        F.concat(
-            F.lit("u"),
-            F.col("user_id").cast("string"),
-            F.lit(":"),
-            F.col("event_type"),
-            F.lit("@"),
-            F.col("lsn").cast("string"),
-        ).alias("last_content"),
+        s["op"].alias("last_op"),
+        s["content"].alias("last_content"),
     )
 
 

@@ -70,8 +70,7 @@ def start_stream(
         if decode is not None:
             batch_df = decode(batch_df)
         # The STREAMING path persists each microbatch for the duration of
-        # its apply even though batch replay does not (see
-        # EngineConfig.persist_batches): the engine derives
+        # its apply even though batch replay does not: the engine derives
         # numInputRows from the source scans the batch plan executes, so
         # unpersisted recompute would multiple-count delivered rows in
         # StreamingQueryProgress — a monitoring invariant (reference

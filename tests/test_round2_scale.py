@@ -64,22 +64,25 @@ def test_gap_audit_empty_input(spark):
 def test_lww_dedup_auto_fallback_engages_and_matches(spark):
     log = change_log(spark, 3000, n_repos=40, n_paths=10, dup_rate=0.05, seed=43)
     narrow = lww_dedup_narrow(log, key=("repo", "path"), order_col="lsn")
-    forced, strategy, cached = lww_dedup_auto(
-        log, key=("repo", "path"), order_col="lsn", broadcast_max_rows=1
+    n_keys = narrow.count()
+    # estimate over budget: the wide reduce
+    forced, strategy = lww_dedup_auto(
+        log, key=("repo", "path"), order_col="lsn",
+        broadcast_max_rows=n_keys, estimated_winners=n_keys,
     )
-    assert strategy == "wide" and cached is None
+    assert strategy == "wide"
     a = narrow.orderBy("repo", "path").toPandas()
     b = forced.orderBy("repo", "path").toPandas()
     pd.testing.assert_frame_equal(
         a.reset_index(drop=True), b.reset_index(drop=True), check_like=True
     )
-    # under budget: narrow path + a cached winner frame to release
-    ok, strategy2, cached2 = lww_dedup_auto(
-        log, key=("repo", "path"), order_col="lsn", broadcast_max_rows=10**9
+    # estimate within the budget's 10% headroom: the narrow path
+    ok, strategy2 = lww_dedup_auto(
+        log, key=("repo", "path"), order_col="lsn",
+        broadcast_max_rows=n_keys * 2, estimated_winners=n_keys,
     )
-    assert strategy2 == "narrow" and cached2 is not None
+    assert strategy2 == "narrow"
     assert ok.count() == len(a)
-    cached2.unpersist()
 
 
 def test_apply_with_tiny_dedup_broadcast_budget_matches_oracle(

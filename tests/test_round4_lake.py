@@ -1,8 +1,9 @@
-"""Round-4 VERDICT items 5-6: the bucket-chunked merge strategy (mid-size
-batches keep lake bytes exchange-free) and multi-interval key-range stats
-(batch-side prefix-block intervals + optional truncate-transform file
-partitioning), which together fix the round-3 BENCH caveat: a batch
-spanning both ends of the keyspace no longer defeats file skipping."""
+"""Round-4 VERDICT items 5-6: over-broadcast-budget batches (the
+bucket-chunked merge strategy they once took is gone — they take 'agg')
+and multi-interval key-range stats (batch-side prefix-block intervals +
+optional truncate-transform file partitioning), which together fix the
+round-3 BENCH caveat: a batch spanning both ends of the keyspace no longer
+defeats file skipping."""
 
 import os
 
@@ -11,11 +12,7 @@ from pyspark.sql import functions as F
 
 from cdc_spark.apply import CdcApply, _fold_bstats
 from cdc_spark.config import BASE_FIELDS, EngineConfig
-from cdc_spark.lake import (
-    LakeTable,
-    _coalesce_ranges,
-    _pack_buckets,
-)
+from cdc_spark.lake import LakeTable, _coalesce_ranges
 from cdc_spark.loggen import change_log
 from cdc_spark.oracle import assert_matches, replay
 
@@ -35,17 +32,6 @@ def _mk_batch(spark, keys, lsn0):
 
 
 # ------------------------------------------------------------ pure units
-def test_pack_buckets():
-    # fits in two bins of budget 10
-    assert _pack_buckets({1: 6, 2: 5, 3: 4}, 10, 8) == [[1, 3], [2]]
-    # single bucket over budget -> infeasible
-    assert _pack_buckets({1: 11, 2: 1}, 10, 8) is None
-    # needs more bins than allowed -> infeasible
-    assert _pack_buckets({i: 6 for i in range(5)}, 10, 2) is None
-    # deterministic given equal rows (ties broken by bucket id)
-    assert _pack_buckets({3: 5, 1: 5, 2: 5}, 10, 8) == [[1, 2], [3]]
-
-
 def test_coalesce_ranges():
     # overlapping + adjacent merge
     assert _coalesce_ranges([[1, 3], [2, 5], [7, 9]]) == [[1, 5], [7, 9]]
@@ -81,7 +67,7 @@ def test_fold_bstats_builds_intervals():
     assert ranges[1] == [["mmmm", "mmmm"]]
 
 
-# --------------------------------------------------- chunked merge strategy
+# ------------------------------------------------ over-budget merge batches
 def _run(spark, root, broadcast_rows):
     cfg = EngineConfig(
         lake_root=root, checkpoint=os.path.join(root, "_ckpt"), n_buckets=8
@@ -93,8 +79,8 @@ def _run(spark, root, broadcast_rows):
     for i in range(3):
         b = log.filter(F.pmod(F.xxhash64("lsn", F.lit(7)), F.lit(3)) == i)
         applier.lake_for("repos").broadcast_max_rows = broadcast_rows
-        # pin the budget-only pick: this test exercises the chunked-vs-join
-        # machinery, not the round-6 batch/lake-ratio heuristic (which would
+        # pin the budget-only pick: this test exercises the broadcast
+        # budget, not the round-6 batch/lake-ratio heuristic (which would
         # route these lake-sized batches to agg — covered by its own test)
         applier.lake_for("repos").join_min_lake_ratio = 0
         infos.extend(applier.apply_batch(b, i))
@@ -102,65 +88,28 @@ def _run(spark, root, broadcast_rows):
 
 
 def test_chunked_strategy_identical_and_selected(spark, tmpdir_factory_clean):
-    """A batch over the broadcast budget whose buckets bin-pack must take
-    the chunked strategy (not agg) and produce the oracle state."""
-    r_chunk = tmpdir_factory_clean("ck")
-    r_join = tmpdir_factory_clean("jn")
-    # ~1000 rows/batch over 8 buckets (~125 each): budget 400 -> chunked
-    lake_c, log, infos = _run(spark, r_chunk, broadcast_rows=400)
-    assert {i["strategy"] for i in infos} == {"chunked"}
-    assert all(i["chunks"] and i["chunks"] > 1 for i in infos)
-    lake_j, _, infos_j = _run(spark, r_join, broadcast_rows=10_000_000)
-    assert {i["strategy"] for i in infos_j} == {"join"}
+    """Batches over the broadcast budget take 'agg' — whether their buckets
+    would bin-pack under the budget (the shape the deleted 'chunked'
+    strategy took) or a single bucket alone exceeds it — and produce the
+    same state as an all-'join' run and the oracle."""
     import pandas as pd
 
-    pc = lake_c.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
+    r_join = tmpdir_factory_clean("jn")
+    lake_j, log, infos_j = _run(spark, r_join, broadcast_rows=10_000_000)
+    assert {i["strategy"] for i in infos_j} == {"join"}
     pj = lake_j.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(pc, pj)
-    assert_matches(pc, replay(log.toPandas(), EngineConfig().base_fields))
-
-
-def test_chunked_falls_back_to_agg_when_one_bucket_too_big(
-    spark, tmpdir_factory_clean
-):
-    """A single bucket over the broadcast budget cannot chunk — auto-pick
-    must land on agg, result unchanged."""
-    root = tmpdir_factory_clean("ckagg")
-    lake_a, log, infos = _run(spark, root, broadcast_rows=20)
-    assert {i["strategy"] for i in infos} == {"agg"}
-    assert_matches(
-        lake_a.read().toPandas(), replay(log.toPandas(), EngineConfig().base_fields)
-    )
-
-
-def test_chunked_plan_lake_side_no_exchange(spark, tmpdir_factory_clean):
-    """The chunked shape is a union of per-chunk broadcast joins: the lake
-    (parquet) side of every chunk must reach the union without an
-    Exchange."""
-    root = tmpdir_factory_clean("ckplan")
-    cfg = EngineConfig(
-        lake_root=root, checkpoint=os.path.join(root, "_ckpt"), n_buckets=4
-    )
-    applier = CdcApply(spark, cfg)
-    applier.apply_batch(change_log(spark, 1000, n_repos=10, seed=3), 0)
-    lake = applier.lake_for("repos")
-    probe = None
-    for some in ([0, 1], [2, 3]):
-        flist = [f for f in lake.meta["files"] if f["bucket"] in some]
-        if not flist:
-            continue
-        old = lake._read_files(flist, lake.schema_fields())
-        bk = F.broadcast(
-            lake.read(include_meta=True)
-            .select("repo", "path", F.col("_lsn").alias("_b"))
+    assert_matches(pj, replay(log.toPandas(), EngineConfig().base_fields))
+    # ~1000 rows/batch over 8 buckets (~125 each): budget 400 bin-packs,
+    # budget 20 is below a single bucket
+    for budget in (400, 20):
+        lake_a, _, infos = _run(
+            spark, tmpdir_factory_clean(f"agg{budget}"), broadcast_rows=budget
         )
-        keep_old = old.join(bk, ["repo", "path"], "left").filter(
-            F.col("_b").isNull() | (F.col("_b") <= F.col("_lsn"))
+        assert {i["strategy"] for i in infos} == {"agg"}
+        got = lake_a.read().toPandas().sort_values(["repo", "path"]).reset_index(
+            drop=True
         )
-        probe = keep_old if probe is None else probe.unionByName(keep_old)
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "Exchange hashpartitioning" not in plan
+        pd.testing.assert_frame_equal(got, pj)
 
 
 # ------------------------------- the round-3 caveat: hot+cold in ONE batch
@@ -375,86 +324,3 @@ def test_coalesce_ranges_properties(ranges, cap):
     assert out[-1][1] == max(r[1] for r in ranges)
     for lo, hi in ranges:  # every input interval is covered by ONE output
         assert any(o[0] <= lo and hi <= o[1] for o in out)
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.dictionaries(st.integers(0, 63), st.integers(1, 1000),
-                    min_size=1, max_size=32),
-    st.integers(1, 2000),
-    st.integers(1, 32),
-)
-def test_pack_buckets_properties(bucket_rows, budget, max_groups):
-    """Feasible packs partition ALL buckets with every bin under budget;
-    infeasibility only when a bucket alone exceeds budget or the pack
-    needs more bins than allowed."""
-    plan = _pack_buckets(bucket_rows, budget, max_groups)
-    if plan is None:
-        # infeasibility has exactly two legal causes: a single bucket over
-        # budget, or (all fit but) more bins needed than allowed — and FFD
-        # never uses more bins than items, so the bin-count cause implies
-        # max_groups < len(bucket_rows)
-        assert any(v > budget for v in bucket_rows.values()) or (
-            max_groups < len(bucket_rows)
-        )
-        return
-    flat = [b for grp in plan for b in grp]
-    assert sorted(flat) == sorted(bucket_rows)  # exact partition
-    assert len(plan) <= max_groups
-    for grp in plan:
-        assert sum(bucket_rows[b] for b in grp) <= budget
-
-
-def test_mixed_strategy_aggs_only_hot_buckets(spark, tmpdir_factory_clean):
-    """A batch with one individually-over-budget bucket and several small
-    ones takes the MIXED strategy (chunked joins + agg for just the hot
-    bucket) and produces the same state as a pure join run."""
-    from cdc_spark.lake import bucket_expr
-
-    root = tmpdir_factory_clean("mixed")
-    keys = [f"repo-{i:03d}" for i in range(60)]
-    # real bucket of each key (the merge's own hash)
-    bdf = spark.createDataFrame([(k, "src/main.py") for k in keys],
-                                "repo STRING, path STRING")
-    rows = bdf.select(
-        "repo", bucket_expr(("repo", "path"), 4).alias("b")
-    ).collect()
-    by_bucket = {}
-    for r in rows:
-        by_bucket.setdefault(r["b"], []).append(r["repo"])
-    counts = {b: len(ks) for b, ks in by_bucket.items()}
-    hot = max(counts, key=counts.get)
-    budget = counts[hot] - 1
-    assert any(v <= budget for b, v in counts.items() if b != hot)
-
-    def _build(strategy_budget):
-        r = tmpdir_factory_clean(f"mx{strategy_budget}")
-        lake = LakeTable.create(
-            spark, os.path.join(r, "t"), fields=list(BASE_FIELDS),
-            n_buckets=4,
-        )
-        lake.merge(_mk_batch(spark, keys[::2], 100), batch_id=0,
-                   lsn_hwm=200, batch_rows=len(keys[::2]))
-        lake.broadcast_max_rows = strategy_budget
-        lake.join_min_lake_ratio = 0  # pin the budget-only pick (see _run)
-        info = lake.merge(
-            _mk_batch(spark, keys, 300), batch_id=1, lsn_hwm=400,
-            batch_rows=len(keys), bucket_batch_rows=counts,
-        )
-        return lake, info
-
-    lake_m, info_m = _build(budget)
-    assert info_m["strategy"] == "mixed"
-    assert info_m["agg_buckets"] == sum(
-        1 for v in counts.values() if v > budget
-    )
-    assert info_m["chunks"] and info_m["chunks"] >= 1
-    lake_j, info_j = _build(10_000_000)
-    assert info_j["strategy"] == "join"
-    import pandas as pd
-
-    a = lake_m.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
-    b = lake_j.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-    # LWW invariant held through the mixed write
-    assert lake_m.read().count() == len(keys)

@@ -10,7 +10,6 @@ file pruning, and the resurrect-guard ordering in compact."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from cdc_spark.lake import LakeTable
@@ -154,21 +153,13 @@ def test_scan_for_keys_version_reads_pre_batch_state(
 def test_cow_strategies_rejected_on_mor_and_vice_versa(
     spark, tmpdir_factory_clean
 ):
+    """The table's merge_on_read flag alone picks append vs COW (merge
+    takes no strategy override); manifest-only commits (no batch) are
+    legal on both and report no strategy."""
     mor = _mk(spark, tmpdir_factory_clean("mor8"))
-    with pytest.raises(ValueError, match="merge-on-read"):
-        mor.merge(
-            _batch(spark, [(1, "a")], 1), batch_id=0, lsn_hwm=1,
-            strategy="join",
-        )
     cow = _mk(spark, tmpdir_factory_clean("mor9"), mor=False)
-    with pytest.raises(ValueError, match="merge-on-read"):
-        cow.merge(
-            _batch(spark, [(1, "a")], 1), batch_id=0, lsn_hwm=1,
-            strategy="append",
-        )
-    # manifest-only commits (no batch) stay legal on both
-    cow.merge(None, batch_id=0, lsn_hwm=1)
-    mor.merge(None, batch_id=0, lsn_hwm=1)
+    assert cow.merge(None, batch_id=0, lsn_hwm=1)["strategy"] is None
+    assert mor.merge(None, batch_id=0, lsn_hwm=1)["strategy"] is None
 
 
 def test_mor_resolve_spans_schema_epochs(spark, tmpdir_factory_clean):

@@ -55,16 +55,17 @@ def test_merge_strategy_batch_lake_ratio(spark, tmpdir_factory_clean):
     lake_j, info_j = build(keys[:10])
     assert info_j["strategy"] == "join"
     # the agg path's full-churn state equals a join-forced run of the same
-    # batches
+    # batches (ratio 0: no touched-lake size sends the batch to agg)
     r = tmpdir_factory_clean("ratio_forcejoin")
     lake_f = LakeTable.create(
         spark, os.path.join(r, "t"), fields=list(BASE_FIELDS), n_buckets=4
     )
+    lake_f.join_min_lake_ratio = 0
     lake_f.merge(_mk_batch(spark, keys, 100), batch_id=0, lsn_hwm=300,
                  batch_rows=len(keys))
     info_f = lake_f.merge(
         _mk_batch(spark, keys, 1000), batch_id=1, lsn_hwm=1300,
-        batch_rows=len(keys), strategy="join",
+        batch_rows=len(keys),
     )
     assert info_f["strategy"] == "join"
     a = lake_a.read().toPandas().sort_values(["repo", "path"]).reset_index(
