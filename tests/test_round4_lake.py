@@ -88,10 +88,9 @@ def _run(spark, root, broadcast_rows):
 
 
 def test_chunked_strategy_identical_and_selected(spark, tmpdir_factory_clean):
-    """Batches over the broadcast budget take 'agg' — whether their buckets
-    would bin-pack under the budget (the shape the deleted 'chunked'
-    strategy took) or a single bucket alone exceeds it — and produce the
-    same state as an all-'join' run and the oracle."""
+    """Batches over the broadcast budget whose buckets would bin-pack under
+    it (the shape the deleted 'chunked' strategy took) take 'agg' and
+    produce the same state as an all-'join' run and the oracle."""
     import pandas as pd
 
     r_join = tmpdir_factory_clean("jn")
@@ -99,17 +98,24 @@ def test_chunked_strategy_identical_and_selected(spark, tmpdir_factory_clean):
     assert {i["strategy"] for i in infos_j} == {"join"}
     pj = lake_j.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
     assert_matches(pj, replay(log.toPandas(), EngineConfig().base_fields))
-    # ~1000 rows/batch over 8 buckets (~125 each): budget 400 bin-packs,
-    # budget 20 is below a single bucket
-    for budget in (400, 20):
-        lake_a, _, infos = _run(
-            spark, tmpdir_factory_clean(f"agg{budget}"), broadcast_rows=budget
-        )
-        assert {i["strategy"] for i in infos} == {"agg"}
-        got = lake_a.read().toPandas().sort_values(["repo", "path"]).reset_index(
-            drop=True
-        )
-        pd.testing.assert_frame_equal(got, pj)
+    # ~1000 rows/batch over 8 buckets (~125 each): budget 400 bin-packs
+    lake_a, _, infos = _run(spark, tmpdir_factory_clean("agg"), broadcast_rows=400)
+    assert {i["strategy"] for i in infos} == {"agg"}
+    got = lake_a.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, pj)
+
+
+def test_chunked_falls_back_to_agg_when_one_bucket_too_big(
+    spark, tmpdir_factory_clean
+):
+    """A single bucket over the broadcast budget — auto-pick must land on
+    agg, result unchanged."""
+    root = tmpdir_factory_clean("ckagg")
+    lake_a, log, infos = _run(spark, root, broadcast_rows=20)
+    assert {i["strategy"] for i in infos} == {"agg"}
+    assert_matches(
+        lake_a.read().toPandas(), replay(log.toPandas(), EngineConfig().base_fields)
+    )
 
 
 # ------------------------------- the round-3 caveat: hot+cold in ONE batch
