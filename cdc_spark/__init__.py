@@ -9,7 +9,7 @@ SURVEY.md) re-expressed Spark-first:
 - ``parse``    — frame parser + wal2json payload decode as vectorized column
                  expressions (reference ``parse_message_with_headers``,
                  ``postgres_logical.py:37-80``).
-- ``dedup``    — salted last-writer-wins max-LSN reduce per (repo, path).
+- ``dedup``    — last-writer-wins max-LSN reduce per (repo, path).
 - ``lake``     — Iceberg-semantics lake table: parquet data files bucketed by
                  key hash + atomic JSON snapshot log, idempotent commits keyed
                  by (epoch, lsn high-watermark), lazy schema evolution,

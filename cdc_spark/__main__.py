@@ -54,7 +54,6 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--lake", default=None)
     c.add_argument("--checkpoint", default=None)
     c.add_argument("--buckets", type=int, default=64)
-    c.add_argument("--salt", type=int, default=1)
     c.add_argument("--max-files-per-trigger", type=int, default=None)
     c.add_argument("--framed", action="store_true", help="source is wire frames")
     c.add_argument("--continuous", action="store_true",
@@ -124,7 +123,6 @@ def main(argv: list[str] | None = None) -> int:
                     lake_root=args.lake,
                     checkpoint=args.checkpoint,
                     n_buckets=args.buckets,
-                    salt=args.salt,
                     max_files_per_trigger=args.max_files_per_trigger,
                 )
                 q, _ = start_stream(

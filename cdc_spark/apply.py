@@ -10,7 +10,8 @@ This is the consumer the reference leaves as ``NotImplementedError``
 2. DML rows are interpreted under the schema epoch their LSN falls in and
    projected into the batch-final schema (schema-evolution events replayed
    at the correct LSN, E3);
-3. salted LWW max-LSN reduce per (repo, path) (A2/A3);
+3. LWW max-LSN reduce per (repo, path), narrow or wide by key estimate
+   (A2/A3);
 4. copy-on-write merge into the lake with one idempotent commit per
    (batch, table), keyed by (epoch, lsn_hwm) (E1/E2);
 5. a per-bucket lineage row (applied LSN range, upsert/delete counts, commit
@@ -27,20 +28,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import BASE_FIELDS, DML_OPS, EngineConfig
-from .dedup import lww_dedup
+from .dedup import lww_dedup_auto
 from .lake import (
     LakeTable,
     _coalesce_ranges,
     bucket_expr,
     chain_for_column,
     fold_cast_expr,
+    replay_changes,
     sql_type,
 )
 from .parse import BASE_COLUMNS
 
 
 def _fold_bstats(raw: list) -> tuple[list, dict]:
-    """Fold the (bucket[, key-prefix block]) lineage rows to per-bucket
+    """Fold the (bucket, key-prefix block) lineage rows to per-bucket
     stats + the batch's per-bucket key INTERVAL lists (coalesced to the
     lake's MAX_KEY_RANGES). Driver-side arithmetic over the already tiny
     collect — no extra job. The intervals are what lets the merge skip a
@@ -82,16 +84,19 @@ def _fold_bstats(raw: list) -> tuple[list, dict]:
         bstats.append(d)
     return bstats, bucket_ranges
 
+
+#: key-prefix block width for the batch-side multi-interval range stats:
+#: the lineage job groups by (bucket, first key column's string-cast prefix
+#: of this length). The collect stays n_buckets x distinct prefixes present;
+#: intervals are coalesced to <= lake.MAX_KEY_RANGES per bucket, and the
+#: width only affects pruning precision, never correctness.
+KEY_BLOCK_PREFIX = 4
+
 METRICS_DDL = (
     "table STRING, batch_id BIGINT, bucket INT, min_lsn BIGINT, max_lsn BIGINT, "
     "upserts BIGINT, deletes BIGINT, lake_version BIGINT, skipped BOOLEAN, "
     "commit_latency_s DOUBLE"
 )
-
-
-# schema-evolution mechanics live beside the manifest logic; re-exported
-# here for the historical import path
-from .lake import evolve_fields, replay_changes  # noqa: E402,F401
 
 
 class CdcApply:
@@ -302,27 +307,12 @@ class CdcApply:
         for p in parts[1:]:
             projected = projected.unionByName(p)
 
-        # -- LWW dedup (A2) + merge (E1) under one persist
-        if self.cfg.dedup_narrow:
-            from .dedup import lww_dedup_auto
-
-            deduped, _strategy = lww_dedup_auto(
-                projected,
-                key=key,
-                order_col="_lsn",
-                salt=self.cfg.salt,
-                # the effective narrow budget is the smaller of "fits the
-                # broadcast" and "still profitable" (see config docstrings)
-                broadcast_max_rows=min(
-                    self.cfg.dedup_broadcast_max_rows,
-                    self.cfg.dedup_narrow_max_winners,
-                ),
-                estimated_winners=int(ctrl["n_keys_est"]),
-            )
-        else:
-            deduped = lww_dedup(
-                projected, key=key, order_col="_lsn", salt=self.cfg.salt
-            )
+        # -- LWW dedup (A2) + merge (E1) under one persist; narrow vs wide
+        # is picked from the control aggregation's HLL key estimate
+        deduped, _strategy = lww_dedup_auto(
+            projected, key=key, order_col="_lsn",
+            estimated_winners=int(ctrl["n_keys_est"]),
+        )
         deduped = deduped.persist()
         try:
             # ONE job yields the lineage stats, the affected-bucket list,
@@ -332,14 +322,12 @@ class CdcApply:
             # intervals instead of one folded range (round-3's caveat:
             # a folded range defeats the skip); collected rows stay
             # O(n_buckets x distinct prefix blocks), folded driver-side.
-            group_cols = [bucket_expr(lake.key, lake.n_buckets).alias("bucket")]
-            if self.cfg.key_block_prefix > 0:
-                group_cols.append(
-                    F.substring(
-                        F.col(key[0]).cast("string"), 1,
-                        self.cfg.key_block_prefix,
-                    ).alias("_blk")
-                )
+            group_cols = [
+                bucket_expr(lake.key, lake.n_buckets).alias("bucket"),
+                F.substring(
+                    F.col(key[0]).cast("string"), 1, KEY_BLOCK_PREFIX
+                ).alias("_blk"),
+            ]
             raw = (
                 deduped.groupBy(*group_cols)
                 .agg(

@@ -2,9 +2,11 @@
 
 The reference wires components from jsonschema-validated YAML through a
 registry (``cdc/utils/registry.py:9-14``, ``cdc/__main__.py:24-58``). Spark
-needs far less wiring: one dataclass covering source dir, lake path,
-checkpoint path, and the knobs that matter at scale (bucket count, salt,
-trigger pacing).
+needs far less wiring: one dataclass covering lake path, checkpoint path,
+and the knobs that matter at scale (bucket count, trigger pacing, lake
+maintenance). The YAML loader passes only the keys a document sets, so the
+defaults live in ``EngineConfig`` alone, and the schema rejects unknown
+``lake``/``apply`` keys.
 """
 
 from __future__ import annotations
@@ -56,50 +58,14 @@ class EngineConfig:
     n_buckets: key-hash buckets for the lake layout. Copy-on-write merges
         rewrite only affected buckets, so this bounds write amplification;
         size it so one bucket's data fits an executor (thousands at 100 TB).
-    salt: extra shuffle-salt fan-out for the LWW reduce. Catalyst's partial
-        aggregation already collapses hot keys map-side for max_by, so 1
-        (off) is the right default; raise for pathological single-key skew.
-    shuffle_partitions: per-merge shuffle width; ~cores locally, ~2-3x total
-        cores on a cluster.
+    shuffle_partitions: not read by the engine — the session's
+        ``spark.sql.shuffle.partitions`` decides every shuffle's width. The
+        bench drivers still pass it; not settable from YAML.
     """
 
     lake_root: str = "/tmp/cdc_lake"
     checkpoint: str = "/tmp/cdc_checkpoint"
     n_buckets: int = 16
-    salt: int = 1
-    #: narrow LWW dedup: shuffle only (key, lsn), recover wide payloads via
-    #: broadcast semi-join (+33% ingest at 0.5-1 KB payloads, measured).
-    #: Default ON — the target workload is source-code content, where
-    #: payload bytes dominate. Turn OFF for tiny payloads with mostly-unique
-    #: keys per batch. Batches whose winner set exceeds
-    #: ``dedup_broadcast_max_rows`` auto-fall back to the wide reduce.
-    dedup_narrow: bool = True
-    #: winner-set broadcast budget for the narrow dedup; above it the apply
-    #: falls back to the wide max_by reduce (same guard as the merge's
-    #: ``broadcast_max_rows``)
-    dedup_broadcast_max_rows: int = 5_000_000
-    #: winner-set size past which the narrow dedup stops paying even when
-    #: it still FITS the broadcast budget: its costs (building+shipping the
-    #: winner broadcast, a second source pass, the winner-row dropDuplicates
-    #: shuffle) all scale with the winner count, while its saving (wide
-    #: payload bytes kept out of the exchange) scales with the COLLAPSED
-    #: row count x payload width. Measured at 20M events / 2.8M winners /
-    #: ~0.1 KB payloads the wide one-shuffle max_by reduce beat narrow by
-    #: ~30%; at KB-scale payloads with few winners narrow wins (the round-3
-    #: measurement). Raise this for wide-payload workloads.
-    dedup_narrow_max_winners: int = 1_000_000
-    #: key-prefix block width for the batch-side multi-interval range
-    #: stats: the lineage job groups by (bucket, first key column's
-    #: string-cast prefix of this length) so a batch spanning hot AND cold
-    #: key clusters reports per-cluster intervals instead of one folded
-    #: range (which defeats file skipping — the round-3 BENCH caveat).
-    #: Cardinality bound of the driver-side collect: n_buckets x distinct
-    #: prefixes actually present — real keyspaces cluster, so this stays
-    #: small; intervals are then coalesced to <= lake.MAX_KEY_RANGES per
-    #: bucket, and the width only affects pruning PRECISION, never
-    #: correctness. 0 disables blocking (one folded interval per bucket,
-    #: the round-3 behavior).
-    key_block_prefix: int = 4
     #: Iceberg-style truncate-transform file partitioning: when > 0, lake
     #: data files are additionally split by this key prefix width, so hot
     #: and cold key clusters land in SEPARATE files with tight ranges and
@@ -168,27 +134,24 @@ CONFIG_SCHEMA = {
                 "root": {"type": "string"},
                 "checkpoint": {"type": "string"},
                 "buckets": {"type": "integer", "minimum": 1},
-                "salt": {"type": "integer", "minimum": 1},
-                "shuffle_partitions": {"type": "integer", "minimum": 1},
                 "max_files_per_trigger": {"type": ["integer", "null"]},
             },
             "required": ["root", "checkpoint"],
+            "additionalProperties": False,
         },
         "apply": {
             "type": "object",
             "properties": {
-                "dedup_narrow": {"type": "boolean"},
-                "dedup_broadcast_max_rows": {"type": "integer", "minimum": 1},
                 "compact_every": {"type": "integer", "minimum": 0},
                 "expire_keep": {"type": "integer", "minimum": 1},
                 "tombstone_lag": {"type": "integer", "minimum": 0},
-                "key_block_prefix": {"type": "integer", "minimum": 0},
                 "file_block_prefix": {"type": "integer", "minimum": 0},
                 "neardup_index": {"type": "boolean"},
                 "neardup_corpus_hint": {
                     "type": ["integer", "null"], "minimum": 1,
                 },
             },
+            "additionalProperties": False,
         },
         "sink": {"type": "object"},
     },
@@ -207,23 +170,8 @@ def load_config(path: str) -> tuple["EngineConfig", dict]:
     with open(path) as fh:
         doc = yaml.safe_load(fh)
     jsonschema.validate(doc, CONFIG_SCHEMA)
-    lake = doc["lake"]
-    ap = doc.get("apply", {})
-    cfg = EngineConfig(
-        lake_root=lake["root"],
-        checkpoint=lake["checkpoint"],
-        n_buckets=lake.get("buckets", 16),
-        salt=lake.get("salt", 1),
-        shuffle_partitions=lake.get("shuffle_partitions", 32),
-        max_files_per_trigger=lake.get("max_files_per_trigger"),
-        dedup_narrow=ap.get("dedup_narrow", True),
-        dedup_broadcast_max_rows=ap.get("dedup_broadcast_max_rows", 5_000_000),
-        compact_every=ap.get("compact_every", 0),
-        expire_keep=ap.get("expire_keep", 8),
-        tombstone_lag=ap.get("tombstone_lag", 1_000_000),
-        key_block_prefix=ap.get("key_block_prefix", 4),
-        file_block_prefix=ap.get("file_block_prefix", 0),
-        neardup_index=ap.get("neardup_index", False),
-        neardup_corpus_hint=ap.get("neardup_corpus_hint"),
-    )
+    # only the keys the document sets: the defaults live in EngineConfig
+    renames = {"root": "lake_root", "buckets": "n_buckets"}
+    knobs = {**doc["lake"], **doc.get("apply", {})}
+    cfg = EngineConfig(**{renames.get(k, k): v for k, v in knobs.items()})
     return cfg, doc

@@ -1,4 +1,4 @@
-"""Last-writer-wins dedup: salted two-phase max-LSN reduce per key.
+"""Last-writer-wins dedup: max-LSN reduce per key (wide or narrow).
 
 The engine-side aggregation the north rule demands (SURVEY.md §2.5 A2/A3).
 The reference guarantees strict per-event ordering via sequential ids
@@ -13,17 +13,28 @@ Physical notes for 100 TB:
   map task pre-collapses its rows per key before the shuffle, so a hot repo
   contributes at most one row per map partition to the exchange — the usual
   skew defusal for *aggregation*.
-- For pathological skew (one key dominating even post-partial reduce of wide
-  structs), ``salt > 1`` forces an explicit two-phase reduce: phase 1 groups
-  on (key, salt) spreading the hot key over ``salt`` reducers, phase 2
-  reduces the ≤salt survivors per key. Salt is derived from the LSN hash, so
-  replays land on the same salt — deterministic.
+- The apply pipeline runs ``lww_dedup_auto``: narrow (key, lsn)-only
+  shuffle while the batch's HLL key estimate fits ``NARROW_MAX_WINNERS``,
+  the wide ``max_by`` reduce above it. Both carry the partial aggregate
+  below their key exchange, so hot keys need no salt.
+- ``lww_dedup(salt > 1)`` is a result-identical two-phase variant kept for
+  the operator library: phase 1 groups on (key, salt) spreading a hot key
+  over ``salt`` reducers, phase 2 reduces the ≤salt survivors per key. Salt
+  is derived from the LSN hash, so replays land on the same salt.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: winner-set size past which ``lww_dedup_auto`` stops picking the narrow
+#: path: narrow's costs scale with the winner count, its saving (wide
+#: payload bytes kept out of the exchange) with the collapsed row count x
+#: payload width. Measured at 20M events / 2.8M winners / ~0.1 KB payloads
+#: the wide one-shuffle reduce beat narrow by ~30%; at KB-scale payloads
+#: with few winners narrow wins.
+NARROW_MAX_WINNERS = 1_000_000
 
 
 def lww_dedup(
@@ -66,8 +77,8 @@ def lww_dedup_narrow(
     (source-code content at 100 TB): shuffle volume drops from O(rows x
     row_width) to O(rows x key_width).
 
-    Falls back conceptually to ``lww_dedup`` when the winner set is too big
-    to broadcast — pick per call site.
+    ``lww_dedup_auto`` falls back to ``lww_dedup`` when the winner set is
+    too big to broadcast.
     """
     winners = df.select(*key, order_col).groupBy(*key).agg(
         F.max(order_col).alias(order_col)
@@ -84,17 +95,11 @@ def lww_dedup_auto(
     key: tuple[str, ...] = ("repo", "path"),
     order_col: str = "lsn",
     *,
-    salt: int = 1,
-    broadcast_max_rows: int = 5_000_000,
     estimated_winners: int,
 ) -> tuple[DataFrame, str]:
-    """Narrow LWW dedup with a broadcast-budget guard.
-
-    The narrow variant broadcasts the per-key winner set; a batch with more
-    distinct keys than fits executor memory would kill the job. The guard
-    compares the winner count against ``broadcast_max_rows`` and falls back
-    to the wide ``lww_dedup`` reduce when over budget — the same auto-pick
-    discipline as the merge's ``batch_rows`` strategy switch.
+    """Narrow LWW dedup while the winner estimate fits
+    ``NARROW_MAX_WINNERS``, else the wide ``lww_dedup`` reduce — the same
+    auto-pick discipline as the merge's ``batch_rows`` strategy switch.
 
     ``estimated_winners`` is a distinct-key estimate the caller already has
     (the apply pipeline folds an HLL ``approx_count_distinct`` into its
@@ -103,9 +108,9 @@ def lww_dedup_auto(
 
     Returns ``(deduped, strategy)`` where strategy is ``"narrow"`` or
     ``"wide"``."""
-    if estimated_winners <= broadcast_max_rows * 0.9:
+    if estimated_winners <= NARROW_MAX_WINNERS * 0.9:
         return lww_dedup_narrow(df, key=key, order_col=order_col), "narrow"
-    return lww_dedup(df, key=key, order_col=order_col, salt=salt), "wide"
+    return lww_dedup(df, key=key, order_col=order_col), "wide"
 
 
 def collapse_duplicate_lsns(df: DataFrame, order_col: str = "lsn") -> DataFrame:

@@ -117,7 +117,7 @@ def change_log(
     (``cdc/producer.py:84-94``) makes such duplicates a required input class.
 
     Zipf-like hot-repo skew: repo index = floor(n_repos * u^zipf) concentrates
-    mass near repo 0 for zipf > 1, exercising the salted dedup path.
+    mass near repo 0 for zipf > 1, exercising hot-key dedup.
     """
     schema_changes = schema_changes or {}
     control_lsns = set(truncate_lsns) | set(schema_changes)

@@ -18,7 +18,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .apply import CdcApply
 from .config import EngineConfig
-from .sources import FRAMED_DDL, build_source  # noqa: F401 (FRAMED_DDL re-export)
+from .sources import build_source
 
 
 def start_stream(

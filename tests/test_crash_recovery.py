@@ -44,7 +44,6 @@ def test_wide_payload_narrow_dedup_end_to_end(spark, tmpdir_factory_clean):
     root = tmpdir_factory_clean("wide")
     cfg = EngineConfig(
         lake_root=root, checkpoint=os.path.join(root, "c"), n_buckets=4,
-        dedup_narrow=True,
     )
     applier = CdcApply(spark, cfg)
     log = change_log(

@@ -1,5 +1,6 @@
 """LWW dedup correctness vs a brute-force pandas oracle on seeded random
-logs, across salt settings (SURVEY.md §5)."""
+logs, across salt settings (SURVEY.md §5), and the apply pipeline's
+hot-key plan shape."""
 
 import pandas as pd
 import pytest
@@ -140,3 +141,55 @@ def test_replay_changes_matches_oracle_skip_rule(pairs):
             if ch is not None:
                 w = _apply_oracle_rule(w, _json.dumps(ch), _KEY)
         assert fields == w
+
+
+def test_apply_wide_fallback_hot_key_partial_aggregates_before_exchange(
+    spark, tmpdir_factory_clean, monkeypatch
+):
+    """Hot-key skew needs no salt: with the winner budget forced low, the
+    apply pipeline's wide fallback on a zipf=8 log executes a partial
+    max_by aggregate BELOW its key exchange (each map task ships at most one
+    row per hot key), and the lake still matches the LSN oracle."""
+    import os
+
+    from cdc_spark import apply as apply_mod
+    from cdc_spark import dedup
+    from cdc_spark.apply import CdcApply
+    from cdc_spark.config import EngineConfig
+    from cdc_spark.oracle import assert_matches, replay
+
+    monkeypatch.setattr(dedup, "NARROW_MAX_WINNERS", 1)
+    picked = []
+
+    def spy(*a, **kw):
+        out = dedup.lww_dedup_auto(*a, **kw)
+        picked.append(out)
+        return out
+
+    monkeypatch.setattr(apply_mod, "lww_dedup_auto", spy)
+    root = tmpdir_factory_clean("hot")
+    cfg = EngineConfig(
+        lake_root=root, checkpoint=os.path.join(root, "c"), n_buckets=4
+    )
+    log = change_log(
+        spark, 4000, n_repos=3, n_paths=2, zipf=8.0, delete_rate=0.1,
+        dup_rate=0.05, seed=5,
+    )
+    applier = CdcApply(spark, cfg)
+    applier.apply_batch(log, 0)
+    assert_matches(
+        applier.lake_for("repos").read().toPandas(),
+        replay(log.toPandas(), cfg.base_fields),
+    )
+
+    [(deduped, strategy)] = picked
+    assert strategy == "wide"
+    deduped.collect()
+    plan = deduped._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    ex = next(
+        i for i, ln in enumerate(final)
+        if "Exchange hashpartitioning(repo" in ln
+    )
+    # the exchange's direct child is the map-side partial aggregate
+    assert "partial_max_by" in final[ex + 1], plan

@@ -166,7 +166,7 @@ def test_straddling_batch_still_skips_middle_files(spark, tmpdir_factory_clean):
 
 def test_end_to_end_straddling_batch_skips(spark, tmpdir_factory_clean):
     """Same caveat through the FULL apply path: _fold_bstats' prefix-block
-    intervals (cfg.key_block_prefix) must let the cold file survive a
+    intervals (apply.KEY_BLOCK_PREFIX) must let the cold file survive a
     hot+cold batch."""
     from cdc_spark.config import ENVELOPE_DDL
 

@@ -134,16 +134,22 @@ lake:
   root: {root}/lake
   checkpoint: {root}/ckpt
   buckets: 8
-  salt: 2
 apply:
-  dedup_narrow: false
   compact_every: 4
 """)
     cfg, doc = load_config(path)
     assert cfg.lake_root == f"{root}/lake"
-    assert cfg.n_buckets == 8 and cfg.salt == 2
-    assert cfg.dedup_narrow is False and cfg.compact_every == 4
+    assert cfg.n_buckets == 8 and cfg.compact_every == 4
     assert doc["source"]["backend"] == "file-segments"
+
+    # keys the schema does not list are rejected, not silently ignored
+    head = "version: 1\nsource: {backend: x}\n"
+    for body in (
+        "lake: {root: /x, checkpoint: /y, salt: 2}\n",
+        "lake: {root: /x, checkpoint: /y}\napply: {dedup_narrow: false}\n",
+    ):
+        with pytest.raises(jsonschema.ValidationError):
+            load_config(_write_yaml(root, head + body))
 
     bad = _write_yaml(root, "version: 1\nsource: {backend: x}\nlake: {root: /x}\n")
     with pytest.raises(jsonschema.ValidationError):
@@ -151,6 +157,76 @@ apply:
     bad2 = _write_yaml(root, "version: 2\nsource: {backend: x}\nlake: {root: /x, checkpoint: /y}\n")
     with pytest.raises(jsonschema.ValidationError):
         load_config(bad2)
+
+
+def test_load_config_rejects_unknown_lake_and_apply_keys(tmp_path):
+    """A misspelled lake/apply key raises instead of silently keeping the
+    default; keys left out fall back to EngineConfig's own defaults; the
+    source section stays open (backend configs pass through it)."""
+    head = "version: 1\nsource: {backend: x, slot_name: s}\n"
+    lake = "lake: {root: /x, checkpoint: /y}\n"
+    path = tmp_path / "cfg.yml"
+    for body in (
+        "lake: {root: /x, checkpoint: /y, bukets: 8}\n",
+        lake + "apply: {compact_evry: 4}\n",
+    ):
+        path.write_text(head + body)
+        with pytest.raises(jsonschema.ValidationError):
+            load_config(str(path))
+    path.write_text(head + lake)
+    cfg, doc = load_config(str(path))
+    assert cfg == EngineConfig(lake_root="/x", checkpoint="/y")
+    assert doc["source"]["slot_name"] == "s"
+
+
+#: EngineConfig fields no engine code reads, each with the reason it stays
+UNREAD_FIELDS = {
+    # the session's spark.sql.shuffle.partitions decides shuffle widths;
+    # the bench drivers (bench*.py, perfbench/) still pass the field
+    "shuffle_partitions",
+}
+
+
+def test_every_config_field_is_read_and_every_yaml_key_sets_one(tmp_path):
+    """Every EngineConfig field is read by the engine (as ``cfg.<name>``)
+    unless allow-listed, and every lake/apply YAML key sets exactly one
+    field that the engine reads."""
+    import dataclasses
+    import pathlib
+    import re
+
+    import cdc_spark
+    from cdc_spark.config import CONFIG_SCHEMA
+
+    src = "\n".join(
+        p.read_text()
+        for p in pathlib.Path(cdc_spark.__file__).parent.rglob("*.py")
+    )
+    fields = [f.name for f in dataclasses.fields(EngineConfig)]
+    read = {f for f in fields if re.search(rf"\bcfg\.{f}\b", src)}
+    assert set(fields) - read == UNREAD_FIELDS
+
+    base = {"version": 1, "source": {"backend": "x"},
+            "lake": {"root": "/r", "checkpoint": "/c"}}
+    path = tmp_path / "cfg.yml"
+    path.write_text(json.dumps(base))
+    cfg0, _ = load_config(str(path))
+    samples = {"integer": 7, "boolean": True, "string": "/s"}
+    for section in ("lake", "apply"):
+        props = CONFIG_SCHEMA["properties"][section]["properties"]
+        for key, spec in props.items():
+            types = spec["type"]
+            value = samples[types[0] if isinstance(types, list) else types]
+            doc = json.loads(json.dumps(base))
+            doc.setdefault(section, {})[key] = value
+            path.write_text(json.dumps(doc))
+            cfg, _ = load_config(str(path))
+            changed = [
+                f for f in fields if getattr(cfg, f) != getattr(cfg0, f)
+            ]
+            assert len(changed) == 1, (section, key, changed)
+            assert getattr(cfg, changed[0]) == value
+            assert changed[0] in read - UNREAD_FIELDS, (section, key)
 
 
 def test_cli_consumer_with_config_e2e(spark, tmpdir_factory_clean):
@@ -282,8 +358,8 @@ def test_stream_message_roundtrip_through_kafka_seam(spark):
 
 
 def test_yaml_round4_apply_knobs(tmp_path):
-    """Round-4 knobs are YAML-settable: batch/file key blocking + the
-    streaming near-dup index."""
+    """Round-4 knobs are YAML-settable: file key blocking + the streaming
+    near-dup index (the batch-side key blocking width is not)."""
     import yaml
 
     from cdc_spark.config import load_config
@@ -292,15 +368,19 @@ def test_yaml_round4_apply_knobs(tmp_path):
         "version": 1,
         "source": {"backend": "file-segments", "path": "/tmp/x"},
         "lake": {"root": "/tmp/l", "checkpoint": "/tmp/c"},
-        "apply": {"key_block_prefix": 6, "file_block_prefix": 4,
-                  "neardup_index": True},
+        "apply": {"file_block_prefix": 4, "neardup_index": True},
     }
     p = tmp_path / "cfg.yml"
     p.write_text(yaml.safe_dump(doc))
     cfg, _ = load_config(str(p))
-    assert cfg.key_block_prefix == 6
     assert cfg.file_block_prefix == 4
     assert cfg.neardup_index is True
+
+    # the batch-side key blocking width is not settable
+    doc["apply"]["key_block_prefix"] = 6
+    p.write_text(yaml.safe_dump(doc))
+    with pytest.raises(jsonschema.ValidationError):
+        load_config(str(p))
 
 
 def test_unknown_wire_format_raises(spark, tmp_path):

@@ -40,7 +40,6 @@ def test_torture_full_stack(spark, tmpdir_factory_clean):
         lake_root=os.path.join(root, "lake"),
         checkpoint=os.path.join(root, "ckpt"),
         n_buckets=16,
-        salt=4,
         max_files_per_trigger=3,
     )
     # crash after two microbatches, then resume from checkpoint
