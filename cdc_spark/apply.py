@@ -109,18 +109,14 @@ class CdcApply:
 
     def lake_for(self, table: str) -> LakeTable:
         if table not in self._lakes:
-            root = os.path.join(self.cfg.lake_root, table)
-            if LakeTable.exists(root):
-                self._lakes[table] = LakeTable(self.spark, root).refresh()
-            else:
-                self._lakes[table] = LakeTable.create(
-                    self.spark,
-                    root,
-                    fields=list(self.cfg.base_fields),
-                    key=self.cfg.key,
-                    n_buckets=self.cfg.n_buckets,
-                    table=table,
-                )
+            self._lakes[table] = LakeTable.open_or_create(
+                self.spark,
+                os.path.join(self.cfg.lake_root, table),
+                fields=list(self.cfg.base_fields),
+                key=self.cfg.key,
+                n_buckets=self.cfg.n_buckets,
+                table=table,
+            )
             # write-time layout knob (not persisted in the manifest: it can
             # change per run; readers only ever follow manifest paths)
             self._lakes[table].file_block_prefix = self.cfg.file_block_prefix
@@ -380,24 +376,19 @@ class CdcApply:
         of re-observed pairs, and normal lake maintenance."""
         lake = self._neardup_pairs.get(table)
         if lake is None:
-            root = os.path.join(self.cfg.lake_root, "_neardups", table)
-            if LakeTable.exists(root):
-                lake = LakeTable(self.spark, root).refresh()
-            else:
-                lake = LakeTable.create(
-                    self.spark,
-                    root,
-                    fields=[
-                        ("doc_a", "long"),
-                        ("doc_b", "long"),
-                        ("batch_id", "long"),
-                    ],
-                    key=("doc_a", "doc_b"),
-                    n_buckets=self.cfg.n_buckets,
-                    table=f"{table}_neardups",
-                    merge_on_read=True,
-                )
-            self._neardup_pairs[table] = lake
+            lake = self._neardup_pairs[table] = LakeTable.open_or_create(
+                self.spark,
+                os.path.join(self.cfg.lake_root, "_neardups", table),
+                fields=[
+                    ("doc_a", "long"),
+                    ("doc_b", "long"),
+                    ("batch_id", "long"),
+                ],
+                key=("doc_a", "doc_b"),
+                n_buckets=self.cfg.n_buckets,
+                table=f"{table}_neardups",
+                merge_on_read=True,
+            )
         return lake
 
     def neardups(self, table: str, live_only: bool = False) -> DataFrame:

@@ -37,6 +37,12 @@ from pyspark.sql import functions as F
 NARROW_MAX_WINNERS = 1_000_000
 
 
+def _col(name: str):
+    """``name`` as a literal column reference (dots and backquotes
+    escaped)."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 def lww_dedup(
     df: DataFrame,
     key: tuple[str, ...] = ("repo", "path"),
@@ -45,24 +51,23 @@ def lww_dedup(
 ) -> DataFrame:
     """Keep only the max-``order_col`` row per ``key``. Preserves all other
     columns. Equivalent to Window row_number()==1 but shuffle-light: no sort,
-    partial-aggregated map-side."""
+    partial-aggregated map-side. Column names are backquoted, so names
+    holding a dot (a quoted Postgres identifier, a schema-change ``add``)
+    resolve as plain columns, not struct fields."""
     payload = [c for c in df.columns if c not in key]
-    agg = F.max_by(F.struct(*payload), F.col(order_col)).alias("_s")
+    keys = [_col(k) for k in key]
+    order = _col(order_col)
+    agg = F.max_by(F.struct(*[_col(c) for c in payload]), order).alias("_s")
 
     if salt > 1:
-        salt_col = F.pmod(F.xxhash64(F.col(order_col)), F.lit(salt)).alias("_salt")
-        partial = (
+        salt_col = F.pmod(F.xxhash64(order), F.lit(salt)).alias("_salt")
+        df = (
             df.withColumn("_salt", salt_col)
-            .groupBy(*key, "_salt")
+            .groupBy(*keys, "_salt")
             .agg(agg)
-            .select(*key, F.col("_s.*"))
+            .select(*keys, F.col("_s.*"))
         )
-        df = partial
-    return (
-        df.groupBy(*key)
-        .agg(agg)
-        .select(*key, F.col("_s.*"))
-    )
+    return df.groupBy(*keys).agg(agg).select(*keys, F.col("_s.*"))
 
 
 def lww_dedup_narrow(

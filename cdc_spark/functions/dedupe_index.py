@@ -1,52 +1,64 @@
-"""Incremental MinHash near-dup index — band fingerprints persisted as
+"""Incremental LSH near-dup indexes — one shared core, two modalities.
+
+:class:`PostingsIndex` is the core: band fingerprints persisted as two
 merge-on-read :class:`~cdc_spark.lake.LakeTable` s, so each ingest batch
 signs ONLY its new/changed documents and candidate pairs come from a
-file-pruned point-set lookup against the stored index.
+file-pruned point-set lookup against the stored index. Nobody re-signs
+the whole corpus per batch, and nobody re-SCANS or re-WRITES the whole
+index per batch either. The two lakes:
 
-This is the shape a production 100 TB training-data pipeline actually
-runs: nobody re-shingles the whole corpus per batch — and (round 5) nobody
-re-SCANS or re-WRITES the whole index per batch either. Two lakes:
-
-- ``bands``    key ``(doc_id, band)`` -> bkey. The doc-major source of
-  truth: LWW band replacement on update, tombstoned deletes, the rebuild
-  anchor, and the table the tracking invariant compares against.
+- the doc-major lake (``self.lake``), keyed by doc: the source of truth
+  for LWW replacement on update, tombstoned deletes, and the rebuild
+  anchor. What it stores is the subclass's choice.
 - ``postings`` key ``(bkey, band, doc_id)``. The band-major secondary
-  index: the SAME rows re-keyed so the candidate lookup's probe column
-  (bkey) is the leading key, making footer-range file pruning effective.
-  Its deltas are derived from the batch plus a doc-id-pruned point lookup
-  on ``bands`` (old fingerprints to tombstone), never from an index scan.
+  index: keyed so the candidate lookup's probe column (bkey) is the
+  leading key, making footer-range file pruning effective. Its deltas are
+  derived from the batch plus a doc-id-pruned point lookup on the
+  doc-major lake (old fingerprints to tombstone), never from an index scan.
 
-Both lakes are merge-on-read (``LakeTable.create(merge_on_read=True)``):
-their keys are uniform hashes, so a copy-on-write merge could never skip a
-file and would rewrite the whole index every batch. MOR commits append
-O(batch) range-sharded deltas; reads LWW-resolve; normal lake maintenance
-compacts. Per-batch cost is therefore O(batch + files touched by the
-batch's keys) in reads, writes, AND shuffles — never O(index).
+Both lakes are merge-on-read: their keys are uniform hashes, so a
+copy-on-write merge could never skip a file and would rewrite the whole
+index every batch. MOR commits append O(batch) range-sharded deltas; reads
+LWW-resolve; normal lake maintenance compacts. Per-batch cost is therefore
+O(batch + files touched by the batch's keys) in reads, writes, AND
+shuffles — never O(index).
 
-Equivalence contract (oracled as ``minhash_incremental``): for insert-only
-batches whose band buckets stay under MAX_BAND_DOCS, the UNION of per-batch
-candidate pairs equals the one-shot full-recompute pairs on the final
-corpus — every pair's later doc finds the earlier doc's postings already in
-the index. Above the cap the two diverge by construction (the incremental
-run emitted pairs while the bucket was still small; the full recompute
-drops the bucket wholesale) — the cap is a degenerate-bucket guard, and an
-already-emitted candidate is not retractable from a streaming pipeline.
+The subclasses supply only the modality:
 
-Updates and deletes: a changed document's new bands REPLACE its old ones
-(LWW on (doc_id, band); the matching old postings are tombstoned), and a
-deleted document tombstones all its bands and postings, so neither stale
-fingerprints nor dead docs generate future pairs. A corpus TRUNCATE — the
-one change no per-row batch can express — has the
-:meth:`MinHashIndex.rebuild` path: one merge per lake carrying the new
-corpus' rows plus a truncate watermark that kills every older index row in
-O(1).
+- :class:`MinHashIndex` (text): the doc-major ``bands`` lake stores the
+  band fingerprints themselves, keyed ``(doc_id, band)`` — the old text is
+  gone once a batch passes, so its old bands must be stored.
+- :class:`~cdc_spark.functions.emb_index.EmbIndex` (vectors): the
+  doc-major ``vectors`` lake stores the embedding, keyed ``doc_id`` — a
+  vector re-signs exactly, and the cosine confirm step needs it anyway.
 
-Exactly-once pairs: :meth:`MinHashIndex.update` is deterministic given the
-post-merge index — it recomputes and RETURNS the batch's pairs on replays
-too (both lake commits are idempotent per batch_id), so a caller that
-persists pairs behind an idempotent commit (the apply path's ``_neardups``
-LakeTable) gets exactly-once with no crash window between the index commit
-and the pairs write.
+Equivalence contract (oracled as ``minhash_incremental`` and
+``emb_incremental``): for insert-only batches whose buckets stay under the
+index's occupancy cap, the UNION of per-batch candidate pairs equals the
+one-shot full-recompute pairs on the final corpus — every pair's later doc
+finds the earlier doc's postings already in the index. Above the cap the
+two diverge by construction (the incremental run emitted pairs while the
+bucket was still small; the full recompute drops the bucket wholesale) —
+the cap is a degenerate-bucket guard, and an already-emitted candidate is
+not retractable from a streaming pipeline.
+
+Updates and deletes: each batch is LWW-collapsed to one row per doc
+(:func:`collapse_batch`); a changed document's new bands REPLACE its old
+ones (the matching old postings are tombstoned), and a deleted document
+tombstones its doc-major rows and all its postings, so neither stale
+fingerprints nor dead docs generate future pairs. Rows and tombstones stamp
+with each row's own ``_lsn``, so a stale redelivery loses the LWW resolve
+in both lakes. A corpus TRUNCATE — the one change no per-row batch can
+express — has the :meth:`PostingsIndex.rebuild` path: one merge per lake
+carrying the new corpus' rows plus a truncate watermark that kills every
+older index row in O(1).
+
+Exactly-once pairs: :meth:`PostingsIndex.update` is deterministic given
+the post-merge index — it recomputes and RETURNS the batch's pairs on
+replays too (both lake commits are idempotent per batch_id), so a caller
+that persists pairs behind an idempotent commit (the apply path's
+``_neardups`` LakeTable) gets exactly-once with no crash window between
+the index commit and the pairs write.
 """
 
 from __future__ import annotations
@@ -79,142 +91,124 @@ POSTING_KEY = ("bkey", "band", "doc_id")
 PRUNE_MAX_KEYS = 200_000
 
 
-class MinHashIndex:
-    """Persistent band-fingerprint index over a document corpus.
+def collapse_batch(batch: DataFrame, default_lsn: int) -> DataFrame:
+    """LWW-collapse a change batch to ONE row per doc_id BEFORE indexing:
+    the max-``_lsn`` version wins, and at an exact LSN tie a tombstone
+    beats a live row (deterministic). Without the collapse, a batch that
+    folds a delete + re-insert of one doc stamps BOTH versions' index
+    rows, leaving the read-side LWW to tie-break a live row against a
+    tombstone at the same LSN — and the two lakes can resolve that tie
+    differently. Two DISTINCT live payloads at one (doc_id, _lsn) are a
+    caller contract violation (max_by picks one arbitrarily); identical
+    redeliveries collapse safely. Shared by both indexes and PqIndex."""
+    cols = batch.columns
+    lsn_col = (
+        F.coalesce(F.col("_lsn").cast("long"),
+                   F.lit(default_lsn).cast("long"))
+        if "_lsn" in cols
+        else F.lit(default_lsn).cast("long")
+    )
+    del_col = (
+        F.coalesce(F.col("_deleted"), F.lit(False))
+        if "_deleted" in cols
+        else F.lit(False)
+    )
+    s = batch.select(
+        "doc_id",
+        F.struct(*[F.col(c) for c in cols]).alias("_row"),
+        lsn_col.alias("_l"),
+        del_col.alias("_d"),
+    )
+    out = s.groupBy("doc_id").agg(
+        F.expr("max_by(_row, struct(_l, _d))").alias("_row")
+    )
+    return out.select(*[F.col(f"_row.{c}").alias(c) for c in cols])
 
-    The banding parameters are fixed at CREATION (persisted in
-    ``minhash_meta.json``): signatures must be comparable across batches,
-    so an index never re-sizes itself — resizing is a rebuild. With
-    ``k``/``n_bands`` unset, creation applies the corpus sizing rule
-    (:func:`~cdc_spark.functions.dedupe.minhash_autosize`) to
-    ``corpus_hint`` (the expected steady-state corpus size, e.g. the
-    bootstrap snapshot's row count), so a 50M-doc stream gets scale
-    banding by default instead of the fixture config; without a hint the
-    fixture banding applies. The chosen rule is recorded in the meta file.
+
+def lsn_map(batch: DataFrame, lsn: int) -> DataFrame:
+    """(doc_id, _row_lsn) of a collapsed batch: each row's own ``_lsn``,
+    or the batch ``lsn`` where the row (or the frame) carries none."""
+    row_lsn = F.lit(lsn).cast("long")
+    if "_lsn" in batch.columns:
+        row_lsn = F.coalesce(F.col("_lsn").cast("long"), row_lsn)
+    return batch.select("doc_id", row_lsn.alias("_row_lsn"))
+
+
+def stamp_rows(df: DataFrame, lsn_map: DataFrame, deleted: bool = False,
+               broadcast: bool = False) -> DataFrame:
+    """Attach the lake bookkeeping columns (per-row ``_lsn`` from the
+    batch's lsn_map, ``_deleted``, empty ``_extra``) — the one stamping
+    implementation shared by the incremental indexes."""
+    right = F.broadcast(lsn_map) if broadcast else lsn_map
+    j = df.join(right, ["doc_id"])
+    return j.select(
+        *[c for c in df.columns],
+        F.col("_row_lsn").alias("_lsn"),
+        F.lit(deleted).alias("_deleted"),
+        F.lit(None).cast("map<string,string>").alias("_extra"),
+    )
+
+
+class PostingsIndex:
+    """The shared incremental-index pipeline: the doc-major lake
+    (``self.lake``), the band-major ``postings`` lake (``self.post``), and
+    one :meth:`update` / :meth:`rebuild` path over both.
+
+    A subclass supplies the modality: :meth:`_sign` (live docs -> (doc_id,
+    band, bkey) rows), :meth:`_doc_rows` / :meth:`_doc_tombstones` (its
+    doc-major delta), :meth:`_old_bands` (stored doc-major rows -> their
+    bands), optionally :meth:`_confirm` (a filter over the candidate
+    pairs), plus the two class attributes below.
     """
+
+    #: a (band, bkey) bucket with more live postings than this emits no
+    #: pairs (the one-shot operator's degenerate-bucket cap)
+    OCC_CAP: int
+    #: ``last_update_stats`` key of the doc-major point lookup's scan stats
+    DOC_STATS_KEY: str
 
     def __init__(
         self,
         spark: SparkSession,
         root: str,
-        k: int | None = None,
-        n_bands: int | None = None,
-        n_buckets: int = 8,
-        corpus_hint: int | None = None,
+        doc_lake: str,
+        doc_fields: list,
+        doc_key: tuple,
+        table_prefix: str,
+        n_buckets: int,
     ):
+        # each lake guarded on its own: a crash between the two creates
+        # must not brick the root
         self.spark = spark
         self.root = root
-        self._meta_path = os.path.join(root, "minhash_meta.json")
-        bands_root = os.path.join(root, "bands")
-        post_root = os.path.join(root, "postings")
-        if LakeTable.exists(bands_root):
-            with open(self._meta_path) as fh:
-                stored = json.load(fh)
-            self.k, self.n_bands = stored["k"], stored["n_bands"]
-            self.lake = LakeTable(spark, bands_root).refresh()
-            self._ensure_mor(self.lake)
-        else:
-            if k is None or n_bands is None:
-                if corpus_hint:
-                    auto_k, auto_b, _ = minhash_autosize(corpus_hint)
-                else:
-                    auto_k, auto_b = K_MINHASH, BANDS
-                k = auto_k if k is None else k
-                n_bands = auto_b if n_bands is None else n_bands
-                rule = "autosize"
-            else:
-                rule = "explicit"
-            self.k, self.n_bands = k, n_bands
-            os.makedirs(root, exist_ok=True)
-            with open(self._meta_path, "w") as fh:
-                json.dump(
-                    {
-                        "k": k,
-                        "n_bands": n_bands,
-                        "rule": rule,
-                        "corpus_hint": corpus_hint,
-                    },
-                    fh,
-                )
-            self.lake = LakeTable.create(
-                spark,
-                bands_root,
-                fields=list(INDEX_FIELDS),
-                key=INDEX_KEY,
-                n_buckets=n_buckets,
-                table="minhash_bands",
-                merge_on_read=True,
-            )
-        if LakeTable.exists(post_root):
-            self.post = LakeTable(spark, post_root).refresh()
-            self._ensure_mor(self.post)
-        else:
-            self.post = LakeTable.create(
-                spark,
-                post_root,
-                fields=list(POSTING_FIELDS),
-                key=POSTING_KEY,
-                n_buckets=n_buckets,
-                table="minhash_postings",
-                merge_on_read=True,
-            )
-        last = self.lake.last_batch
-        if self.post.last_batch["id"] < 0 <= last["id"]:
-            # round-4 index upgraded in place: backfill the postings lake
-            # from the bands lake's live rows in one append commit stamped
-            # with the SAME batch key, so the two lakes' replay detection
-            # stays aligned. Gated on the postings COMMIT state, not the
-            # directory's existence — a crash between create() and this
-            # merge must retry the backfill on reopen, while a normal
-            # mid-stream crash window (postings one batch behind) must NOT
-            # backfill (its replay applies the missing delta, tombstones
-            # included).
-            from ..lake import ConcurrentCommitError
-
-            try:
-                self.post.merge(
-                    self.lake.read(include_meta=True).select(
-                        "bkey", "band", "doc_id", "_lsn", "_deleted",
-                        "_extra",
-                    ),
-                    batch_id=last["id"],
-                    lsn_hwm=last["lsn_hwm"],
-                )
-            except ConcurrentCommitError:
-                pass  # a concurrent opener committed the same backfill
-            self.post.refresh()
+        self.lake = LakeTable.open_or_create(
+            spark,
+            os.path.join(root, doc_lake),
+            fields=list(doc_fields),
+            key=doc_key,
+            n_buckets=n_buckets,
+            table=f"{table_prefix}_{doc_lake}",
+            merge_on_read=True,
+        )
+        self.post = LakeTable.open_or_create(
+            spark,
+            os.path.join(root, "postings"),
+            fields=list(POSTING_FIELDS),
+            key=POSTING_KEY,
+            n_buckets=n_buckets,
+            table=f"{table_prefix}_postings",
+            merge_on_read=True,
+        )
         self.last_update_stats: dict = {}
 
-    @staticmethod
-    def _ensure_mor(lake: LakeTable) -> None:
-        """Upgrade a round-4 (copy-on-write) index lake in place: its files
-        already hold one row per key, so flipping merge_on_read on is a
-        pure metadata commit (resolve over one-row-per-key is identity)."""
-        if lake.meta.get("merge_on_read"):
-            return
-        from ..lake import ConcurrentCommitError
-
-        meta = dict(lake.meta)
-        meta.update(
-            merge_on_read=True,
-            version=lake.version + 1,
-            parent=lake.version,
-        )
-        try:
-            lake._publish(lake.root, meta)
-        except ConcurrentCommitError:
-            pass  # another opener published the upgrade first
-        lake.refresh()
+    def _confirm(self, cand: DataFrame) -> DataFrame:
+        return cand
 
     def maintenance_lakes(self) -> list[LakeTable]:
         """Every lake this index owns — what periodic maintenance must
         compact and expire (compaction folds the merge-on-read deltas, so
         it is also what keeps per-batch read costs flat)."""
         return [self.lake, self.post]
-
-    def bands(self) -> DataFrame:
-        """The live index, doc-major: (doc_id, band, bkey)."""
-        return self.lake.read()
 
     def postings(self) -> DataFrame:
         """The live index, band-major: (bkey, band, doc_id)."""
@@ -250,42 +244,43 @@ class MinHashIndex:
         """Apply one batch of corpus changes and return its candidate
         pairs.
 
-        ``docs`` carries (doc_id, text[, _deleted]) for the NEW / CHANGED
-        / DELETED documents only — every job below is O(batch + files
-        containing batch keys), never O(index). Steps:
+        ``docs`` carries (doc_id, <payload>[, _deleted][, _lsn]) for the
+        NEW / CHANGED / DELETED documents only — every job below is
+        O(batch + files containing batch keys), never O(index). Steps:
 
-        1. band-fingerprint the non-deleted docs (``minhash_bands``) —
-           the only shingle explode, over exactly this frame;
-        2. point-look-up the batch docs' OLD fingerprints in the bands
-           lake (doc-id-pruned ``scan_for_keys``; on a replay, at the
-           retained pre-batch version) — these become postings tombstones
+        1. LWW-collapse the batch to one row per doc, then sign the live
+           docs — the only signing pass, over exactly this frame;
+        2. point-look-up the batch docs' OLD rows in the doc-major lake
+           (doc-id-pruned ``scan_for_keys``; on a replay, at the retained
+           pre-batch version) — their bands become postings tombstones
            for replaced/deleted bands;
-        3. append-commit the doc-major delta (new bands + per-band
-           tombstones for deleted docs), then the band-major delta
-           (new postings + old-posting tombstones) — both idempotent per
-           batch_id;
+        3. append-commit the doc-major delta (new rows + tombstones for
+           deleted docs), then the band-major delta (new postings +
+           old-posting tombstones) — both idempotent per batch_id;
         4. candidate pairs = the batch's bands against the post-merge
            live postings, read via bkey-pruned ``scan_for_keys`` and
            joined broadcast-side — new x old AND new x new in one join —
-           with the MAX_BAND_DOCS occupancy cap evaluated against the
+           with the ``OCC_CAP`` occupancy cap evaluated against the
            touched buckets' CURRENT live occupancy (a map-side-combined
            count over the same pruned read plus a semi-join — never an
            index-wide groupBy, and never a per-bucket window that would
-           funnel a degenerate bucket through one task).
+           funnel a degenerate bucket through one task); then the
+           subclass's confirm step.
 
-        Returns (doc_a, doc_b) with doc_a < doc_b, distinct. The result is
-        deterministic given the post-merge index, and both commits are
-        idempotent, so REPLAYS return the same pairs instead of None —
-        callers persist them behind their own idempotent commit and the
-        crash window between index commit and pairs write disappears.
+        Returns (doc_a, doc_b[, ...]) with doc_a < doc_b, distinct. The
+        result is deterministic given the post-merge index, and both
+        commits are idempotent, so REPLAYS return the same pairs instead
+        of None — callers persist them behind their own idempotent commit
+        and the crash window between index commit and pairs write
+        disappears.
 
         Out-of-order robustness: when ``docs`` carries a per-row ``_lsn``
         (the apply path passes the deduped batch's row LSNs), index rows
         and tombstones are stamped with IT, not the batch watermark — so a
         stale redelivery that wins its own (later) batch still LOSES the
-        index's LWW resolve against the newer stored fingerprint, exactly
-        as the stale row loses the lake's row-level LWW merge. Without the
-        column every row stamps at ``lsn`` (insert-only callers).
+        index's LWW resolve against the newer stored row, exactly as the
+        stale row loses the lake's row-level LWW merge. Without the column
+        every row stamps at ``lsn`` (insert-only callers).
         """
         return self._apply(docs, lsn, batch_id)
 
@@ -297,25 +292,14 @@ class MinHashIndex:
         new_truncate_lsn: int | None = None,
         emit_pairs: bool = True,
     ) -> DataFrame | None:
+        docs = collapse_batch(docs, lsn)
         has_del = "_deleted" in docs.columns
         live = docs.filter(~F.col("_deleted")) if has_del else docs
-        if "_lsn" in docs.columns:
-            lsn_map = docs.select(
-                "doc_id",
-                F.coalesce(
-                    F.col("_lsn").cast("long"), F.lit(lsn).cast("long")
-                ).alias("_row_lsn"),
-            ).distinct()
-        else:
-            lsn_map = docs.select("doc_id").distinct().withColumn(
-                "_row_lsn", F.lit(lsn).cast("long")
-            )
+        lsns = lsn_map(docs, lsn)
         # lineage-free snapshot of this batch's fingerprints: consumed by
-        # both lake deltas AND the pair join (without it the shingle
-        # explode would run once per consumer)
-        new_bands = minhash_bands(
-            live.select("doc_id", "text"), self.k, self.n_bands
-        ).localCheckpoint(eager=False)
+        # both lake deltas AND the pair join (without it the signing
+        # would run once per consumer)
+        new_bands = self._sign(live).localCheckpoint(eager=False)
 
         # driver-side probe sets for file pruning (BOTH collects capped at
         # PRUNE_MAX_KEYS — a bootstrap-sized batch, or a bulk purge, reads
@@ -329,7 +313,6 @@ class MinHashIndex:
             drows = (
                 docs.filter(F.col("_deleted"))
                 .select("doc_id")
-                .distinct()
                 .head(PRUNE_MAX_KEYS + 1)
             )
             has_dead = bool(drows)
@@ -344,13 +327,16 @@ class MinHashIndex:
         )
         bkeys = sorted({r["bkey"] for r in probe}) if pruned else None
 
-        def _j(left, right, on, right_small=True, how="inner"):
+        def _j(left, right, on, how="inner"):
             # broadcast only when the batch side is provably small
-            if pruned and right_small:
+            if pruned:
                 right = F.broadcast(right)
             return left.join(right, on, how)
 
-        # 2. old fingerprints of the batch's docs (pre-batch state)
+        def _stamped(df, deleted=False):
+            return stamp_rows(df, lsns, deleted=deleted, broadcast=pruned)
+
+        # 2. old rows of the batch's docs (pre-batch state)
         try:
             v_before = self._version_before(self.lake, batch_id)
         except RuntimeError:
@@ -372,58 +358,41 @@ class MinHashIndex:
             if v_before is None
             else self.lake._load_version(v_before)["truncate_lsn"]
         )
-        ids_df = lsn_map.select("doc_id")  # already distinct per doc
         old_raw = self.lake.scan_for_keys(doc_ids, version=v_before)
         old_live = self.lake.resolve_live(
-            _j(old_raw, ids_df, ["doc_id"]), truncate_lsn=truncate_before
-        ).select("doc_id", "band", "bkey", "_lsn")
+            _j(old_raw, lsns.select("doc_id"), ["doc_id"]),
+            truncate_lsn=truncate_before,
+        )
         doc_stats = dict(self.lake.last_scan_stats)
         # postings to tombstone: every old (doc, band) fingerprint the
         # batch does not re-assert identically (replaced OR deleted).
         # Tombstones stamp with the replacing row's lsn, so a STALE
         # replacement's tombstones lose the LWW resolve and the stored
         # newer posting survives.
-        repl = old_live.select("doc_id", "band", "bkey").join(
-            new_bands.select("doc_id", "band", "bkey"),
-            ["doc_id", "band", "bkey"],
-            "left_anti",
+        repl = (
+            self._old_bands(old_live)
+            .select("doc_id", "band", "bkey")
+            .join(
+                new_bands.select("doc_id", "band", "bkey"),
+                ["doc_id", "band", "bkey"],
+                "left_anti",
+            )
         )
-        # stored per-(doc, band) LSN: a batch row older than it is a stale
-        # redelivery — its POSTINGS must not go live (their (bkey, band,
-        # doc) keys never collide with the stored newer posting, so unlike
-        # the doc-major lake the postings LWW cannot hide them)
-        old_kv = old_live.select(
-            "doc_id", "band", F.col("_lsn").alias("_old_lsn")
-        )
+        # stored per-row LSN, on the doc-major lake's own key: a batch row
+        # older than it is a stale redelivery — its POSTINGS must not go
+        # live (their (bkey, band, doc) keys never collide with the stored
+        # newer posting, so unlike the doc-major lake the postings LWW
+        # cannot hide them)
+        doc_key = list(self.lake.key)
+        old_kv = old_live.select(*doc_key, F.col("_lsn").alias("_old_lsn"))
 
         # 3a. doc-major delta, stamped with each row's OWN lsn
-        def _stamped(df, deleted=False):
-            stamped = _j(df, lsn_map, ["doc_id"])
-            return stamped.select(
-                *[c for c in df.columns],
-                F.col("_row_lsn").alias("_lsn"),
-                F.lit(deleted).alias("_deleted"),
-                F.lit(None).cast("map<string,string>").alias("_extra"),
-            )
-
-        dbatch = _stamped(new_bands.select("doc_id", "band", "bkey"))
+        dbatch = _stamped(self._doc_rows(live, new_bands))
         if has_dead:
-            dead = _stamped(
-                docs.filter(F.col("_deleted"))
-                .select("doc_id")
-                .crossJoin(
-                    self.spark.range(self.n_bands).select(
-                        F.col("id").cast("int").alias("band")
-                    )
-                )
-                .select(
-                    "doc_id",
-                    "band",
-                    F.lit(None).cast("string").alias("bkey"),
-                ),
-                deleted=True,
+            dead = docs.filter(F.col("_deleted")).select("doc_id")
+            dbatch = dbatch.unionByName(
+                _stamped(self._doc_tombstones(dead), deleted=True)
             )
-            dbatch = dbatch.unionByName(dead)
         self.lake.merge(
             dbatch, batch_id=batch_id, lsn_hwm=lsn,
             new_truncate_lsn=new_truncate_lsn,
@@ -431,15 +400,12 @@ class MinHashIndex:
         self.lake.refresh()
 
         # 3b. band-major delta (old-posting tombstones carry the OLD bkey,
-        # so they land in — and later prune with — the right key range;
-        # they stamp with the REPLACING row's lsn, so a stale redelivery's
-        # tombstones lose against the stored newer posting just like its
-        # upserts do)
+        # so they land in — and later prune with — the right key range)
         up = (
             _j(
                 _stamped(new_bands.select("bkey", "band", "doc_id")),
                 old_kv,
-                ["doc_id", "band"],
+                doc_key,
                 how="left",
             )
             .filter(
@@ -465,7 +431,7 @@ class MinHashIndex:
         matched = self.post.resolve_live(_j(raw, keys, ["band", "bkey"]))
         self.last_update_stats = {
             "pruned": pruned,
-            "doc_lookup": doc_stats,
+            self.DOC_STATS_KEY: doc_stats,
             "postings_lookup": dict(self.post.last_scan_stats),
         }
         # occupancy cap over the touched buckets only: the join above kept
@@ -480,13 +446,13 @@ class MinHashIndex:
         occ_ok = (
             matched.groupBy("band", "bkey")
             .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= MAX_BAND_DOCS)
+            .filter(F.col("_n") <= self.OCC_CAP)
             .select("band", "bkey")
         )
         matched_ok = _j(matched, occ_ok, ["band", "bkey"]).select(
             "band", "bkey", "doc_id"
         )
-        return (
+        cand = (
             _j(
                 matched_ok,
                 new_bands.select(
@@ -501,6 +467,7 @@ class MinHashIndex:
             )
             .distinct()
         )
+        return self._confirm(cand)
 
     def rebuild(
         self,
@@ -530,6 +497,140 @@ class MinHashIndex:
         self._apply(
             docs, lsn, batch_id, new_truncate_lsn=t, emit_pairs=False
         )
+
+
+class MinHashIndex(PostingsIndex):
+    """Persistent band-fingerprint index over a document corpus.
+
+    The banding parameters are fixed at CREATION (persisted in
+    ``minhash_meta.json``): signatures must be comparable across batches,
+    so an index never re-sizes itself — resizing is a rebuild. With
+    ``k``/``n_bands`` unset, creation applies the corpus sizing rule
+    (:func:`~cdc_spark.functions.dedupe.minhash_autosize`) to
+    ``corpus_hint`` (the expected steady-state corpus size, e.g. the
+    bootstrap snapshot's row count), so a 50M-doc stream gets scale
+    banding by default instead of the fixture config; without a hint the
+    fixture banding applies. The chosen rule is recorded in the meta file.
+
+    ``update`` takes (doc_id, text[, _deleted][, _lsn]) and returns
+    (doc_a, doc_b) candidate pairs.
+    """
+
+    OCC_CAP = MAX_BAND_DOCS
+    DOC_STATS_KEY = "doc_lookup"
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        k: int | None = None,
+        n_bands: int | None = None,
+        n_buckets: int = 8,
+        corpus_hint: int | None = None,
+    ):
+        self._meta_path = os.path.join(root, "minhash_meta.json")
+        if LakeTable.exists(os.path.join(root, "bands")):
+            with open(self._meta_path) as fh:
+                stored = json.load(fh)
+            self.k, self.n_bands = stored["k"], stored["n_bands"]
+        else:
+            if k is None or n_bands is None:
+                if corpus_hint:
+                    auto_k, auto_b, _ = minhash_autosize(corpus_hint)
+                else:
+                    auto_k, auto_b = K_MINHASH, BANDS
+                k = auto_k if k is None else k
+                n_bands = auto_b if n_bands is None else n_bands
+                rule = "autosize"
+            else:
+                rule = "explicit"
+            self.k, self.n_bands = k, n_bands
+            os.makedirs(root, exist_ok=True)
+            with open(self._meta_path, "w") as fh:
+                json.dump(
+                    {
+                        "k": k,
+                        "n_bands": n_bands,
+                        "rule": rule,
+                        "corpus_hint": corpus_hint,
+                    },
+                    fh,
+                )
+        super().__init__(
+            spark, root, "bands", INDEX_FIELDS, INDEX_KEY, "minhash",
+            n_buckets,
+        )
+        self._ensure_mor(self.lake)
+        self._ensure_mor(self.post)
+        last = self.lake.last_batch
+        if self.post.last_batch["id"] < 0 <= last["id"]:
+            # round-4 index upgraded in place: backfill the postings lake
+            # from the bands lake's live rows in one append commit stamped
+            # with the SAME batch key, so the two lakes' replay detection
+            # stays aligned. Gated on the postings COMMIT state, not the
+            # directory's existence — a crash between create() and this
+            # merge must retry the backfill on reopen, while a normal
+            # mid-stream crash window (postings one batch behind) must NOT
+            # backfill (its replay applies the missing delta, tombstones
+            # included).
+            from ..lake import ConcurrentCommitError
+
+            try:
+                self.post.merge(
+                    self.lake.read(include_meta=True).select(
+                        "bkey", "band", "doc_id", "_lsn", "_deleted",
+                        "_extra",
+                    ),
+                    batch_id=last["id"],
+                    lsn_hwm=last["lsn_hwm"],
+                )
+            except ConcurrentCommitError:
+                pass  # a concurrent opener committed the same backfill
+            self.post.refresh()
+
+    @staticmethod
+    def _ensure_mor(lake: LakeTable) -> None:
+        """Upgrade a round-4 (copy-on-write) index lake in place: its files
+        already hold one row per key, so flipping merge_on_read on is a
+        pure metadata commit (resolve over one-row-per-key is identity)."""
+        if lake.meta.get("merge_on_read"):
+            return
+        from ..lake import ConcurrentCommitError
+
+        meta = dict(lake.meta)
+        meta.update(
+            merge_on_read=True,
+            version=lake.version + 1,
+            parent=lake.version,
+        )
+        try:
+            lake._publish(lake.root, meta)
+        except ConcurrentCommitError:
+            pass  # another opener published the upgrade first
+        lake.refresh()
+
+    def bands(self) -> DataFrame:
+        """The live index, doc-major: (doc_id, band, bkey)."""
+        return self.lake.read()
+
+    def _sign(self, live: DataFrame) -> DataFrame:
+        return minhash_bands(
+            live.select("doc_id", "text"), self.k, self.n_bands
+        )
+
+    def _doc_rows(self, live: DataFrame, new_bands: DataFrame) -> DataFrame:
+        return new_bands.select("doc_id", "band", "bkey")
+
+    def _doc_tombstones(self, dead: DataFrame) -> DataFrame:
+        # a deleted doc tombstones every band key it could hold
+        return dead.crossJoin(
+            self.spark.range(self.n_bands).select(
+                F.col("id").cast("int").alias("band")
+            )
+        ).select("doc_id", "band", F.lit(None).cast("string").alias("bkey"))
+
+    def _old_bands(self, old_live: DataFrame) -> DataFrame:
+        return old_live  # the bands lake stores the fingerprints
 
 
 def q_minhash_incremental(spark, sf_dir):

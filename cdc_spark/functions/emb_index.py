@@ -1,41 +1,25 @@
-"""Incremental embedding near-dup index — the vector-modality counterpart
-of :mod:`.dedupe_index`: sign-projection LSH postings persisted as
-merge-on-read :class:`~cdc_spark.lake.LakeTable` s so each batch of
+"""Incremental embedding near-dup index — the vector-modality subclass of
+:class:`~cdc_spark.functions.dedupe_index.PostingsIndex`: sign-projection
+LSH postings persisted as merge-on-read lakes, so each batch of
 new/changed vectors probes a file-pruned point-set lookup instead of
-re-bucketing the whole corpus.
+re-bucketing the whole corpus. The update/replay/tombstone/candidate
+pipeline is the shared core's; this module supplies the modality:
 
-Two lakes (mirroring the MinHash index's doc-major/band-major split, with
-one structural difference):
-
-- ``vectors``  key ``doc_id`` -> embedding. The doc-major source of truth.
-  Where the MinHash index must store *band fingerprints* doc-major (the
-  old text is gone once the batch passes), a vector IS re-signable: the
-  stored embedding regenerates its band keys exactly, so the doc-major
-  lake stores the vector itself — which the candidate stage needs anyway
-  for exact-cosine confirmation. One lake serves both roles.
-- ``postings`` key ``(bkey, band, doc_id)``. Band-major sign-bucket
-  postings; ``bkey`` is the bucket zero-padded to fixed width so the
-  lake's lexicographic footer intervals prune numerically.
-
-Per batch: sign ONLY the batch's vectors (``EMB_BANDS`` × ``bits`` literal
-±1 dot products, pure codegen — no Python), point-look-up the batch docs'
-OLD vectors (doc-id-pruned) to derive replaced-posting tombstones, commit
-both O(batch) MOR deltas, then candidates = batch band keys against the
-bkey-pruned post-merge postings with the same map-side occupancy cap as
-the one-shot operator, confirmed by exact cosine against the post-merge
-vectors lake. Per-batch cost is O(batch + files touched), never O(index)
-— the same scale contract :mod:`.dedupe_index` carries, verified by the
-same kind of ``last_update_stats`` pruning assertions.
+- ``vectors``  key ``doc_id`` -> embedding. The doc-major lake stores the
+  vector itself: it regenerates its band keys exactly (the superseded
+  postings of a replaced or deleted vector), and the candidate stage needs
+  it anyway for exact-cosine confirmation.
+- signing: ``EMB_BANDS`` × ``bits`` literal ±1 dot products, pure codegen
+  — no Python; ``bkey`` is the bucket zero-padded to fixed width so the
+  postings lake's lexicographic footer intervals prune numerically.
+- confirm: candidates are kept iff their exact cosine, read from the
+  post-merge vectors lake, reaches ``NEARDUP_COSINE``.
 
 Equivalence contract (oracled as ``emb_incremental``): for insert-only
 batches whose buckets stay under ``MAX_BUCKET_DOCS``, the union of
 per-batch confirmed pairs equals the one-shot
 ``embedding_neardup_pairs`` on the final corpus (identical banding, cap,
-cosine threshold, and rounding). Updates/deletes: LWW vector replacement
-tombstones the superseded postings (stamped with the replacing row's LSN,
-so stale redeliveries lose, exactly as in the MinHash index); deletes
-tombstone the vector and all its postings. TRUNCATE recovery via
-:meth:`EmbIndex.rebuild` (truncate-watermark commit, same as MinHash).
+cosine threshold, and rounding).
 
 The index is driven by any (doc_id, embedding) change feed. It is NOT
 wired into the CDC apply path: the replication stream carries no vector
@@ -52,8 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..lake import LakeTable
-from .dedupe_index import PRUNE_MAX_KEYS, MinHashIndex
+from .dedupe_index import PRUNE_MAX_KEYS, PostingsIndex
 from .similarity import (
     EMB_BANDS,
     EMB_BAND_BITS,
@@ -67,8 +50,6 @@ from .similarity import (
 
 VEC_FIELDS = [("doc_id", "long"), ("embedding", "array<double>")]
 VEC_KEY = ("doc_id",)
-POST_FIELDS = [("bkey", "string"), ("band", "int"), ("doc_id", "long")]
-POST_KEY = ("bkey", "band", "doc_id")
 
 #: bkey zero-pad width: buckets are < 2^24 (bits clamped to 24), so 8
 #: digits keep lexicographic order == numeric order for file pruning
@@ -100,57 +81,7 @@ def emb_bands(
     return out
 
 
-def collapse_batch(vecs: DataFrame, default_lsn: int) -> DataFrame:
-    """LWW-collapse a change batch to ONE row per doc_id BEFORE indexing:
-    the max-``_lsn`` version wins, and at an exact LSN tie a tombstone
-    beats a live row (deterministic). Without the collapse, a batch that
-    folds a delete + re-insert of one doc stamps BOTH versions' index
-    rows, leaving the read-side LWW to tie-break a code row against a
-    tombstone at the same LSN — and the encoder would blend both
-    embedding versions into chimera fingerprints. Two DISTINCT live
-    payloads at one (doc_id, _lsn) are a caller contract violation
-    (max_by picks one arbitrarily); identical redeliveries collapse
-    safely. Shared by EmbIndex and PqIndex."""
-    cols = vecs.columns
-    lsn_col = (
-        F.coalesce(F.col("_lsn").cast("long"),
-                   F.lit(default_lsn).cast("long"))
-        if "_lsn" in cols
-        else F.lit(default_lsn).cast("long")
-    )
-    del_col = (
-        F.coalesce(F.col("_deleted"), F.lit(False))
-        if "_deleted" in cols
-        else F.lit(False)
-    )
-    s = vecs.select(
-        "doc_id",
-        F.struct(*[F.col(c) for c in cols]).alias("_row"),
-        lsn_col.alias("_l"),
-        del_col.alias("_d"),
-    )
-    out = s.groupBy("doc_id").agg(
-        F.expr("max_by(_row, struct(_l, _d))").alias("_row")
-    )
-    return out.select(*[F.col(f"_row.{c}").alias(c) for c in cols])
-
-
-def stamp_rows(df: DataFrame, lsn_map: DataFrame, deleted: bool = False,
-               broadcast: bool = False) -> DataFrame:
-    """Attach the lake bookkeeping columns (per-row ``_lsn`` from the
-    batch's lsn_map, ``_deleted``, empty ``_extra``) — the one stamping
-    implementation shared by the incremental indexes."""
-    right = F.broadcast(lsn_map) if broadcast else lsn_map
-    j = df.join(right, ["doc_id"])
-    return j.select(
-        *[c for c in df.columns],
-        F.col("_row_lsn").alias("_lsn"),
-        F.lit(deleted).alias("_deleted"),
-        F.lit(None).cast("map<string,string>").alias("_extra"),
-    )
-
-
-class EmbIndex:
+class EmbIndex(PostingsIndex):
     """Persistent sign-bucket LSH index over an embedding corpus.
 
     Banding parameters are fixed at CREATION (persisted in
@@ -158,7 +89,13 @@ class EmbIndex:
     so resizing is a rebuild. With ``bits`` unset, creation applies the
     corpus rule (:func:`~cdc_spark.functions.similarity.emb_autosize_bits`)
     to ``corpus_hint``; without a hint the fixture width applies.
+
+    ``update`` takes (doc_id, embedding[, _deleted][, _lsn]) and returns
+    confirmed near-dup pairs ``(doc_a, doc_b, cosine)``.
     """
+
+    OCC_CAP = MAX_BUCKET_DOCS
+    DOC_STATS_KEY = "vector_lookup"
 
     def __init__(
         self,
@@ -170,11 +107,7 @@ class EmbIndex:
         n_buckets: int = 8,
         corpus_hint: int | None = None,
     ):
-        self.spark = spark
-        self.root = root
         self._meta_path = os.path.join(root, "emb_meta.json")
-        vec_root = os.path.join(root, "vectors")
-        post_root = os.path.join(root, "postings")
         # parameters first (meta file is the source of truth once written:
         # a crash at ANY later point reopens with the same banding)
         if os.path.exists(self._meta_path):
@@ -210,44 +143,14 @@ class EmbIndex:
                     },
                     fh,
                 )
-        # each lake guarded independently (mirrors MinHashIndex): a crash
-        # between the two create() calls must not brick the root
-        if LakeTable.exists(vec_root):
-            self.vecs = LakeTable(spark, vec_root).refresh()
-        else:
-            self.vecs = LakeTable.create(
-                spark,
-                vec_root,
-                fields=list(VEC_FIELDS),
-                key=VEC_KEY,
-                n_buckets=n_buckets,
-                table="emb_vectors",
-                merge_on_read=True,
-            )
-        if LakeTable.exists(post_root):
-            self.post = LakeTable(spark, post_root).refresh()
-        else:
-            self.post = LakeTable.create(
-                spark,
-                post_root,
-                fields=list(POST_FIELDS),
-                key=POST_KEY,
-                n_buckets=n_buckets,
-                table="emb_postings",
-                merge_on_read=True,
-            )
-        self.last_update_stats: dict = {}
-
-    def maintenance_lakes(self) -> list[LakeTable]:
-        return [self.vecs, self.post]
+        super().__init__(
+            spark, root, "vectors", VEC_FIELDS, VEC_KEY, "emb", n_buckets
+        )
+        self.vecs = self.lake  # the doc-major lake is the vector store
 
     def vectors(self) -> DataFrame:
         """The live corpus, doc-major: (doc_id, embedding)."""
-        return self.vecs.read()
-
-    def postings(self) -> DataFrame:
-        """The live index, band-major: (bkey, band, doc_id)."""
-        return self.post.read()
+        return self.lake.read()
 
     def _sign(self, vecs: DataFrame) -> DataFrame:
         return emb_bands(
@@ -261,191 +164,26 @@ class EmbIndex:
             self.bits,
         )
 
-    def update(self, vecs: DataFrame, lsn: int, batch_id: int) -> DataFrame:
-        """Apply one batch of vector changes and return its confirmed
-        near-dup pairs ``(doc_a, doc_b, cosine)``.
-
-        ``vecs`` carries (doc_id, embedding[, _deleted][, _lsn]) for the
-        NEW / CHANGED / DELETED docs only. Same idempotence and replay
-        contract as :meth:`.dedupe_index.MinHashIndex.update`: both lake
-        commits are idempotent per ``batch_id`` and the returned pairs are
-        deterministic given the post-merge state, so replays return the
-        same pairs — callers persisting them behind an idempotent commit
-        get exactly-once."""
-        return self._apply(vecs, lsn, batch_id)
-
-    def _apply(
-        self,
-        vecs: DataFrame,
-        lsn: int,
-        batch_id: int,
-        new_truncate_lsn: int | None = None,
-        emit_pairs: bool = True,
-    ) -> DataFrame | None:
-        vecs = collapse_batch(vecs, lsn)
-        has_del = "_deleted" in vecs.columns
-        live = vecs.filter(~F.col("_deleted")) if has_del else vecs
-        if "_lsn" in vecs.columns:
-            lsn_map = vecs.select(
-                "doc_id",
-                F.coalesce(
-                    F.col("_lsn").cast("long"), F.lit(lsn).cast("long")
-                ).alias("_row_lsn"),
-            ).distinct()
-        else:
-            lsn_map = vecs.select("doc_id").distinct().withColumn(
-                "_row_lsn", F.lit(lsn).cast("long")
-            )
-        new_bands = self._sign(live).localCheckpoint(eager=False)
-
-        probe = new_bands.head(PRUNE_MAX_KEYS + 1)
-        pruned = len(probe) <= PRUNE_MAX_KEYS
-        dead_ids: list = []
-        has_dead = False
-        if has_del:
-            drows = (
-                vecs.filter(F.col("_deleted"))
-                .select("doc_id")
-                .distinct()
-                .head(PRUNE_MAX_KEYS + 1)
-            )
-            has_dead = bool(drows)
-            if len(drows) > PRUNE_MAX_KEYS:
-                pruned = False
-            else:
-                dead_ids = [r[0] for r in drows]
-        doc_ids = (
-            sorted({r["doc_id"] for r in probe} | set(dead_ids))
-            if pruned
-            else None
-        )
-        bkeys = sorted({r["bkey"] for r in probe}) if pruned else None
-
-        def _j(left, right, on, right_small=True, how="inner"):
-            if pruned and right_small:
-                right = F.broadcast(right)
-            return left.join(right, on, how)
-
-        # old vectors of the batch's docs at the pre-batch version; their
-        # recomputed band keys are the postings to supersede
-        try:
-            v_before = MinHashIndex._version_before(self.vecs, batch_id)
-        except RuntimeError:
-            if self.post.last_batch["id"] == batch_id:
-                v_before = None  # full replay of the latest batch
-            else:
-                raise
-        truncate_before = (
-            self.vecs.truncate_lsn
-            if v_before is None
-            else self.vecs._load_version(v_before)["truncate_lsn"]
-        )
-        ids_df = lsn_map.select("doc_id")
-        old_raw = self.vecs.scan_for_keys(doc_ids, version=v_before)
-        old_live = self.vecs.resolve_live(
-            _j(old_raw, ids_df, ["doc_id"]), truncate_lsn=truncate_before
-        ).select("doc_id", "embedding", "_lsn")
-        vec_stats = dict(self.vecs.last_scan_stats)
-        old_bands = self._sign(old_live).localCheckpoint(eager=False)
-        repl = old_bands.join(
-            new_bands, ["doc_id", "band", "bkey"], "left_anti"
-        )
-        old_kv = old_live.select(
-            "doc_id", F.col("_lsn").alias("_old_lsn")
+    def _doc_rows(self, live: DataFrame, new_bands: DataFrame) -> DataFrame:
+        return live.select(
+            "doc_id",
+            F.col("embedding").cast("array<double>").alias("embedding"),
         )
 
-        def _stamped(df, deleted=False):
-            return stamp_rows(df, lsn_map, deleted=deleted, broadcast=pruned)
+    def _doc_tombstones(self, dead: DataFrame) -> DataFrame:
+        return dead.select(
+            "doc_id", F.lit(None).cast("array<double>").alias("embedding")
+        )
 
-        # doc-major delta: the vectors themselves
-        vbatch = _stamped(
-            live.select(
-                "doc_id",
-                F.col("embedding").cast("array<double>").alias("embedding"),
-            )
-        )
-        if has_dead:
-            vbatch = vbatch.unionByName(
-                _stamped(
-                    vecs.filter(F.col("_deleted")).select(
-                        "doc_id",
-                        F.lit(None).cast("array<double>").alias("embedding"),
-                    ),
-                    deleted=True,
-                )
-            )
-        self.vecs.merge(
-            vbatch, batch_id=batch_id, lsn_hwm=lsn,
-            new_truncate_lsn=new_truncate_lsn,
-        )
-        self.vecs.refresh()
+    def _old_bands(self, old_live: DataFrame) -> DataFrame:
+        # a stored vector re-signs to exactly its stored postings
+        return self._sign(old_live).localCheckpoint(eager=False)
 
-        # band-major delta: new postings (stale-redelivery-filtered against
-        # the stored vector's LSN) + superseded-posting tombstones
-        up = (
-            _j(
-                _stamped(new_bands.select("bkey", "band", "doc_id")),
-                old_kv,
-                ["doc_id"],
-                how="left",
-            )
-            .filter(
-                F.col("_old_lsn").isNull()
-                | (F.col("_lsn") >= F.col("_old_lsn"))
-            )
-            .drop("_old_lsn")
-        )
-        pbatch = up.unionByName(
-            _stamped(repl.select("bkey", "band", "doc_id"), deleted=True)
-        )
-        self.post.merge(
-            pbatch, batch_id=batch_id, lsn_hwm=lsn,
-            new_truncate_lsn=new_truncate_lsn,
-        )
-        self.post.refresh()
-        if not emit_pairs:
-            return None
-
-        # candidates from the bkey-pruned post-merge postings, occupancy-
-        # capped map-side (same no-window rule as the MinHash index)
-        keys = new_bands.select("band", "bkey").distinct()
-        raw = self.post.scan_for_keys(bkeys)
-        matched = self.post.resolve_live(
-            _j(raw, keys, ["band", "bkey"])
-        ).localCheckpoint(eager=False)
-        self.last_update_stats = {
-            "pruned": pruned,
-            "vector_lookup": vec_stats,
-            "postings_lookup": dict(self.post.last_scan_stats),
-        }
-        occ_ok = (
-            matched.groupBy("band", "bkey")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= MAX_BUCKET_DOCS)
-            .select("band", "bkey")
-        )
-        matched_ok = _j(matched, occ_ok, ["band", "bkey"]).select(
-            "band", "bkey", "doc_id"
-        )
-        cand = (
-            _j(
-                matched_ok,
-                new_bands.select(
-                    F.col("doc_id").alias("_new_doc"), "band", "bkey"
-                ),
-                ["band", "bkey"],
-            )
-            .filter(F.col("_new_doc") != F.col("doc_id"))
-            .select(
-                F.least("_new_doc", "doc_id").alias("doc_a"),
-                F.greatest("_new_doc", "doc_id").alias("doc_b"),
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # exact-cosine confirmation against the post-merge vectors lake,
-        # candidate-id-pruned (both sides come from the lake: the batch's
-        # own vectors are live in it after the commit above)
+    def _confirm(self, cand: DataFrame) -> DataFrame:
+        """Exact-cosine confirmation against the post-merge vectors lake,
+        candidate-id-pruned (both sides come from the lake: the batch's
+        own vectors are live in it after the commit)."""
+        cand = cand.localCheckpoint(eager=False)
         crows = cand.head(PRUNE_MAX_KEYS + 1)
         if len(crows) <= PRUNE_MAX_KEYS:
             cids = sorted(
@@ -453,11 +191,11 @@ class EmbIndex:
             )
         else:
             cids = None
-        cvecs = self.vecs.resolve_live(
-            self.vecs.scan_for_keys(cids)
+        cvecs = self.lake.resolve_live(
+            self.lake.scan_for_keys(cids)
         ).select("doc_id", "embedding")
         self.last_update_stats["cosine_lookup"] = dict(
-            self.vecs.last_scan_stats
+            self.lake.last_scan_stats
         )
         va = cvecs.select(
             F.col("doc_id").alias("doc_a"), F.col("embedding").alias("_va")
@@ -477,21 +215,6 @@ class EmbIndex:
             )
             .filter(F.col("cosine") >= NEARDUP_COSINE)
             .distinct()
-        )
-
-    def rebuild(
-        self,
-        vecs: DataFrame,
-        lsn: int,
-        batch_id: int,
-        truncate_lsn: int | None = None,
-    ) -> None:
-        """Full re-index after a corpus TRUNCATE: the same pipeline fed
-        the full post-truncate corpus, committed with a truncate watermark
-        that kills every older index row in O(1). Emits no pairs."""
-        t = (lsn - 1) if truncate_lsn is None else truncate_lsn
-        self._apply(
-            vecs, lsn, batch_id, new_truncate_lsn=t, emit_pairs=False
         )
 
 

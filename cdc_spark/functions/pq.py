@@ -836,15 +836,11 @@ class PqIndex:
             if dim % m:
                 raise ValueError(f"dim={dim} must divide into m={m}")
             self.m, self.ksub, self.dim = m, ksub, dim
-        codes_root = os.path.join(root, "codes")
-        if LakeTable.exists(codes_root):
-            self.codes_lake = LakeTable(spark, codes_root).refresh()
-        else:
-            self.codes_lake = LakeTable.create(
-                spark, codes_root, fields=list(self.FIELDS),
-                key=self.KEY, n_buckets=n_buckets, table="pq_codes",
-                merge_on_read=True,
-            )
+        self.codes_lake = LakeTable.open_or_create(
+            spark, os.path.join(root, "codes"), fields=list(self.FIELDS),
+            key=self.KEY, n_buckets=n_buckets, table="pq_codes",
+            merge_on_read=True,
+        )
         self.last_update_stats: dict = {}
 
     # -- codebooks ---------------------------------------------------------
@@ -918,7 +914,7 @@ class PqIndex:
         commits idempotently per ``batch_id``. The batch is LWW-collapsed
         to one row per doc first (a folded delete + re-insert would
         otherwise stamp both versions and blend both embeddings)."""
-        from .emb_index import collapse_batch, stamp_rows
+        from .dedupe_index import collapse_batch, lsn_map, stamp_rows
 
         vecs = collapse_batch(vecs, lsn)
         has_del = "_deleted" in vecs.columns
@@ -933,16 +929,7 @@ class PqIndex:
                     "inserts rows"
                 )
             self.train(live.select("doc_id", "embedding"), n_vecs=n_live)
-        if "_lsn" in vecs.columns:
-            lsn_map = vecs.select(
-                "doc_id",
-                F.coalesce(F.col("_lsn").cast("long"),
-                           F.lit(lsn).cast("long")).alias("_row_lsn"),
-            ).distinct()
-        else:
-            lsn_map = vecs.select("doc_id").distinct().withColumn(
-                "_row_lsn", F.lit(lsn).cast("long")
-            )
+        lsns = lsn_map(vecs, lsn)
         e = live.select(
             F.col("doc_id").alias("vec_id"),
             F.col("embedding").cast("array<double>").alias("v"),
@@ -952,7 +939,7 @@ class PqIndex:
         ).withColumnRenamed("vec_id", "doc_id")
 
         def _stamped(df, deleted=False):
-            return stamp_rows(df, lsn_map, deleted=deleted)
+            return stamp_rows(df, lsns, deleted=deleted)
 
         batch = _stamped(enc.select("doc_id", "sub", "code"))
         if has_del:

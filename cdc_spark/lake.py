@@ -69,6 +69,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .dedup import lww_dedup
+
 _SQL_TYPES = {"string": "STRING", "long": "BIGINT", "double": "DOUBLE",
               "boolean": "BOOLEAN", "int": "INT", "timestamp": "TIMESTAMP",
               "date": "DATE", "map<string,string>": "MAP<STRING,STRING>",
@@ -436,6 +438,17 @@ class LakeTable:
             f.startswith("v") and f.endswith(".json") for f in os.listdir(d)
         )
 
+    @classmethod
+    def open_or_create(
+        cls, spark: SparkSession, root: str, **create_kw
+    ) -> "LakeTable":
+        """The table published at ``root``, else a new one made by
+        :meth:`create` with ``create_kw`` (ignored for an existing table:
+        its manifest is the source of truth)."""
+        if cls.exists(root):
+            return cls(spark, root)
+        return cls.create(spark, root, **create_kw)
+
     @staticmethod
     def _publish(root: str, meta: dict, replace: bool = False) -> None:
         """Atomic manifest publish: stage then hard-link into place. The
@@ -571,20 +584,11 @@ class LakeTable:
     def _lww_resolve(self, df: DataFrame) -> DataFrame:
         """Per-key LWW winner for merge-on-read tables: deltas appended by
         ``strategy='append'`` can carry several rows per key across files;
-        the visible row is the max-LSN one (the same max_by reduce the COW
-        'agg' merge strategy uses at write time). Partial-aggregated, so
-        the shuffle carries one row per key per map partition."""
-        payload = [c for c in df.columns if c not in self.key]
-        return (
-            df.groupBy(*[F.col(f"`{k}`") for k in self.key])
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(f"`{c}`") for c in payload]),
-                    F.col("_lsn"),
-                ).alias("_s")
-            )
-            .select(*[f"`{k}`" for k in self.key], "_s.*")
-        )
+        the visible row is the max-LSN one (``dedup.lww_dedup``, the same
+        reduce the COW 'agg' merge strategy runs at write time).
+        Partial-aggregated, so the shuffle carries one row per key per map
+        partition."""
+        return lww_dedup(df, key=self.key, order_col="_lsn")
 
     def resolve_live(
         self, df: DataFrame, truncate_lsn: int | None = None
@@ -1030,15 +1034,8 @@ class LakeTable:
 
             def _agg_merge(o, bb, n_parts):
                 m = o.unionByName(bb) if o is not None else bb
-                payload = [c for c in m.columns if c not in key]
                 return (
-                    m.groupBy(*key)
-                    .agg(
-                        F.max_by(
-                            F.struct(*payload), F.col("_lsn")
-                        ).alias("_s")
-                    )
-                    .select(*key, F.col("_s.*"))
+                    lww_dedup(m, key=key, order_col="_lsn")
                     .repartition(max(n_parts, 1), "_bucket")
                     .sortWithinPartitions("_bucket", *key)
                 )

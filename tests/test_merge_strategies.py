@@ -5,6 +5,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from cdc_spark import dedup
 from cdc_spark.apply import CdcApply
 from cdc_spark.config import EngineConfig
 from cdc_spark.loggen import change_log
@@ -16,8 +17,12 @@ def _run(spark, root, strategy_rows):
         lake_root=root, checkpoint=os.path.join(root, "_ckpt"), n_buckets=8
     )
     applier = CdcApply(spark, cfg)
+    # a column whose name holds a dot (a quoted Postgres identifier) joins
+    # mid-log, so later batches reduce it as a plain column name
     log = change_log(spark, 3000, n_repos=25, n_paths=8, delete_rate=0.1,
-                     dup_rate=0.03, seed=53)
+                     dup_rate=0.03, seed=53,
+                     schema_changes={700: {"action": "add", "column": "a.b",
+                                           "type": "long"}})
     for i in range(3):
         b = log.filter(F.pmod(F.xxhash64("lsn", F.lit(7)), F.lit(3)) == i)
         lake = applier.lake_for("repos")
@@ -26,11 +31,16 @@ def _run(spark, root, strategy_rows):
     return applier.lake_for("repos"), log
 
 
-def test_join_and_agg_strategies_identical(spark, tmpdir_factory_clean):
+def test_join_and_agg_strategies_identical(
+    spark, tmpdir_factory_clean, monkeypatch
+):
     r_join = tmpdir_factory_clean("j")
     r_agg = tmpdir_factory_clean("a")
     lake_j, log = _run(spark, r_join, strategy_rows=10_000_000)  # join path
-    lake_a, _ = _run(spark, r_agg, strategy_rows=0)  # force agg fallback
+    # force the agg fallback, and the wide dedup reduce with it
+    monkeypatch.setattr(dedup, "NARROW_MAX_WINNERS", 0)
+    lake_a, _ = _run(spark, r_agg, strategy_rows=0)
+    assert "a.b" in lake_a.read().columns
     pj = lake_j.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
     pa = lake_a.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
     import pandas as pd

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from cdc_spark.functions.dedupe import minhash_bands
 from cdc_spark.functions.dedupe_index import MinHashIndex
+from cdc_spark.functions.emb_index import EmbIndex, emb_bands
 
 WORDS = (
     "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu "
@@ -39,6 +40,52 @@ def _bands_set(df):
     return {(r["doc_id"], r["band"], r["bkey"]) for r in df.collect()}
 
 
+def _vec(i: int) -> list[float]:
+    return [((i * 31 + d * 7 + 3) % 13 - 6) / 6.0 for d in range(8)]
+
+
+class _Kind:
+    """One index modality for the tests both indexes must pass: how to
+    open it, the payload column a doc carries, and its live bands."""
+
+    def __init__(self, name):
+        self.name = name
+        self.mh = name == "minhash"
+        self.col, self.ddl, self.payload = (
+            ("text", "STRING", _text) if self.mh
+            else ("embedding", "ARRAY<DOUBLE>", _vec)
+        )
+
+    def open(self, spark, root):
+        if self.mh:
+            return MinHashIndex(spark, root)
+        return EmbIndex(spark, root, bits=6, n_bands=3, dim=8, n_buckets=4)
+
+    def frame(self, spark, rows):
+        """rows: (doc_id, payload seed or None, deleted, lsn)"""
+        return spark.createDataFrame(
+            [(i, None if p is None else self.payload(p), d, l)
+             for i, p, d, l in rows],
+            f"doc_id BIGINT, {self.col} {self.ddl}, _deleted BOOLEAN, "
+            "_lsn BIGINT",
+        )
+
+    def sign(self, idx, docs):
+        if self.mh:
+            return minhash_bands(docs.select("doc_id", "text"), idx.k,
+                                 idx.n_bands)
+        return emb_bands(docs, idx.dim, idx.n_bands, idx.bits)
+
+    def doc_bands(self, idx):
+        """The doc-major lake's live content, as bands."""
+        if self.mh:
+            return _bands_set(idx.bands())
+        return _bands_set(self.sign(idx, idx.vectors()))
+
+
+KINDS = [_Kind("minhash"), _Kind("emb")]
+
+
 def test_postings_track_bands_through_update_delete(
     spark, tmpdir_factory_clean
 ):
@@ -61,19 +108,19 @@ def test_postings_track_bands_through_update_delete(
     assert got == want and len(want) > 0
 
 
+@pytest.mark.parametrize("kind", KINDS, ids=lambda k: k.name)
 def test_crash_between_doc_and_postings_commit_replays_clean(
-    spark, tmpdir_factory_clean
+    spark, tmpdir_factory_clean, kind
 ):
     """Kill the update AFTER the doc-lake commit, BEFORE the postings
     commit; the replay must rebuild the postings delta from the RETAINED
     pre-batch doc-lake snapshot (not the post-commit state, which would
     lose the tombstones) and return the same pairs."""
     root = tmpdir_factory_clean("r5b")
-    idx = MinHashIndex(spark, root)
-    idx.update(_frame(spark, range(8)), lsn=1, batch_id=0)
-    batch1 = _frame(
-        spark, [2, 5], texts=lambda i: _text(i + 50), deleted={5}
-    )
+    batch0 = kind.frame(spark, [(i, i, False, 1) for i in range(8)])
+    idx = kind.open(spark, root)
+    idx.update(batch0, lsn=1, batch_id=0)
+    batch1 = kind.frame(spark, [(2, 52, False, 2), (5, None, True, 2)])
 
     real_merge = idx.post.merge
 
@@ -88,18 +135,16 @@ def test_crash_between_doc_and_postings_commit_replays_clean(
     assert idx.post.refresh().last_batch["id"] == 0  # postings did not
 
     # fresh process replays the batch
-    idx2 = MinHashIndex(spark, root)
+    idx2 = kind.open(spark, root)
     pairs = idx2.update(batch1, lsn=2, batch_id=1)
     assert pairs is not None
-    assert _bands_set(idx2.bands()) == {
-        (r["doc_id"], r["band"], r["bkey"])
-        for r in idx2.postings().collect()
-    }
+    assert kind.doc_bands(idx2) == _bands_set(idx2.postings())
     # and the invariant vs a never-crashed twin
-    twin = MinHashIndex(spark, tmpdir_factory_clean("r5b2"))
-    twin.update(_frame(spark, range(8)), lsn=1, batch_id=0)
+    twin = kind.open(spark, tmpdir_factory_clean("r5b2"))
+    twin.update(batch0, lsn=1, batch_id=0)
     twin_pairs = twin.update(batch1, lsn=2, batch_id=1)
-    assert _bands_set(idx2.bands()) == _bands_set(twin.bands())
+    assert kind.doc_bands(idx2) == kind.doc_bands(twin)
+    assert _bands_set(idx2.postings()) == _bands_set(twin.postings())
     assert _pairs(pairs) == _pairs(twin_pairs)
 
 
@@ -311,53 +356,52 @@ def test_postings_backfill_retries_after_create_crash(
     assert re.post.last_batch["id"] == re.lake.last_batch["id"]
 
 
+@pytest.mark.parametrize("kind", KINDS, ids=lambda k: k.name)
 def test_out_of_order_stale_batch_cannot_desync(
-    spark, tmpdir_factory_clean
+    spark, tmpdir_factory_clean, kind
 ):
     """A stale redelivery that wins its own LATER batch (cross-batch
     out-of-order delivery) must lose the index's row-level LWW in BOTH
-    lakes: the doc-major bands resolve away, and the stale row's postings
+    lakes: the doc-major rows resolve away, and the stale row's postings
     — whose keys never collide with the stored newer posting — are
-    filtered against the stored per-(doc, band) LSN. Found by the round-5
+    filtered against the stored per-doc-key LSN. Found by the round-5
     e2e verify drive (shuffle_window delivery)."""
-
-    def _with_lsn(ids_texts_lsns):
-        return spark.createDataFrame(
-            [(i, t, False, l) for i, t, l in ids_texts_lsns],
-            "doc_id BIGINT, text STRING, _deleted BOOLEAN, _lsn BIGINT",
-        )
-
-    idx = MinHashIndex(spark, tmpdir_factory_clean("r5g"))
-    new_text, old_text = _text(1), _text(80)
-    idx.update(_with_lsn([(1, new_text, 10)]), lsn=10, batch_id=0)
+    idx = kind.open(spark, tmpdir_factory_clean("r5g"))
+    newer = kind.frame(spark, [(1, 1, False, 10)])
+    idx.update(newer, lsn=10, batch_id=0)
     # batch 1 delivers the doc's OLDER version (lsn 5 < 10)
-    idx.update(_with_lsn([(1, old_text, 5)]), lsn=20, batch_id=1)
-    want = _bands_set(
-        minhash_bands(
-            spark.createDataFrame(
-                [(1, new_text)], "doc_id BIGINT, text STRING"
-            ),
-            idx.k, idx.n_bands,
-        )
-    )
-    assert _bands_set(idx.bands()) == want
-    assert {
-        (r["doc_id"], r["band"], r["bkey"])
-        for r in idx.postings().collect()
-    } == want
+    idx.update(kind.frame(spark, [(1, 80, False, 5)]), lsn=20, batch_id=1)
+    want = _bands_set(kind.sign(idx, newer))
+    assert kind.doc_bands(idx) == want
+    assert _bands_set(idx.postings()) == want
     # and a stale DELETE cannot kill the newer row either
+    idx.update(kind.frame(spark, [(1, None, True, 7)]), lsn=30, batch_id=2)
+    assert kind.doc_bands(idx) == want
+    assert _bands_set(idx.postings()) == want
+
+
+def test_folded_delete_and_reinsert_in_one_batch(
+    spark, tmpdir_factory_clean
+):
+    """A batch carrying delete(doc, lsn=5) + re-insert(doc, lsn=6) must
+    collapse to the re-insert in BOTH lakes — not stamp both versions and
+    leave each lake's read-side LWW to tie-break bands against tombstones
+    on its own."""
+    idx = MinHashIndex(spark, tmpdir_factory_clean("r5i"))
+    kind = KINDS[0]
+    idx.update(kind.frame(spark, [(i, i, False, 1) for i in range(4)]),
+               lsn=1, batch_id=0)
     idx.update(
-        spark.createDataFrame(
-            [(1, None, True, 7)],
-            "doc_id BIGINT, text STRING, _deleted BOOLEAN, _lsn BIGINT",
-        ),
-        lsn=30, batch_id=2,
+        kind.frame(spark, [(1, None, True, 5), (1, 41, False, 6)]),
+        lsn=6, batch_id=1,
     )
+    live = kind.frame(
+        spark, [(0, 0, False, 1), (1, 41, False, 6), (2, 2, False, 1),
+                (3, 3, False, 1)],
+    )
+    want = _bands_set(kind.sign(idx, live))
     assert _bands_set(idx.bands()) == want
-    assert {
-        (r["doc_id"], r["band"], r["bkey"])
-        for r in idx.postings().collect()
-    } == want
+    assert _bands_set(idx.postings()) == want
 
 
 def test_apply_crash_before_pairs_commit_is_exactly_once(
