@@ -10,7 +10,7 @@ This is the consumer the reference leaves as ``NotImplementedError``
 2. DML rows are interpreted under the schema epoch their LSN falls in and
    projected into the batch-final schema (schema-evolution events replayed
    at the correct LSN, E3);
-3. LWW max-LSN reduce per (repo, path), narrow or wide by key estimate
+3. one LWW max-LSN reduce per (repo, path), a single pass over the batch
    (A2/A3);
 4. copy-on-write merge into the lake with one idempotent commit per
    (batch, table), keyed by (epoch, lsn_hwm) (E1/E2);
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import BASE_FIELDS, DML_OPS, EngineConfig
-from .dedup import lww_dedup_auto
+from .dedup import lww_dedup
 from .lake import (
     LakeTable,
     _coalesce_ranges,
@@ -117,9 +117,6 @@ class CdcApply:
                 n_buckets=self.cfg.n_buckets,
                 table=table,
             )
-            # write-time layout knob (not persisted in the manifest: it can
-            # change per run; readers only ever follow manifest paths)
-            self._lakes[table].file_block_prefix = self.cfg.file_block_prefix
         return self._lakes[table]
 
     # ------------------------------------------------------------ the batch
@@ -153,17 +150,6 @@ class CdcApply:
                         )
                     )
                 ).alias("changes"),
-                # HLL distinct-key estimate rides the SAME aggregation —
-                # it feeds the narrow-dedup broadcast guard at zero
-                # extra jobs (rsd 5%; the guard adds 10% headroom).
-                # The sketch hashes an 8-byte xxhash64 of the key
-                # columns, not a concatenated string: same cardinality
-                # estimate (it feeds a thresholded guess, and xxhash64
-                # collisions are far below the 5% rsd), no per-row
-                # string materialization (measured ~7s/20M-row batch)
-                F.approx_count_distinct(
-                    F.xxhash64(*self.cfg.key), 0.05
-                ).alias("n_keys_est"),
             )
             .collect()
         )
@@ -303,13 +289,9 @@ class CdcApply:
         for p in parts[1:]:
             projected = projected.unionByName(p)
 
-        # -- LWW dedup (A2) + merge (E1) under one persist; narrow vs wide
-        # is picked from the control aggregation's HLL key estimate
-        deduped, _strategy = lww_dedup_auto(
-            projected, key=key, order_col="_lsn",
-            estimated_winners=int(ctrl["n_keys_est"]),
-        )
-        deduped = deduped.persist()
+        # -- LWW dedup (A2) + merge (E1) under one persist: one max_by
+        # reduce, partial-aggregated below its key exchange
+        deduped = lww_dedup(projected, key=key, order_col="_lsn").persist()
         try:
             # ONE job yields the lineage stats, the affected-bucket list,
             # AND the batch's per-bucket key intervals the merge needs for
@@ -405,27 +387,37 @@ class CdcApply:
         are still live in the lake (two semi-joins against the live key
         hashes, which are computed and locally checkpointed ONCE —
         O(pairs + live keys) with a single lake scan)."""
-        pairs = self._neardups_lake(table).refresh().read()
         if not live_only:
-            return pairs
-        live = (
+            return self._neardups_lake(table).refresh().read()
+        return self._live_pairs(table)[1]
+
+    def _live_pairs(self, table: str) -> tuple[DataFrame, DataFrame]:
+        """``(live_ids, pairs)``: the ``doc_id`` hashes of ``table``'s live
+        lake rows, locally checkpointed so its ONE lake scan feeds every
+        consumer, and the pairs whose both docs are among them (two
+        semi-joins)."""
+        live_ids = (
             self.lake_for(table)
             .refresh()
             .read()
             .select(
-                F.xxhash64(*[F.col(k) for k in self.cfg.key]).alias("_h")
+                F.xxhash64(*[F.col(k) for k in self.cfg.key]).alias("doc_id")
             )
             .localCheckpoint(eager=False)
         )
-        return (
-            pairs.join(
-                live.select(F.col("_h").alias("doc_a")), ["doc_a"], "semi"
+        pairs = (
+            self._neardups_lake(table)
+            .refresh()
+            .read()
+            .join(
+                live_ids.select(F.col("doc_id").alias("doc_a")), ["doc_a"], "semi"
             )
             .join(
-                live.select(F.col("_h").alias("doc_b")), ["doc_b"], "semi"
+                live_ids.select(F.col("doc_id").alias("doc_b")), ["doc_b"], "semi"
             )
             .select("doc_a", "doc_b", "batch_id")
         )
+        return live_ids, pairs
 
     def neardup_clusters(self, table: str) -> DataFrame:
         """Dedup verdict over the CURRENT corpus from the streaming pair
@@ -444,34 +436,8 @@ class CdcApply:
         from .functions.cluster import dedup_clusters
 
         # ONE lake scan: the live hash set feeds both the pair filter and
-        # the label join (same single-evaluation rule as
-        # neardups(live_only=True), which this inlines to share the frame)
-        live_ids = (
-            self.lake_for(table)
-            .refresh()
-            .read()
-            .select(
-                F.xxhash64(*[F.col(k) for k in self.cfg.key]).alias(
-                    "doc_id"
-                )
-            )
-            .localCheckpoint(eager=False)
-        )
-        pairs = (
-            self._neardups_lake(table)
-            .refresh()
-            .read()
-            .join(
-                live_ids.select(F.col("doc_id").alias("doc_a")),
-                ["doc_a"],
-                "semi",
-            )
-            .join(
-                live_ids.select(F.col("doc_id").alias("doc_b")),
-                ["doc_b"],
-                "semi",
-            )
-        )
+        # the label join
+        live_ids, pairs = self._live_pairs(table)
         return dedup_clusters(live_ids, pairs)
 
     def corpus_profile(self, table: str, by: str = "lang") -> DataFrame:

@@ -66,15 +66,6 @@ class EngineConfig:
     lake_root: str = "/tmp/cdc_lake"
     checkpoint: str = "/tmp/cdc_checkpoint"
     n_buckets: int = 16
-    #: Iceberg-style truncate-transform file partitioning: when > 0, lake
-    #: data files are additionally split by this key prefix width, so hot
-    #: and cold key clusters land in SEPARATE files with tight ranges and
-    #: a later mixed merge rewrites only the intersecting cluster's files
-    #: (a key-sorted mixed file can never be range-skipped: its row groups
-    #: bridge the gap). Off by default — it multiplies file count by the
-    #: blocks-per-bucket actually present; turn on for range-clustered
-    #: CDC streams (the workload the round-3 soak modeled).
-    file_block_prefix: int = 0
     #: streaming near-dup screening: when True, every applied batch ALSO
     #: updates a persistent MinHash band index (merge-on-read LakeTables
     #: under <lake_root>/_neardup_index/<table>) with exactly the rows it
@@ -145,7 +136,6 @@ CONFIG_SCHEMA = {
                 "compact_every": {"type": "integer", "minimum": 0},
                 "expire_keep": {"type": "integer", "minimum": 1},
                 "tombstone_lag": {"type": "integer", "minimum": 0},
-                "file_block_prefix": {"type": "integer", "minimum": 0},
                 "neardup_index": {"type": "boolean"},
                 "neardup_corpus_hint": {
                     "type": ["integer", "null"], "minimum": 1,

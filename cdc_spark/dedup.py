@@ -1,4 +1,4 @@
-"""Last-writer-wins dedup: max-LSN reduce per key (wide or narrow).
+"""Last-writer-wins dedup: max-LSN reduce per key.
 
 The engine-side aggregation the north rule demands (SURVEY.md §2.5 A2/A3).
 The reference guarantees strict per-event ordering via sequential ids
@@ -13,10 +13,12 @@ Physical notes for 100 TB:
   map task pre-collapses its rows per key before the shuffle, so a hot repo
   contributes at most one row per map partition to the exchange — the usual
   skew defusal for *aggregation*.
-- The apply pipeline runs ``lww_dedup_auto``: narrow (key, lsn)-only
-  shuffle while the batch's HLL key estimate fits ``NARROW_MAX_WINNERS``,
-  the wide ``max_by`` reduce above it. Both carry the partial aggregate
-  below their key exchange, so hot keys need no salt.
+- The apply pipeline runs ``lww_dedup``: one ``max_by`` reduce, one pass
+  over the batch, with the partial aggregate below its key exchange, so hot
+  keys need no salt.
+- ``lww_dedup_narrow`` is a result-identical library variant that shuffles
+  only (key, lsn) and semi-joins the broadcast winners back, reading its
+  source twice.
 - ``lww_dedup(salt > 1)`` is a result-identical two-phase variant kept for
   the operator library: phase 1 groups on (key, salt) spreading a hot key
   over ``salt`` reducers, phase 2 reduces the ≤salt survivors per key. Salt
@@ -27,14 +29,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: winner-set size past which ``lww_dedup_auto`` stops picking the narrow
-#: path: narrow's costs scale with the winner count, its saving (wide
-#: payload bytes kept out of the exchange) with the collapsed row count x
-#: payload width. Measured at 20M events / 2.8M winners / ~0.1 KB payloads
-#: the wide one-shuffle reduce beat narrow by ~30%; at KB-scale payloads
-#: with few winners narrow wins.
-NARROW_MAX_WINNERS = 1_000_000
 
 
 def _col(name: str):
@@ -80,10 +74,7 @@ def lww_dedup_narrow(
     the winners, and recover full rows with a map-side semi join — the wide
     columns never enter an exchange. Right shape when payload bytes dominate
     (source-code content at 100 TB): shuffle volume drops from O(rows x
-    row_width) to O(rows x key_width).
-
-    ``lww_dedup_auto`` falls back to ``lww_dedup`` when the winner set is
-    too big to broadcast.
+    row_width) to O(rows x key_width). The winner set must fit a broadcast.
     """
     winners = df.select(*key, order_col).groupBy(*key).agg(
         F.max(order_col).alias(order_col)
@@ -93,33 +84,3 @@ def lww_dedup_narrow(
     # one. This shuffle's input is already <=1 row/key (+dups), i.e. the
     # winner set — not the raw batch.
     return out.dropDuplicates(list(key))
-
-
-def lww_dedup_auto(
-    df: DataFrame,
-    key: tuple[str, ...] = ("repo", "path"),
-    order_col: str = "lsn",
-    *,
-    estimated_winners: int,
-) -> tuple[DataFrame, str]:
-    """Narrow LWW dedup while the winner estimate fits
-    ``NARROW_MAX_WINNERS``, else the wide ``lww_dedup`` reduce — the same
-    auto-pick discipline as the merge's ``batch_rows`` strategy switch.
-
-    ``estimated_winners`` is a distinct-key estimate the caller already has
-    (the apply pipeline folds an HLL ``approx_count_distinct`` into its
-    existing control aggregation — ZERO extra jobs); the estimate is
-    compared with 10% headroom to absorb HLL error.
-
-    Returns ``(deduped, strategy)`` where strategy is ``"narrow"`` or
-    ``"wide"``."""
-    if estimated_winners <= NARROW_MAX_WINNERS * 0.9:
-        return lww_dedup_narrow(df, key=key, order_col=order_col), "narrow"
-    return lww_dedup(df, key=key, order_col=order_col), "wide"
-
-
-def collapse_duplicate_lsns(df: DataFrame, order_col: str = "lsn") -> DataFrame:
-    """Drop duplicate deliveries of the same LSN (A3). Subsumed by
-    ``lww_dedup`` for keyed DML; needed standalone only for control events
-    where every LSN must be processed exactly once."""
-    return df.dropDuplicates([order_col])

@@ -692,7 +692,7 @@ REL_SHINGLE_DF = 0.01
 #: broadcast budget (rows) for the sub-cap (source, shingle) key set in the
 #: stop-shingle filter join — ~16 B/row payload, so 4M rows is tens of MB
 #: framed; above it the filter falls back to a shuffle join (same guard
-#: discipline as dedup.lww_dedup_auto / lake.broadcast_max_rows)
+#: discipline as lake.broadcast_max_rows)
 RARE_BROADCAST_MAX_ROWS = 4_000_000
 
 
@@ -821,9 +821,8 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     # broadcast budget (the common case: distinct trigrams are bounded by
     # the charset, not the corpus), broadcast-joining it keeps the big
     # exploded side out of the exchange entirely (guide §3.1/§3.2 —
-    # measured 5.8s -> 1.0s at sf1.0); the same guarded-count discipline
-    # as dedup.lww_dedup_auto, falling back to the shuffle join when the
-    # distinct set is genuinely huge.
+    # measured 5.8s -> 1.0s at sf1.0); a guarded count picks it, falling
+    # back to the shuffle join when the distinct set is genuinely huge.
     n_rare = rare.count()
     rare_side = (
         F.broadcast(rare.select("source", "sh"))

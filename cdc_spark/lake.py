@@ -376,15 +376,6 @@ class LakeTable:
     #: batch rows by this factor — the trickle-CDC regime the strategy
     #: exists for, and the only regime that matters at 100 TB.
     join_min_lake_ratio = 4
-    #: parquet row-group size (bytes) for lake data files; None = Spark's
-    #: default (128 MB). Smaller groups give the per-row-group key_ranges
-    #: stats finer pruning granularity — tests set a tiny value so multi-
-    #: interval pruning is exercised on small fixtures
-    parquet_block_size: int | None = None
-    #: truncate-transform file partitioning width (EngineConfig.
-    #: file_block_prefix): > 0 adds a key-prefix partition level to data
-    #: file paths so key clusters become separately skippable files
-    file_block_prefix: int = 0
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -762,28 +753,8 @@ class LakeTable:
 
     # -------------------------------------------------------------- merging
     def _write_data(self, merged: DataFrame, out_dir: str) -> None:
-        """One data write for merge/compact: bucket-partitioned, plus the
-        truncate-transform key-prefix level when ``file_block_prefix`` is
-        on (separate files per key cluster -> skippable independently)."""
-        part_cols = ["_bucket"]
-        if self.file_block_prefix:
-            merged = merged.withColumn(
-                "_kblk",
-                F.substring(
-                    F.coalesce(
-                        F.col(self.key[0]).cast("string"), F.lit("")
-                    ),
-                    1,
-                    self.file_block_prefix,
-                ),
-            )
-            part_cols.append("_kblk")
-        writer = merged.write.partitionBy(*part_cols).mode("overwrite")
-        if self.parquet_block_size:
-            writer = writer.option(
-                "parquet.block.size", str(self.parquet_block_size)
-            )
-        writer.parquet(out_dir)
+        """One data write for merge/compact, partitioned by bucket."""
+        merged.write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
 
     def _stat_written(
         self, out_dir: str, schema_id: int, change_lsn: int
@@ -1237,9 +1208,9 @@ class LakeTable:
                     pass
                 for sub in sorted(os.listdir(full)):
                     subp = os.path.join(full, sub)
-                    # emptiness must be checked RECURSIVELY: with
-                    # file_block_prefix the parquet files live one level
-                    # deeper (_bucket=K/_kblk=P/*.parquet), and a direct-
+                    # emptiness must be checked RECURSIVELY: data files
+                    # may sit at any partition depth below the version dir
+                    # (_stat_written walks it the same way), and a direct-
                     # children check would rmtree live data
                     if os.path.isdir(subp) and not any(
                         x.endswith(".parquet")

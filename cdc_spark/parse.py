@@ -13,8 +13,8 @@ Reference behavior being reproduced (NOT ported):
 The reference does this byte-at-a-time in Python. Here both steps are
 whole-stage-codegen JVM expressions: the escape-aware split is one regex
 (``(?:\\\\.|[^|\\\\])*`` — longest run of escaped-pairs/non-delimiters), the
-unescape is one backreference replace, and the JSON decode is ``from_json``.
-Zero per-row Python.
+unescape is one backreference replace, and the change-body decode is
+``try_parse_json`` -> VARIANT. Zero per-row Python.
 """
 
 from __future__ import annotations
@@ -24,13 +24,9 @@ from pyspark.sql import functions as F
 
 from .config import ENVELOPE_DDL
 
-# wal2json change-event schema (values serialized as strings by our framer;
-# see decode notes below for heterogeneous-type payloads).
-WAL2JSON_DDL = (
-    "event STRING, kind STRING, schema STRING, `table` STRING, "
-    "columnnames ARRAY<STRING>, columntypes ARRAY<STRING>, "
-    "columnvalues ARRAY<STRING>"
-)
+# the wal2json change-event fields the decode reads; the column arrays stay
+# VARIANT until their shape is checked (see decode_wal2json)
+WAL2JSON_TYPE = "struct<kind string, columnnames variant, columnvalues variant>"
 
 GENERIC_DDL = "event STRING, `table` STRING, schema_change STRING"
 
@@ -101,7 +97,7 @@ def split_frame(df: DataFrame, value: str = "value") -> DataFrame:
     )
 
 
-def decode_wal2json(split: DataFrame, variant: bool = False) -> DataFrame:
+def decode_wal2json(split: DataFrame) -> DataFrame:
     """Split frames -> the fixed envelope (``ENVELOPE_DDL``).
 
     Change frames decode their wal2json body; the parallel columnnames /
@@ -110,35 +106,55 @@ def decode_wal2json(split: DataFrame, variant: bool = False) -> DataFrame:
     schema-evolved columns. Generic frames re-hydrate control ops
     (truncate / schema_change) from their JSON body.
 
-    ``variant=True`` decodes TRUE wal2json, whose columnvalues carry mixed
-    JSON types (unquoted numbers/booleans — the reference's 16-Postgres-type
-    fixture, ``tests/cdc/sources/backends/test_parse_msg.py:14-23``):
-    ``parse_json`` -> VARIANT -> array<string> canonicalizes every value,
-    all JVM-side. The default ``from_json`` path is for payloads whose
-    values are already strings (our framer)."""
-    g = F.from_json(F.col("body"), GENERIC_DDL)
-    if variant:
-        v = F.parse_json(
-            F.when(F.col("frame_op") == "change", F.col("body"))
-        )
-        w = F.struct(
-            F.variant_get(v, "$.kind", "string").alias("kind"),
-            F.variant_get(v, "$.columnnames", "array<string>").alias(
-                "columnnames"
-            ),
-            F.variant_get(v, "$.columnvalues", "array<string>").alias(
-                "columnvalues"
-            ),
-        )
-    else:
-        w = F.from_json(F.col("body"), WAL2JSON_DDL)
-    cols = F.map_from_arrays(w["columnnames"], w["columnvalues"])
+    The change body goes ``try_parse_json`` -> VARIANT -> array<string>, so
+    TRUE wal2json, whose columnvalues carry mixed JSON types (unquoted
+    numbers/booleans — the reference's 16-Postgres-type fixture,
+    ``tests/cdc/sources/backends/test_parse_msg.py:14-23``), keeps every
+    value exact: a numeric never round-trips through a double. The decode
+    never raises: a body that is not JSON, or whose column arrays are
+    present but do not zip into a name->value map (not string arrays,
+    unequal lengths, a null or repeated name), decodes to op NULL, which
+    the apply path drops — a poison frame must not crash-loop the stream."""
     is_change = F.col("frame_op") == "change"
+    # three projections, so the body is parsed and its arrays cast ONCE per
+    # row: inlined, every envelope column would repeat the work
+    parsed = split.select(
+        "lsn",
+        "frame_op",
+        "table",
+        F.from_json(F.col("body"), GENERIC_DDL).alias("_g"),
+        F.try_variant_get(
+            F.try_parse_json(F.when(is_change, F.col("body"))),
+            "$",
+            WAL2JSON_TYPE,
+        ).alias("_w"),
+    )
+    arrays = parsed.select(
+        "lsn",
+        "frame_op",
+        "table",
+        "_g",
+        F.col("_w.kind").alias("_kind"),
+        (F.col("_w.columnnames").isNull() & F.col("_w.columnvalues").isNull())
+        .alias("_absent"),
+        *[
+            F.try_variant_get(F.col(f"_w.{c}"), "$", "array<string>").alias(a)
+            for c, a in (("columnnames", "_names"), ("columnvalues", "_values"))
+        ],
+    )
+    names, values, g = F.col("_names"), F.col("_values"), F.col("_g")
+    n = F.size(names)
+    zips = (F.size(F.array_compact(F.array_distinct(names))) == n) & (
+        n == F.size(values)
+    )
+    shaped = F.col("_absent") | F.coalesce(zips, F.lit(False))
+    # both arrays gated, so map_from_arrays never sees a malformed pair
+    cols = F.map_from_arrays(F.when(shaped, names), F.when(shaped, values))
     # generic frames re-hydrate only KNOWN control ops; anything else stays
     # 'generic' (reference: unrecognized payloads -> GenericMessage)
     known_ctrl = g["event"].isin("truncate", "schema_change", "begin", "commit")
     op = (
-        F.when(is_change, w["kind"])
+        F.when(is_change, F.when(shaped, F.col("_kind")))
         .when(
             F.col("frame_op") == "generic",
             F.when(known_ctrl, g["event"]).otherwise(F.lit("generic")),
@@ -147,7 +163,7 @@ def decode_wal2json(split: DataFrame, variant: bool = False) -> DataFrame:
     )
     base, extra = envelope_base_extra(cols, is_change)
     table = F.coalesce(F.col("table"), g["table"])
-    return split.select(
+    return arrays.select(
         "lsn",
         op.alias("op"),
         table.alias("table"),
@@ -157,11 +173,9 @@ def decode_wal2json(split: DataFrame, variant: bool = False) -> DataFrame:
     )
 
 
-def parse_frames(
-    df: DataFrame, value: str = "value", variant: bool = False
-) -> DataFrame:
+def parse_frames(df: DataFrame, value: str = "value") -> DataFrame:
     """Full wire-to-envelope pipeline: split_frame |> decode_wal2json."""
-    return lock_envelope(decode_wal2json(split_frame(df, value), variant=variant))
+    return lock_envelope(decode_wal2json(split_frame(df, value)))
 
 
 def with_content_hash(df: DataFrame, col: str = "content") -> DataFrame:

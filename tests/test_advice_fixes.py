@@ -52,6 +52,34 @@ def test_control_frames_do_not_poison_batch(spark, tmpdir_factory_clean):
     assert_matches(lake.read().toPandas(), replay(full, cfg.base_fields))
 
 
+def test_malformed_change_bodies_do_not_poison_batch(
+    spark, tmpdir_factory_clean
+):
+    """Framed change bodies that are not JSON, or whose column arrays do
+    not zip into a name->value map, decode to op NULL and are dropped: the
+    batch applies and the lake matches the oracle over the valid log."""
+    from cdc_spark.loggen import to_frames
+    from cdc_spark.parse import parse_frames
+
+    root = tmpdir_factory_clean("badbody")
+    log = change_log(spark, 800, n_repos=10, n_paths=4, delete_rate=0.1, seed=73)
+    bad = [
+        "{not json",
+        '{"kind":"insert","columnnames":"repo","columnvalues":["r"]}',
+        '{"kind":"insert","columnnames":["repo","path"],"columnvalues":["r"]}',
+        '{"kind":"insert","columnnames":["repo","repo"],"columnvalues":["r","s"]}',
+    ]
+    junk = spark.createDataFrame(
+        [(9001 + i, "M|repos|" + b) for i, b in enumerate(bad)],
+        "lsn BIGINT, value STRING",
+    )
+    cfg = _cfg(root)
+    applier = CdcApply(spark, cfg)
+    applier.apply_batch(parse_frames(to_frames(log).unionByName(junk)), 0)
+    lake = applier.lake_for("repos")
+    assert_matches(lake.read().toPandas(), replay(log.toPandas(), cfg.base_fields))
+
+
 _MERGE_DDL = (
     "repo STRING, path STRING, `commit` STRING, lang STRING, content STRING, "
     "_lsn BIGINT, _deleted BOOLEAN, _extra MAP<STRING,STRING>"

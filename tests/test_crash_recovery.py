@@ -39,7 +39,7 @@ def test_orphan_data_dir_from_pre_publish_crash(spark, tmpdir_factory_clean):
 
 
 def test_wide_payload_narrow_dedup_end_to_end(spark, tmpdir_factory_clean):
-    """KB-scale content exercises the narrow dedup + broadcast merge path the
+    """KB-scale content exercises the LWW reduce + broadcast merge path the
     way real source files would."""
     root = tmpdir_factory_clean("wide")
     cfg = EngineConfig(

@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from cdc_spark.dedup import collapse_duplicate_lsns, lww_dedup
+from cdc_spark.dedup import lww_dedup
 from cdc_spark.loggen import change_log
 
 
@@ -45,13 +45,6 @@ def test_hot_key_skew_zipf(spark):
     want = pdf.groupby(["repo", "path"])["lsn"].max()
     for r in rows:
         assert r["lsn"] == want[(r["repo"], r["path"])]
-
-
-def test_collapse_duplicate_lsns(spark):
-    log = change_log(spark, 500, dup_rate=0.3, seed=13)
-    n_unique = log.select("lsn").distinct().count()
-    assert collapse_duplicate_lsns(log).count() == n_unique
-    assert log.count() > n_unique  # dups were actually injected
 
 
 def test_dedup_plan_has_partial_aggregation(spark):
@@ -146,27 +139,26 @@ def test_replay_changes_matches_oracle_skip_rule(pairs):
 def test_apply_wide_fallback_hot_key_partial_aggregates_before_exchange(
     spark, tmpdir_factory_clean, monkeypatch
 ):
-    """Hot-key skew needs no salt: with the winner budget forced low, the
-    apply pipeline's wide fallback on a zipf=8 log executes a partial
-    max_by aggregate BELOW its key exchange (each map task ships at most one
-    row per hot key), and the lake still matches the LSN oracle."""
+    """Hot-key skew needs no salt: the apply pipeline's LWW reduce on a
+    zipf=8 log executes a partial max_by aggregate BELOW its key exchange
+    (each map task ships at most one row per hot key), reads the batch
+    ONCE (no semi-join back to the source), and the lake still matches the
+    LSN oracle."""
     import os
 
     from cdc_spark import apply as apply_mod
-    from cdc_spark import dedup
     from cdc_spark.apply import CdcApply
     from cdc_spark.config import EngineConfig
     from cdc_spark.oracle import assert_matches, replay
 
-    monkeypatch.setattr(dedup, "NARROW_MAX_WINNERS", 1)
     picked = []
 
     def spy(*a, **kw):
-        out = dedup.lww_dedup_auto(*a, **kw)
+        out = lww_dedup(*a, **kw)
         picked.append(out)
         return out
 
-    monkeypatch.setattr(apply_mod, "lww_dedup_auto", spy)
+    monkeypatch.setattr(apply_mod, "lww_dedup", spy)
     root = tmpdir_factory_clean("hot")
     cfg = EngineConfig(
         lake_root=root, checkpoint=os.path.join(root, "c"), n_buckets=4
@@ -182,14 +174,18 @@ def test_apply_wide_fallback_hot_key_partial_aggregates_before_exchange(
         replay(log.toPandas(), cfg.base_fields),
     )
 
-    [(deduped, strategy)] = picked
-    assert strategy == "wide"
+    [deduped] = picked
     deduped.collect()
     plan = deduped._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0].splitlines()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "LeftSemi" not in final, plan
+    # each of the log's own leaf scans (spark.range) is read exactly once
+    src = log._jdf.queryExecution().executedPlan().toString()
+    assert final.count("Range (") == src.count("Range (") > 0, plan
+    lines = final.splitlines()
     ex = next(
-        i for i, ln in enumerate(final)
+        i for i, ln in enumerate(lines)
         if "Exchange hashpartitioning(repo" in ln
     )
     # the exchange's direct child is the map-side partial aggregate
-    assert "partial_max_by" in final[ex + 1], plan
+    assert "partial_max_by" in lines[ex + 1], plan

@@ -5,7 +5,6 @@ import os
 
 from pyspark.sql import functions as F
 
-from cdc_spark import dedup
 from cdc_spark.apply import CdcApply
 from cdc_spark.config import EngineConfig
 from cdc_spark.loggen import change_log
@@ -31,14 +30,11 @@ def _run(spark, root, strategy_rows):
     return applier.lake_for("repos"), log
 
 
-def test_join_and_agg_strategies_identical(
-    spark, tmpdir_factory_clean, monkeypatch
-):
+def test_join_and_agg_strategies_identical(spark, tmpdir_factory_clean):
     r_join = tmpdir_factory_clean("j")
     r_agg = tmpdir_factory_clean("a")
     lake_j, log = _run(spark, r_join, strategy_rows=10_000_000)  # join path
-    # force the agg fallback, and the wide dedup reduce with it
-    monkeypatch.setattr(dedup, "NARROW_MAX_WINNERS", 0)
+    # force the agg fallback
     lake_a, _ = _run(spark, r_agg, strategy_rows=0)
     assert "a.b" in lake_a.read().columns
     pj = lake_j.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)

@@ -30,6 +30,18 @@ CASES = [
     (f"M||{WAL2JSON_INSERT}", "insert", ""),  # empty table name
     # escape handling: asd\\asd\| -> asd\asd|   (postgres_logical.py:56-68)
     ("M|asd\\\\asd\\||" + WAL2JSON_INSERT, "insert", "asd\\asd|"),
+    # malformed change bodies decode to op NULL instead of raising
+    ("M|t|{not json", None, "t"),
+    ("M|t|" + WAL2JSON_INSERT[:60], None, "t"),  # truncated body
+    ('M|t|{"kind":"insert","columnnames":"repo","columnvalues":["r1"]}',
+     None, "t"),
+    # column arrays that cannot zip into a name->value map
+    ('M|t|{"kind":"insert","columnnames":["repo","path"],"columnvalues":["r1"]}',
+     None, "t"),
+    ('M|t|{"kind":"insert","columnnames":["repo","repo"],"columnvalues":["a","b"]}',
+     None, "t"),
+    ('M|t|{"kind":"insert","columnnames":["repo",null],"columnvalues":["a","b"]}',
+     None, "t"),
 ]
 
 
@@ -72,15 +84,17 @@ TRUE_WAL2JSON = (
 
 def test_true_wal2json_mixed_types_variant_decode(spark):
     """The reference's 16-Postgres-type wal2json fixture shape: unquoted
-    numbers and booleans in columnvalues. The variant decode canonicalizes
-    every value to its string form, JVM-side."""
-    body = TRUE_WAL2JSON + '","r1","p1","c1","py","body text"]}'
+    numbers and booleans in columnvalues. The decode canonicalizes every
+    value to its exact string form, JVM-side — a 30-digit numeric does not
+    round through a double."""
+    body = (
+        TRUE_WAL2JSON + '","r1","p1","c1","py","body text",'
+        '123456789012345678901.123456789]}'
+    ).replace('"content"]', '"content","c_big"]')
     df = spark.createDataFrame(
         [(9, "M|t16|" + body)], "lsn BIGINT, value STRING"
     )
-    from cdc_spark.parse import parse_frames as pf
-
-    row = pf(df, variant=True).collect()[0]
+    row = parse_frames(df).collect()[0]
     assert row["op"] == "insert"
     assert row["table"] == "t16"
     assert row["repo"] == "r1" and row["content"] == "body text"
@@ -90,8 +104,8 @@ def test_true_wal2json_mixed_types_variant_decode(spark):
     assert ex["c_bpchar"] == "pad  "  # bpchar padding preserved
     assert ex["c_varbit"] == "101"
     assert ex["c_json"] == '{"k": 1}'
-    # plan stays pure-columnar in variant mode too
-    plan = pf(df, variant=True)._jdf.queryExecution().executedPlan().toString()
+    assert ex["c_big"] == "123456789012345678901.123456789"
+    plan = parse_frames(df)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 

@@ -1,4 +1,4 @@
-"""Round-2 scale fixes: partitioned gap audit, guarded narrow dedup,
+"""Round-2 scale fixes: partitioned gap audit, the apply path's LWW reduce,
 oracled multimodal features."""
 
 import contextlib
@@ -10,10 +10,8 @@ import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from cdc_spark import dedup
 from cdc_spark.apply import CdcApply
 from cdc_spark.config import EngineConfig
-from cdc_spark.dedup import lww_dedup_auto, lww_dedup_narrow
 from cdc_spark.loggen import change_log
 from cdc_spark.monitor import gap_audit
 from cdc_spark.oracle import assert_matches, replay
@@ -62,37 +60,12 @@ def test_gap_audit_empty_input(spark):
     assert gap_audit(df, "lsn").count() == 0
 
 
-def test_lww_dedup_auto_fallback_engages_and_matches(spark, monkeypatch):
-    log = change_log(spark, 3000, n_repos=40, n_paths=10, dup_rate=0.05, seed=43)
-    narrow = lww_dedup_narrow(log, key=("repo", "path"), order_col="lsn")
-    n_keys = narrow.count()
-    # estimate over budget: the wide reduce
-    monkeypatch.setattr(dedup, "NARROW_MAX_WINNERS", n_keys)
-    forced, strategy = lww_dedup_auto(
-        log, key=("repo", "path"), order_col="lsn", estimated_winners=n_keys,
-    )
-    assert strategy == "wide"
-    a = narrow.orderBy("repo", "path").toPandas()
-    b = forced.orderBy("repo", "path").toPandas()
-    pd.testing.assert_frame_equal(
-        a.reset_index(drop=True), b.reset_index(drop=True), check_like=True
-    )
-    # estimate within the budget's 10% headroom: the narrow path
-    monkeypatch.setattr(dedup, "NARROW_MAX_WINNERS", n_keys * 2)
-    ok, strategy2 = lww_dedup_auto(
-        log, key=("repo", "path"), order_col="lsn", estimated_winners=n_keys,
-    )
-    assert strategy2 == "narrow"
-    assert ok.count() == len(a)
-
-
 def test_apply_with_tiny_dedup_broadcast_budget_matches_oracle(
-    spark, tmpdir_factory_clean, monkeypatch
+    spark, tmpdir_factory_clean
 ):
-    """E2E: the wide fallback inside the apply pipeline stays
-    result-identical to the LSN-ordered oracle."""
+    """E2E: the apply pipeline's LWW reduce stays result-identical to the
+    LSN-ordered oracle across two batches."""
     root = tmpdir_factory_clean("db")
-    monkeypatch.setattr(dedup, "NARROW_MAX_WINNERS", 1)
     cfg = EngineConfig(
         lake_root=root, checkpoint=os.path.join(root, "c"), n_buckets=4,
     )

@@ -1,7 +1,7 @@
 """Round-4 VERDICT items 5-6: over-broadcast-budget batches (the
 bucket-chunked merge strategy they once took is gone — they take 'agg')
 and multi-interval key-range stats (batch-side prefix-block intervals +
-optional truncate-transform file partitioning), which together fix the
+per-row-group file intervals), which together fix the
 round-3 BENCH caveat: a batch spanning both ends of the keyspace no longer
 defeats file skipping."""
 
@@ -195,47 +195,6 @@ def test_end_to_end_straddling_batch_skips(spark, tmpdir_factory_clean):
     assert f_mid in {f["path"] for f in lake.refresh().meta["files"]}
 
 
-# -------------------------- truncate-transform file partitioning (opt-in)
-def test_file_block_partitioning_splits_clusters(spark, tmpdir_factory_clean):
-    """With file_block_prefix on, one merge containing two key clusters
-    writes SEPARATE files per cluster (tight ranges), so a later
-    mid-keyspace batch rewrites neither — the file-side half of the
-    caveat, which per-row-group stats cannot fix (a key-sorted mixed file
-    always has a bridging row group over the gap)."""
-    root = tmpdir_factory_clean("fblock")
-    lake = LakeTable.create(
-        spark, os.path.join(root, "t"), fields=list(BASE_FIELDS), n_buckets=1
-    )
-    lake.file_block_prefix = 4
-    both = [f"aaaa-{c}" for c in "abcd"] + [f"zzzz-{c}" for c in "abcd"]
-    lake.merge(_mk_batch(spark, both, 100), batch_id=0, lsn_hwm=200,
-               batch_rows=len(both))
-    files = lake.meta["files"]
-    assert len(files) == 2  # one per key cluster
-    bounds = sorted((f["min_key"], f["max_key"]) for f in files)
-    assert bounds[0][1] < "zzzz" and bounds[1][0] > "aaaa-d"
-    pre = {f["path"] for f in files}
-    assert all("_kblk=" in p for p in pre)
-    # a mid-keyspace batch touches NEITHER cluster file
-    lake.merge(
-        _mk_batch(spark, ["mmmm-a", "mmmm-b"], 300), batch_id=1, lsn_hwm=400,
-        batch_rows=2, bucket_key_ranges={0: [["mmmm-a", "mmmm-b"]]},
-    )
-    assert pre <= {f["path"] for f in lake.meta["files"]}
-    assert lake.read().count() == len(both) + 2
-    # update ONE cluster: only that cluster's file is rewritten
-    lake.merge(
-        _mk_batch(spark, ["aaaa-a"], 500), batch_id=2, lsn_hwm=500,
-        batch_rows=1, bucket_key_ranges={0: [["aaaa-a", "aaaa-a"]]},
-    )
-    paths3 = {f["path"] for f in lake.meta["files"]}
-    zfile = next(f["path"] for f in files if f["min_key"].startswith("zzzz"))
-    afile = next(f["path"] for f in files if f["min_key"].startswith("aaaa"))
-    assert zfile in paths3 and afile not in paths3
-    got = {(r["repo"], r["content"]) for r in lake.read().collect()}
-    assert ("aaaa-a", "body-aaaa-a-500") in got
-
-
 def test_key_ranges_recorded_per_row_group(spark, tmpdir_factory_clean):
     """The manifest records per-row-group interval lists (coalesced) when
     the writer emits multiple row groups; legacy min/max stay the folds."""
@@ -243,10 +202,13 @@ def test_key_ranges_recorded_per_row_group(spark, tmpdir_factory_clean):
     lake = LakeTable.create(
         spark, os.path.join(root, "t"), fields=list(BASE_FIELDS), n_buckets=1
     )
-    lake.parquet_block_size = 1024  # tiny row groups
     keys = [f"r{i:05d}" for i in range(0, 4000, 2)]
-    lake.merge(_mk_batch(spark, keys, 10_000), batch_id=0, lsn_hwm=20_000,
-               batch_rows=len(keys))
+    spark.conf.set("parquet.block.size", "1024")  # tiny row groups
+    try:
+        lake.merge(_mk_batch(spark, keys, 10_000), batch_id=0,
+                   lsn_hwm=20_000, batch_rows=len(keys))
+    finally:
+        spark.conf.unset("parquet.block.size")
     f = lake.meta["files"][0]
     assert f["key_ranges"] is not None and len(f["key_ranges"]) > 1
     from cdc_spark.lake import MAX_KEY_RANGES
@@ -263,31 +225,6 @@ def test_key_ranges_recorded_per_row_group(spark, tmpdir_factory_clean):
     legacy = {"min_key": "a", "max_key": "b"}
     assert _file_ranges(legacy) == [["a", "b"]]
     assert _file_ranges({"min_key": None, "max_key": None}) is None
-
-
-def test_expire_snapshots_keeps_live_kblk_files(spark, tmpdir_factory_clean):
-    """Round-4 review catch: with file_block_prefix on, data files live one
-    dir level deeper (_bucket=K/_kblk=P/*.parquet); the empty-dir sweep in
-    expire_snapshots must check emptiness RECURSIVELY or it rmtree's live
-    manifest-referenced data."""
-    root = tmpdir_factory_clean("kblkexp")
-    lake = LakeTable.create(
-        spark, os.path.join(root, "t"), fields=list(BASE_FIELDS), n_buckets=1
-    )
-    lake.file_block_prefix = 4
-    keys = [f"aaaa-{c}" for c in "abcd"] + [f"zzzz-{c}" for c in "abcd"]
-    lake.merge(_mk_batch(spark, keys, 100), batch_id=0, lsn_hwm=200,
-               batch_rows=len(keys))
-    lake.merge(_mk_batch(spark, ["aaaa-a"], 300), batch_id=1, lsn_hwm=300,
-               batch_rows=1, bucket_key_ranges={0: [["aaaa-a", "aaaa-a"]]})
-    lake.merge(_mk_batch(spark, ["zzzz-a"], 400), batch_id=2, lsn_hwm=400,
-               batch_rows=1, bucket_key_ranges={0: [["zzzz-a", "zzzz-a"]]})
-    before = lake.read().count()
-    lake.expire_snapshots(keep_last=1, orphan_grace_s=0)
-    # every manifest-referenced file still exists and the table still reads
-    for f in lake.meta["files"]:
-        assert os.path.exists(os.path.join(lake.root, f["path"])), f["path"]
-    assert lake.read().count() == before == len(keys)
 
 
 def test_fold_bstats_null_key_group_first(spark):

@@ -358,8 +358,8 @@ def test_stream_message_roundtrip_through_kafka_seam(spark):
 
 
 def test_yaml_round4_apply_knobs(tmp_path):
-    """Round-4 knobs are YAML-settable: file key blocking + the streaming
-    near-dup index (the batch-side key blocking width is not)."""
+    """The round-4 streaming near-dup index is YAML-settable; neither key
+    blocking width (file-side or batch-side) is."""
     import yaml
 
     from cdc_spark.config import load_config
@@ -368,19 +368,19 @@ def test_yaml_round4_apply_knobs(tmp_path):
         "version": 1,
         "source": {"backend": "file-segments", "path": "/tmp/x"},
         "lake": {"root": "/tmp/l", "checkpoint": "/tmp/c"},
-        "apply": {"file_block_prefix": 4, "neardup_index": True},
+        "apply": {"neardup_index": True},
     }
     p = tmp_path / "cfg.yml"
     p.write_text(yaml.safe_dump(doc))
     cfg, _ = load_config(str(p))
-    assert cfg.file_block_prefix == 4
     assert cfg.neardup_index is True
 
-    # the batch-side key blocking width is not settable
-    doc["apply"]["key_block_prefix"] = 6
-    p.write_text(yaml.safe_dump(doc))
-    with pytest.raises(jsonschema.ValidationError):
-        load_config(str(p))
+    # no key blocking width is settable
+    for knob, width in (("file_block_prefix", 4), ("key_block_prefix", 6)):
+        bad = {**doc, "apply": {**doc["apply"], knob: width}}
+        p.write_text(yaml.safe_dump(bad))
+        with pytest.raises(jsonschema.ValidationError):
+            load_config(str(p))
 
 
 def test_unknown_wire_format_raises(spark, tmp_path):

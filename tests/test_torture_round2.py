@@ -1,14 +1,13 @@
 """Round-2 combined torture: one streaming run with EVERYTHING adversarial
 at once — out-of-order segments, duplicate delivery, a truncate, a lossy
 retype chain (string -> long -> string), control frames (B|/C|) on the wire,
-a mid-run crash + resume, and a dedup winner budget forced to the wide
-fallback. Final state must still byte-match the LSN-ordered oracle."""
+a mid-run crash + resume, and maintenance mid-stream. Final state must
+still byte-match the LSN-ordered oracle."""
 
 import os
 
 from pyspark.sql import functions as F
 
-from cdc_spark import dedup
 from cdc_spark.config import ENVELOPE_DDL, EngineConfig
 from cdc_spark.loggen import change_log, to_frames, write_segments
 from cdc_spark.oracle import assert_matches, replay
@@ -21,9 +20,7 @@ CHANGES = {
 }
 
 
-def test_everything_at_once_crash_resume(
-    spark, tmpdir_factory_clean, monkeypatch
-):
+def test_everything_at_once_crash_resume(spark, tmpdir_factory_clean):
     root = tmpdir_factory_clean("t2")
     log = change_log(
         spark, 3000, n_repos=20, n_paths=6, delete_rate=0.1, dup_rate=0.05,
@@ -49,8 +46,6 @@ def test_everything_at_once_crash_resume(
         max_files_per_trigger=3,
         compact_every=3,  # maintenance mid-stream too
     )
-    # force the wide dedup fallback every batch
-    monkeypatch.setattr(dedup, "NARROW_MAX_WINNERS", 1)
     # crash after 2 batches, then resume from the checkpoint
     q, _ = start_stream(
         spark, os.path.join(root, "wal"), cfg, framed=True,
