@@ -13,7 +13,9 @@ This is the consumer the reference leaves as ``NotImplementedError``
 3. one LWW max-LSN reduce per (repo, path), a single pass over the batch
    (A2/A3);
 4. copy-on-write merge into the lake with one idempotent commit per
-   (batch, table), keyed by (epoch, lsn_hwm) (E1/E2);
+   (batch, table), keyed by (epoch, lsn_hwm) (E1/E2): every bucket the
+   batch touches is rewritten as one file by the same LWW reduce (see
+   ``LakeTable.merge``);
 5. a per-bucket lineage row (applied LSN range, upsert/delete counts, commit
    latency) appended to a queryable metrics table (C5 — the engine analog of
    the reference's DogStatsd timings, ``cdc/utils/stats.py:44-65``).
@@ -31,7 +33,6 @@ from .config import BASE_FIELDS, DML_OPS, EngineConfig
 from .dedup import lww_dedup
 from .lake import (
     LakeTable,
-    _coalesce_ranges,
     bucket_expr,
     chain_for_column,
     fold_cast_expr,
@@ -40,57 +41,6 @@ from .lake import (
 )
 from .parse import BASE_COLUMNS
 
-
-def _fold_bstats(raw: list) -> tuple[list, dict]:
-    """Fold the (bucket, key-prefix block) lineage rows to per-bucket
-    stats + the batch's per-bucket key INTERVAL lists (coalesced to the
-    lake's MAX_KEY_RANGES). Driver-side arithmetic over the already tiny
-    collect — no extra job. The intervals are what lets the merge skip a
-    cold file even when the batch also touches a far-away hot cluster."""
-    by_bucket: dict = {}
-    for r in raw:
-        d = by_bucket.get(r["bucket"])
-        if d is None:
-            d = by_bucket[r["bucket"]] = {
-                "bucket": r["bucket"],
-                "min_lsn": r["min_lsn"], "max_lsn": r["max_lsn"],
-                "upserts": 0, "deletes": 0,
-                "min_key": r["min_key"], "max_key": r["max_key"],
-                "_ranges": [],
-            }
-        d["min_lsn"] = min(d["min_lsn"], r["min_lsn"])
-        d["max_lsn"] = max(d["max_lsn"], r["max_lsn"])
-        d["upserts"] += r["upserts"]
-        d["deletes"] += r["deletes"]
-        if r["min_key"] is not None and r["max_key"] is not None:
-            # the accumulated value can be None (an all-null-key prefix
-            # group seen first for this bucket) — min(None, x) would raise
-            d["min_key"] = (
-                r["min_key"] if d["min_key"] is None
-                else min(d["min_key"], r["min_key"])
-            )
-            d["max_key"] = (
-                r["max_key"] if d["max_key"] is None
-                else max(d["max_key"], r["max_key"])
-            )
-            d["_ranges"].append([r["min_key"], r["max_key"]])
-    bstats, bucket_ranges = [], {}
-    for bkt in sorted(by_bucket):
-        d = by_bucket[bkt]
-        rs = sorted(d.pop("_ranges"), key=lambda x: (x[0], x[1]))
-        bucket_ranges[bkt] = (
-            _coalesce_ranges(rs) if rs else [[d["min_key"], d["max_key"]]]
-        )
-        bstats.append(d)
-    return bstats, bucket_ranges
-
-
-#: key-prefix block width for the batch-side multi-interval range stats:
-#: the lineage job groups by (bucket, first key column's string-cast prefix
-#: of this length). The collect stays n_buckets x distinct prefixes present;
-#: intervals are coalesced to <= lake.MAX_KEY_RANGES per bucket, and the
-#: width only affects pruning precision, never correctness.
-KEY_BLOCK_PREFIX = 4
 
 METRICS_DDL = (
     "table STRING, batch_id BIGINT, bucket INT, min_lsn BIGINT, max_lsn BIGINT, "
@@ -293,21 +243,12 @@ class CdcApply:
         # reduce, partial-aggregated below its key exchange
         deduped = lww_dedup(projected, key=key, order_col="_lsn").persist()
         try:
-            # ONE job yields the lineage stats, the affected-bucket list,
-            # AND the batch's per-bucket key intervals the merge needs for
-            # file pruning. Grouping adds a key-prefix block so a batch
-            # spanning hot + cold key clusters reports per-cluster
-            # intervals instead of one folded range (round-3's caveat:
-            # a folded range defeats the skip); collected rows stay
-            # O(n_buckets x distinct prefix blocks), folded driver-side.
-            group_cols = [
-                bucket_expr(lake.key, lake.n_buckets).alias("bucket"),
-                F.substring(
-                    F.col(key[0]).cast("string"), 1, KEY_BLOCK_PREFIX
-                ).alias("_blk"),
-            ]
-            raw = (
-                deduped.groupBy(*group_cols)
+            # ONE job yields the per-bucket lineage stats and the
+            # affected-bucket list the merge rewrites
+            bstats = sorted(
+                deduped.groupBy(
+                    bucket_expr(lake.key, lake.n_buckets).alias("bucket")
+                )
                 .agg(
                     F.min("_lsn").alias("min_lsn"),
                     F.max("_lsn").alias("max_lsn"),
@@ -317,12 +258,10 @@ class CdcApply:
                     F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias(
                         "deletes"
                     ),
-                    F.min(key[0]).alias("min_key"),
-                    F.max(key[0]).alias("max_key"),
                 )
-                .collect()
+                .collect(),
+                key=lambda r: r["bucket"],
             )
-            bstats, bucket_ranges = _fold_bstats(raw)
             info = lake.merge(
                 deduped,
                 batch_id=batch_id,
@@ -334,8 +273,6 @@ class CdcApply:
                 ),
                 new_truncate_lsn=t_new,
                 affected_buckets=[r["bucket"] for r in bstats],
-                batch_rows=sum(r["upserts"] + r["deletes"] for r in bstats),
-                bucket_key_ranges=bucket_ranges,
             )
             self._write_metrics(table, batch_id, bstats, info, t0)
             if self.cfg.neardup_index:

@@ -691,8 +691,7 @@ MAX_SHINGLE_DF = 64
 REL_SHINGLE_DF = 0.01
 #: broadcast budget (rows) for the sub-cap (source, shingle) key set in the
 #: stop-shingle filter join — ~16 B/row payload, so 4M rows is tens of MB
-#: framed; above it the filter falls back to a shuffle join (same guard
-#: discipline as lake.broadcast_max_rows)
+#: framed; above it the filter falls back to a shuffle join
 RARE_BROADCAST_MAX_ROWS = 4_000_000
 
 

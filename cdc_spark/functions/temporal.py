@@ -238,11 +238,11 @@ def asof_join_relational(events, orders, *, on="user_id", left_ts="ts",
 def asof_join(events, orders, *, on="user_id", left_ts="ts",
               right_ts="o_orderdate", event_key="event_id", right_order=(),
               max_fanout=10_000):
-    """Fan-out-aware strategy pick (same discipline as the lake merge's
-    ``batch_rows`` switch): probe the hottest key's right-side count — an
-    O(keys) aggregate reduced to ONE driver row — and route to the cogrouped
-    ``merge_asof`` when a skewed key would explode the range join's
-    |left/key| x |right/key| intermediate. Returns (DataFrame, strategy)."""
+    """Fan-out-aware strategy pick: probe the hottest key's right-side
+    count — an O(keys) aggregate reduced to ONE driver row — and route to
+    the cogrouped ``merge_asof`` when a skewed key would explode the range
+    join's |left/key| x |right/key| intermediate. Returns (DataFrame,
+    strategy)."""
     hot = orders.groupBy(on).count().agg(F.max("count").alias("m")).first()
     if (hot["m"] or 0) > max_fanout:
         out = asof_join_pandas(

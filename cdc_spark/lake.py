@@ -24,20 +24,15 @@ Manifest fields:
     schema_changes            -- RAW (lsn, change_json) history; validity is
                                  re-derived on every read via replay_changes
     files                     -- [{path, bucket, schema_id, change_lsn,
-                                 min_key, max_key, key_ranges, rows}]
+                                 min_key, max_key, rows}]
                                  (paths rel. root; change_lsn = the highest
                                  schema-change LSN applied at write time —
                                  an LSN stamp, NOT a list position, because
                                  out-of-order control events insert into the
                                  MIDDLE of the LSN-sorted history and would
                                  shift positional indexes under existing
-                                 files; min/max_key = folded first-key-column
-                                 range, key_ranges = per-row-group interval
-                                 list (<= MAX_KEY_RANGES, round 4+ — keeps a
-                                 mixed hot+cold file's gap visible to the
-                                 skip test; absent in legacy manifests, where
-                                 pruning falls back to min/max),
-                                 rows = row count)
+                                 files; min/max_key = the first key column's
+                                 footer range, rows = row count)
     truncate_lsn              -- table-truncate watermark (O(1) truncate)
     last_batch                -- {id, lsn_hwm}: idempotent-commit key (E2);
                                  commits are keyed by (checkpoint epoch,
@@ -47,13 +42,14 @@ Scale design:
 - Data files are hash-bucketed on the merge key: a copy-on-write merge
   rewrites ONLY buckets containing batch keys (file pruning via the
   manifest), so write amplification is bounded by batch key spread, not
-  table size. At 100 TB use thousands of buckets so one bucket ~= one
-  executor's working set.
+  table size, and each rewritten bucket comes out as exactly one file.
+  At 100 TB use thousands of buckets so one bucket ~= one executor's
+  working set.
 - Old-schema files are never rewritten on schema evolution; reads project
   them into the current schema lazily (add -> null, drop -> pruned at the
   parquet scan, retype -> try_cast), exactly Iceberg's lazy evolution.
-- Rows are sorted within files by key (``sortWithinPartitions``) so bucket
-  merges are sorted-merge friendly and key ranges cluster for min/max skip.
+- Rows are sorted within files by key (``sortWithinPartitions``), so a
+  file's footer [min, max] is the exact range point reads prune on.
 - Tombstones: deletes keep a ``_deleted`` row carrying its LSN so later
   out-of-order (stale) updates for the key still lose the LWW race;
   ``compact()`` drops tombstones older than a caller-supplied watermark.
@@ -180,49 +176,13 @@ def bucket_expr(key: tuple[str, ...], n_buckets: int):
     return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
 
 
-#: per-file interval cap: row-group intervals beyond this are coalesced by
-#: merging the SMALLEST gaps first, so the kept intervals preserve the
-#: largest holes — the ones that actually let a merge skip the file
-MAX_KEY_RANGES = 8
-
-
-def _coalesce_ranges(ranges: list, cap: int = MAX_KEY_RANGES) -> list:
-    """Merge overlapping/adjacent [lo, hi] intervals (inputs sorted by lo),
-    then reduce to <= cap by closing the narrowest gaps."""
-    out: list = []
-    for lo, hi in ranges:
-        if out and lo <= out[-1][1]:
-            if hi > out[-1][1]:
-                out[-1][1] = hi
-        else:
-            out.append([lo, hi])
-    while len(out) > cap:
-        # find the narrowest inter-interval gap and merge across it.
-        # "narrowest" needs a numeric width; for string keys fall back to
-        # merging the first pair (still correct, just less selective)
-        best, best_w = 0, None
-        for i in range(len(out) - 1):
-            a, b = out[i][1], out[i + 1][0]
-            w = (b - a) if isinstance(a, int) and isinstance(b, int) else None
-            if best_w is None or (w is not None and (best_w is False or w < best_w)):
-                best, best_w = i, (w if w is not None else False)
-        out[best][1] = out[best + 1][1]
-        del out[best + 1]
-    return out
-
-
 def _file_key_stats(path: str, key_col: str) -> tuple:
-    """(min, max, rows, key_ranges) of ``key_col`` from the parquet FOOTER
-    — a driver-side metadata read (no data scan, no job). Rows are
-    key-sorted within files, so footer min/max are exact cluster bounds;
-    ``merge`` uses them to skip files whose key range cannot intersect a
-    batch (Iceberg's lower/upper_bounds file skipping). ``key_ranges`` is
-    the PER-ROW-GROUP interval list (coalesced to <= MAX_KEY_RANGES):
-    single-interval stats go blind the moment one file holds both a hot
-    and a cold key cluster (its folded range spans everything), while the
-    row-group intervals keep the gap visible, so the mixed file still
-    skips batches that fall into the hole. Returns (None, None, rows,
-    None) when the writer produced no stats (pruning then never skips)."""
+    """(min, max, rows) of ``key_col`` from the parquet FOOTER — a
+    driver-side metadata read (no data scan, no job). Rows are key-sorted
+    within files, so footer min/max are exact cluster bounds; point reads
+    use them to skip files that cannot hold a key (Iceberg's
+    lower/upper_bounds file skipping). Returns (None, None, rows) when the
+    writer produced no stats (pruning then never skips)."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
@@ -232,36 +192,21 @@ def _file_key_stats(path: str, key_col: str) -> tuple:
             idx = i
             break
     lo = hi = None
-    ranges = []
     for g in range(md.num_row_groups):
         st = md.row_group(g).column(idx).statistics if idx is not None else None
         if st is None or not st.has_min_max:
-            return None, None, md.num_rows, None
+            return None, None, md.num_rows
         mn, mx = st.min, st.max
         if isinstance(mn, bytes):
             try:
                 mn, mx = mn.decode(), mx.decode()
             except UnicodeDecodeError:
-                return None, None, md.num_rows, None
-        ranges.append([mn, mx])
+                return None, None, md.num_rows
         lo = mn if lo is None or mn < lo else lo
         hi = mx if hi is None or mx > hi else hi
     if not isinstance(lo, (str, int)) or type(lo) is not type(hi):
-        return None, None, md.num_rows, None
-    ranges.sort(key=lambda r: (r[0], r[1]))
-    return lo, hi, md.num_rows, _coalesce_ranges(ranges)
-
-
-def _file_ranges(f: dict) -> list | None:
-    """A manifest file entry's pruning intervals: the row-group ranges when
-    stamped (round 4+), else the folded [min, max] (legacy manifests), else
-    None (no stats — never skip)."""
-    if f.get("key_ranges"):
-        return f["key_ranges"]
-    mn, mx = f.get("min_key"), f.get("max_key")
-    if mn is None or mx is None:
-        return None
-    return [[mn, mx]]
+        return None, None, md.num_rows
+    return lo, hi, md.num_rows
 
 
 def chain_for_column(
@@ -357,25 +302,12 @@ def project_to(
 
 
 class LakeTable:
-    #: above this many batch rows the broadcast 'join' merge strategy falls
-    #: back to the shuffle 'agg' strategy (a broadcast must fit executor mem)
-    broadcast_max_rows = 5_000_000
     #: range shards per 'append' (merge-on-read) delta commit: each shard is
     #: one key-sorted file with tight footer ranges, so later point-set
     #: reads (``files_for_key_values``) skip deltas that cannot contain the
     #: probed keys. Size to ~cluster write parallelism in production; small
     #: here so per-batch file count stays bounded between compactions.
     append_shards = 4
-    #: the 'join' strategy's costs scale with |batch keys| (two key-set
-    #: broadcasts: the batch's (key, lsn) set and the stale set) while its
-    #: benefit — touched lake rows crossing NO exchange — scales with the
-    #: touched lake size. When the batch is comparable to the touched lake
-    #: (bulk loads, full-churn replays) the single-shuffle 'agg' reduce is
-    #: faster (measured ~1.5 s/20M-event batch at batch == lake == 2.7M
-    #: keys); 'join' stays the pick whenever touched lake rows exceed
-    #: batch rows by this factor — the trickle-CDC regime the strategy
-    #: exists for, and the only regime that matters at 100 TB.
-    join_min_lake_ratio = 4
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -398,11 +330,11 @@ class LakeTable:
         appends of key-range-sharded delta files (``strategy='append'``) and
         the LWW winner per key is resolved at READ time (``_lww_resolve``);
         ``compact()`` folds the deltas back to one row per key. This is the
-        layout for uniformly-hashed keys (e.g. fingerprint indexes), where a
-        copy-on-write merge can never skip files — every batch's key set
-        intersects every file's range — so COW write amplification would be
-        O(table) per batch. MOR files carry bucket = -1 (range-sharded, not
-        hash-bucketed); point reads prune on footer key ranges alone."""
+        layout for uniformly-hashed keys (e.g. fingerprint indexes), where
+        every batch touches every bucket, so a copy-on-write merge would
+        rewrite O(table) per batch. MOR files carry bucket = -1
+        (range-sharded, not hash-bucketed); point reads prune on footer key
+        ranges alone."""
         os.makedirs(os.path.join(root, "metadata"), exist_ok=True)
         meta = {
             "version": 0,
@@ -576,7 +508,7 @@ class LakeTable:
         """Per-key LWW winner for merge-on-read tables: deltas appended by
         ``strategy='append'`` can carry several rows per key across files;
         the visible row is the max-LSN one (``dedup.lww_dedup``, the same
-        reduce the COW 'agg' merge strategy runs at write time).
+        reduce the copy-on-write merge runs at write time).
         Partial-aggregated, so the shuffle carries one row per key per map
         partition."""
         return lww_dedup(df, key=self.key, order_col="_lsn")
@@ -665,11 +597,9 @@ class LakeTable:
             # key — prune it by range only
             if f["bucket"] not in (bucket, -1):
                 continue
-            ranges = _file_ranges(f)
+            mn, mx = f.get("min_key"), f.get("max_key")
             try:
-                if ranges is not None and all(
-                    k1 < mn or k1 > mx for mn, mx in ranges
-                ):
+                if mn is not None and mx is not None and not mn <= k1 <= mx:
                     continue
             except TypeError:
                 pass  # mixed-type stats: keep the file
@@ -690,17 +620,14 @@ class LakeTable:
         vals = sorted(v for v in set(values) if v is not None)
         out = []
         for f in self._meta["files"]:
-            ranges = _file_ranges(f)
-            if ranges is None or not vals:
-                if ranges is None:
-                    out.append(f)
+            lo, hi = f.get("min_key"), f.get("max_key")
+            if lo is None or hi is None:
+                out.append(f)
                 continue
             try:
-                for lo, hi in ranges:
-                    i = bisect.bisect_left(vals, lo)
-                    if i < len(vals) and vals[i] <= hi:
-                        out.append(f)
-                        break
+                i = bisect.bisect_left(vals, lo)
+                if i < len(vals) and vals[i] <= hi:
+                    out.append(f)
             except TypeError:  # mixed-type stats vs values: keep the file
                 out.append(f)
         return out
@@ -777,7 +704,7 @@ class LakeTable:
                 if not part.endswith(".parquet"):
                     continue
                 full = os.path.join(dirpath, part)
-                mn, mx, nrows, ranges = _file_key_stats(full, self.key[0])
+                mn, mx, nrows = _file_key_stats(full, self.key[0])
                 rel = os.path.relpath(full, self.root)
                 out.append(
                     {
@@ -787,7 +714,6 @@ class LakeTable:
                         "change_lsn": change_lsn,
                         "min_key": mn,
                         "max_key": mx,
-                        "key_ranges": ranges,
                         "rows": nrows,
                     }
                 )
@@ -803,9 +729,7 @@ class LakeTable:
         new_truncate_lsn: int | None = None,
         extra_summary: dict | None = None,
         affected_buckets: list[int] | None = None,
-        batch_rows: int | None = None,
         new_schema_changes: list | None = None,
-        bucket_key_ranges: dict | None = None,
     ) -> dict:
         """Copy-on-write upsert of a deduped batch + single atomic commit.
 
@@ -816,28 +740,16 @@ class LakeTable:
         a batch_id at or below the last committed one is skipped wholesale
         (exactly-once under Spark's replay-on-restart, E2).
 
-        Three physical strategies (result-identical, covered by the same
-        oracle tests), reported as ``info["strategy"]``:
+        The table layout decides the plan, reported as ``info["strategy"]``:
 
-        - ``append``: exactly the merge-on-read tables' commit (see
-          ``create``); COW tables take ``join`` or ``agg``.
-        - ``join`` (default when the batch is broadcastable): lake bytes
-          NEVER shuffle. The deduped batch's (key, lsn) set is broadcast;
-          survivors of the old files are a map-side left join + filter,
-          stale batch rows are a map-side inner join, and only the (small)
-          batch side repartitions by bucket. Per batch the touched lake
-          data flows parquet-scan -> map filter -> parquet-write exactly
-          once — the shape that survives 100 TB, where shuffling the lake
-          through an exchange would dominate (and this VM's memory-bandwidth
-          ceiling shows exactly that effect locally).
-        - ``agg``: union old+batch, per-key max_by reduce (partial-
-          aggregated), repartition by bucket. Shuffles touched lake rows;
-          taken when ``batch_rows`` exceeds ``broadcast_max_rows`` or the
-          touched lake rows are fewer than ``batch_rows *
-          join_min_lake_ratio``.
-
-        ``batch_rows`` (when known, e.g. from the caller's lineage job)
-        drives that pick; without it a COW merge takes ``join``.
+        - ``append``: merge-on-read tables (see ``create``) commit the batch
+          as new delta files; no old file is read.
+        - ``agg``: copy-on-write tables union the touched buckets' files
+          with the batch, run the one LWW reduce (``dedup.lww_dedup``,
+          partial-aggregated below its key exchange), repartition by bucket
+          and write each touched bucket back as ONE key-sorted file. Cost
+          is O(touched buckets).
+        - ``None``: no batch rows (a manifest-only commit).
         """
         cur = self._meta
         if batch_id <= cur["last_batch"]["id"]:
@@ -914,114 +826,26 @@ class LakeTable:
                 affected = sorted(
                     r[0] for r in b.select("_bucket").distinct().collect()
                 )
-        if affected and not appended:
+        if affected:
             touched = [f for f in cur["files"] if f["bucket"] in affected]
             untouched = [f for f in cur["files"] if f["bucket"] not in affected]
-            # batch over the broadcast budget, or ~ touched-lake-sized: the
-            # two key-set broadcasts cost more than one shuffle of the union
-            # — take agg (see join_min_lake_ratio; manifest row counts, no
-            # job)
-            touched_rows = sum(f.get("rows") or 0 for f in touched)
-            strategy = "join"
-            if batch_rows is not None and (
-                batch_rows > self.broadcast_max_rows
-                or 0 < touched_rows < batch_rows * self.join_min_lake_ratio
-            ):
-                strategy = "agg"
-            if bucket_key_ranges:
-                # file skipping WITHIN an affected bucket: a file ALL of
-                # whose key intervals (per-row-group, so a mixed hot+cold
-                # file keeps its gap visible) are disjoint from the batch's
-                # range for that bucket cannot contain any batch key (so no
-                # LWW race either way) — leave it in place instead of
-                # rewriting the hot bucket wholesale. ``bucket_key_ranges``
-                # comes from the caller's existing lineage aggregation
-                # (zero extra jobs)
-                kept = []
-                for f in touched:
-                    rng = bucket_key_ranges.get(f["bucket"])
-                    ranges = _file_ranges(f)
-                    try:
-                        # batch side: either a legacy (min, max) tuple or a
-                        # round-4 interval list (per key-prefix block) —
-                        # disjoint iff every (file, batch) interval pair is
-                        if rng and not isinstance(rng[0], (list, tuple)):
-                            rng = [rng]
-                        disjoint = (
-                            bool(rng)
-                            and ranges is not None
-                            and all(r0 is not None for r0, _ in rng)
-                            and all(
-                                fmax < r0 or fmin > r1
-                                for fmin, fmax in ranges
-                                for r0, r1 in rng
-                            )
-                        )
-                    except TypeError:  # mixed-type stats: never skip
-                        disjoint = False
-                    (untouched if disjoint else kept).append(f)
-                touched = kept
+            strategy = "agg"
             key = list(self.key)
-
-            def _load_old(file_list):
-                o = self._read_files(
-                    file_list, final_fields, changes=parsed_changes
+            merged = b
+            old = self._read_files(touched, final_fields, changes=parsed_changes)
+            if old is not None:
+                # rows killed by a truncate are GC'd while we rewrite
+                old = old.withColumn(
+                    "_bucket", bucket_expr(self.key, self.n_buckets)
+                ).filter(F.col("_lsn") > F.lit(truncate_lsn))
+                merged = lww_dedup(
+                    old.unionByName(b), key=key, order_col="_lsn"
                 )
-                if o is not None:
-                    o = o.withColumn(
-                        "_bucket", bucket_expr(self.key, self.n_buckets)
-                    )
-                    # rows killed by a truncate can be GC'd while we rewrite
-                    o = o.filter(F.col("_lsn") > F.lit(truncate_lsn))
-                return o
-
-            def _join_merge(o, bb, n_parts):
-                # broadcast the batch's (key, lsn) set; lake rows never
-                # shuffle
-                bk = F.broadcast(
-                    bb.select(*key, F.col("_lsn").alias("_b_lsn"))
-                )
-                # old survivors: no batch row for the key, or batch is
-                # stale (ties -> old wins: identical redeliveries)
-                keep_old = (
-                    o.join(bk, key, "left")
-                    .filter(
-                        F.col("_b_lsn").isNull()
-                        | (F.col("_b_lsn") <= F.col("_lsn"))
-                    )
-                    .drop("_b_lsn")
-                )
-                # batch rows beaten by an existing newer/equal row
-                # (map-side inner join over old; at most |batch| keys out)
-                stale = (
-                    o.join(bk, key, "inner")
-                    .filter(F.col("_lsn") >= F.col("_b_lsn"))
-                    .select(*key)
-                )
-                keep_batch = bb.join(F.broadcast(stale), key, "left_anti")
-                return keep_old.unionByName(
-                    keep_batch.repartition(max(n_parts, 1), "_bucket")
-                ).sortWithinPartitions("_bucket", *key)
-
-            def _agg_merge(o, bb, n_parts):
-                m = o.unionByName(bb) if o is not None else bb
-                return (
-                    lww_dedup(m, key=key, order_col="_lsn")
-                    .repartition(max(n_parts, 1), "_bucket")
-                    .sortWithinPartitions("_bucket", *key)
-                )
-
-            old = _load_old(touched)
-            if old is None:
-                merged = b.repartition(
-                    max(len(affected), 1), "_bucket"
-                ).sortWithinPartitions("_bucket", *key)
-            elif strategy == "join":
-                merged = _join_merge(old, b, len(affected))
-            else:
-                # partial aggregation collapses per-key map-side before the
-                # single shuffle; sortWithinPartitions gives key-sorted files
-                merged = _agg_merge(old, b, len(affected))
+            # hash-partitioning on _bucket puts each bucket in one task, so
+            # each touched bucket is written back as one file
+            merged = merged.repartition(
+                len(affected), "_bucket"
+            ).sortWithinPartitions("_bucket", *key)
             # per-attempt unique staging dir: a writer that loses the manifest
             # race must leave only orphan files, never clobber the winner's
             # already-published data (its files are GC'd by expire_snapshots)

