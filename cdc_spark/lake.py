@@ -745,10 +745,10 @@ class LakeTable:
         - ``append``: merge-on-read tables (see ``create``) commit the batch
           as new delta files; no old file is read.
         - ``agg``: copy-on-write tables union the touched buckets' files
-          with the batch, run the one LWW reduce (``dedup.lww_dedup``,
-          partial-aggregated below its key exchange), repartition by bucket
-          and write each touched bucket back as ONE key-sorted file. Cost
-          is O(touched buckets).
+          with the batch, hash-partition the union by bucket (the plan's
+          one exchange), run the one LWW reduce (``dedup.lww_dedup``) per
+          (bucket, key) in place and write each touched bucket back as ONE
+          key-sorted file. Cost is O(touched buckets).
         - ``None``: no batch rows (a manifest-only commit).
         """
         cur = self._meta
@@ -831,21 +831,24 @@ class LakeTable:
             untouched = [f for f in cur["files"] if f["bucket"] not in affected]
             strategy = "agg"
             key = list(self.key)
-            merged = b
+            # ONE exchange: hash-partitioning on _bucket puts each bucket in
+            # one task, so each touched bucket is written back as one file
+            merged = b.repartition(len(affected), "_bucket")
             old = self._read_files(touched, final_fields, changes=parsed_changes)
             if old is not None:
                 # rows killed by a truncate are GC'd while we rewrite
                 old = old.withColumn(
                     "_bucket", bucket_expr(self.key, self.n_buckets)
                 ).filter(F.col("_lsn") > F.lit(truncate_lsn))
+                # the reduce groups by (_bucket, key) — the same groups, as
+                # the bucket is a function of the key — which that
+                # partitioning already clusters: no second (key) exchange
                 merged = lww_dedup(
-                    old.unionByName(b), key=key, order_col="_lsn"
+                    old.unionByName(b).repartition(len(affected), "_bucket"),
+                    key=["_bucket", *key],
+                    order_col="_lsn",
                 )
-            # hash-partitioning on _bucket puts each bucket in one task, so
-            # each touched bucket is written back as one file
-            merged = merged.repartition(
-                len(affected), "_bucket"
-            ).sortWithinPartitions("_bucket", *key)
+            merged = merged.sortWithinPartitions("_bucket", *key)
             # per-attempt unique staging dir: a writer that loses the manifest
             # race must leave only orphan files, never clobber the winner's
             # already-published data (its files are GC'd by expire_snapshots)

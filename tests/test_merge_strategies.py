@@ -1,5 +1,5 @@
 """A copy-on-write merge runs one plan, 'agg' (union the touched buckets'
-files with the batch, one LWW reduce, repartition by bucket): it must match
+files with the batch, repartition by bucket, one LWW reduce): it must match
 the LSN oracle and write each touched bucket back as exactly one file."""
 
 import os
@@ -7,7 +7,8 @@ import os
 from pyspark.sql import functions as F
 
 from cdc_spark.apply import CdcApply
-from cdc_spark.config import EngineConfig
+from cdc_spark.config import BASE_FIELDS, EngineConfig
+from cdc_spark.lake import LakeTable
 from cdc_spark.loggen import change_log
 from cdc_spark.oracle import assert_matches, replay
 
@@ -65,3 +66,40 @@ def test_cow_merge_writes_one_file_per_affected_bucket(
     lake = applier.lake_for("repos")
     assert sum(f["rows"] for f in lake.meta["files"]) > 4 * 150
     assert_matches(lake.read().toPandas(), replay(log.toPandas(), cfg.base_fields))
+
+
+def test_cow_merge_shuffles_once_by_bucket(spark, tmpdir_factory_clean,
+                                           monkeypatch):
+    """The COW merge plan has ONE exchange, hash-partitioned on the bucket:
+    the LWW reduce groups by (bucket, key) inside that partitioning and
+    adds no key exchange of its own. The later batch still wins."""
+    root = tmpdir_factory_clean("oneexchange")
+    lake = LakeTable.create(
+        spark, os.path.join(root, "t"), fields=list(BASE_FIELDS), n_buckets=4
+    )
+    ddl = ("repo STRING, path STRING, `commit` STRING, lang STRING, "
+           "content STRING, _lsn BIGINT, _deleted BOOLEAN, "
+           "_extra MAP<STRING,STRING>")
+
+    def batch(lsn0):
+        return spark.createDataFrame(
+            [(f"repo-{i}", "a.py", "c", "py", f"v{lsn0 + i}", lsn0 + i,
+              False, None) for i in range(40)],
+            ddl,
+        )
+
+    plans = []
+    write = LakeTable._write_data
+
+    def spy(self, merged, out_dir):
+        plans.append(merged._jdf.queryExecution().executedPlan().toString())
+        write(self, merged, out_dir)
+
+    monkeypatch.setattr(LakeTable, "_write_data", spy)
+    lake.merge(batch(100), batch_id=0, lsn_hwm=200)
+    info = lake.merge(batch(300), batch_id=1, lsn_hwm=400)
+    assert info["strategy"] == "agg" and len(info["affected_buckets"]) > 1
+    exchanges = [l for l in plans[-1].splitlines() if "Exchange " in l]
+    assert len(exchanges) == 1 and "_bucket" in exchanges[0], plans[-1]
+    got = {r["repo"]: r["content"] for r in lake.read().collect()}
+    assert got == {f"repo-{i}": f"v{300 + i}" for i in range(40)}
