@@ -10,11 +10,11 @@ SURVEY.md) re-expressed Spark-first:
                  expressions (reference ``parse_message_with_headers``,
                  ``postgres_logical.py:37-80``).
 - ``dedup``    — last-writer-wins max-LSN reduce per (repo, path).
-- ``lake``     — Iceberg-semantics lake table: parquet data files bucketed by
-                 key hash + atomic JSON snapshot log, idempotent commits keyed
-                 by (epoch, lsn high-watermark), lazy schema evolution,
-                 copy-on-write merge (the reference's absent consumer side,
-                 ``cdc/__main__.py:87-92``).
+- ``lake``     — Iceberg-semantics lake table: key-sorted parquet data files
+                 + atomic JSON snapshot log, idempotent commits keyed by
+                 (epoch, lsn high-watermark), lazy schema evolution,
+                 merge-on-read appends folded by compaction (the
+                 reference's absent consumer side, ``cdc/__main__.py:87-92``).
 - ``apply``    — the foreachBatch body: control-event extraction, epoch schema
                  projection, dedup, merge, lineage metrics.
 - ``stream``   — Structured Streaming wiring (readStream over WAL segments,

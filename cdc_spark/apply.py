@@ -1,5 +1,5 @@
 """The foreachBatch body: control-event extraction, epoch schema projection,
-LWW dedup, copy-on-write merge, lineage metrics.
+LWW dedup, lake merge, lineage metrics.
 
 This is the consumer the reference leaves as ``NotImplementedError``
 (``/root/reference/cdc/__main__.py:87-92``), built to the north rule:
@@ -12,10 +12,10 @@ This is the consumer the reference leaves as ``NotImplementedError``
    at the correct LSN, E3);
 3. one LWW max-LSN reduce per (repo, path), a single pass over the batch
    (A2/A3);
-4. copy-on-write merge into the lake with one idempotent commit per
-   (batch, table), keyed by (epoch, lsn_hwm) (E1/E2): every bucket the
-   batch touches is rewritten as one file by the same LWW reduce (see
-   ``LakeTable.merge``);
+4. merge into the lake with one idempotent commit per (batch, table), keyed
+   by (epoch, lsn_hwm) (E1/E2): the deduped batch is appended as
+   key-range-sharded delta files, no old file is read or rewritten, and
+   reads resolve the max-LSN row per key (see ``LakeTable.merge``);
 5. a per-bucket lineage row (applied LSN range, upsert/delete counts, commit
    latency) appended to a queryable metrics table (C5 — the engine analog of
    the reference's DogStatsd timings, ``cdc/utils/stats.py:44-65``).
@@ -243,8 +243,7 @@ class CdcApply:
         # reduce, partial-aggregated below its key exchange
         deduped = lww_dedup(projected, key=key, order_col="_lsn").persist()
         try:
-            # ONE job yields the per-bucket lineage stats and the
-            # affected-bucket list the merge rewrites
+            # ONE job yields the per-bucket lineage stats
             bstats = sorted(
                 deduped.groupBy(
                     bucket_expr(lake.key, lake.n_buckets).alias("bucket")
@@ -263,7 +262,9 @@ class CdcApply:
                 key=lambda r: r["bucket"],
             )
             info = lake.merge(
-                deduped,
+                # no rows for this table (control events only): a
+                # manifest-only commit, no empty delta file
+                deduped if bstats else None,
                 batch_id=batch_id,
                 lsn_hwm=ctrl["lsn_hwm"],
                 new_schemas=schemas if changes else None,
@@ -272,7 +273,6 @@ class CdcApply:
                     [[l, c] for l, c in all_changes] if changes else None
                 ),
                 new_truncate_lsn=t_new,
-                affected_buckets=[r["bucket"] for r in bstats],
             )
             self._write_metrics(table, batch_id, bstats, info, t0)
             if self.cfg.neardup_index:
@@ -289,8 +289,8 @@ class CdcApply:
         return info
 
     def _neardups_lake(self, table: str) -> LakeTable:
-        """The per-table candidate-pairs table — a merge-on-read LakeTable
-        keyed (doc_a, doc_b), so pair persistence inherits idempotent
+        """The per-table candidate-pairs table — a LakeTable keyed
+        (doc_a, doc_b), so pair persistence inherits idempotent
         batch commits (exactly-once through any crash/replay), LWW dedup
         of re-observed pairs, and normal lake maintenance."""
         lake = self._neardup_pairs.get(table)
@@ -306,7 +306,6 @@ class CdcApply:
                 key=("doc_a", "doc_b"),
                 n_buckets=self.cfg.n_buckets,
                 table=f"{table}_neardups",
-                merge_on_read=True,
             )
         return lake
 
@@ -440,7 +439,7 @@ class CdcApply:
         two halves the north rule describes: the CDC batch that just
         merged ALSO updates a persistent MinHash band index
         (:class:`~cdc_spark.functions.dedupe_index.MinHashIndex`, two
-        merge-on-read LakeTables), so signatures are computed for exactly
+        LakeTables), so signatures are computed for exactly
         the rows this batch changed and index IO touches only files
         holding the batch's keys — never the corpus, never the whole
         index. Each batch's candidate pairs are committed to the
@@ -560,10 +559,9 @@ class CdcApply:
             lake.expire_snapshots(keep_last=self.cfg.expire_keep)
             # the near-dup band index (both its lakes) and the pairs table
             # are lakes too: without maintenance they accumulate one
-            # manifest + one delta per batch forever — for merge-on-read
-            # tables compaction is ALSO what folds the deltas back to one
-            # row per key, keeping read-side resolve and point-set
-            # pruning costs flat
+            # manifest + one delta per batch forever — and compaction is
+            # what folds the deltas back to one row per key, keeping
+            # read-side resolve and point-set pruning costs flat
             idx = self._neardup_idx.get(t)
             aux = idx.maintenance_lakes() if idx is not None else []
             if self.cfg.neardup_index:

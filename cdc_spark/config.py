@@ -55,9 +55,10 @@ EVOLUTION_TYPES = (
 class EngineConfig:
     """Tuning knobs for the apply pipeline.
 
-    n_buckets: key-hash buckets for the lake layout. Copy-on-write merges
-        rewrite only affected buckets, so this bounds write amplification;
-        size it so one bucket's data fits an executor (thousands at 100 TB).
+    n_buckets: the number of range-clustered files ``LakeTable.compact``
+        folds a table into (size it so one file fits an executor), and the
+        grain of the per-bucket lineage rows in the metrics table. Merges
+        append O(batch) deltas whatever its value.
     shuffle_partitions: not read by the engine — the session's
         ``spark.sql.shuffle.partitions`` decides every shuffle's width. The
         bench drivers still pass it; not settable from YAML.
@@ -82,9 +83,11 @@ class EngineConfig:
     #: changing the hint later only affects NEW indexes.
     neardup_corpus_hint: int | None = None
     #: run lake maintenance every N committed batches (0 = off): compaction
-    #: (drop dead rows, consolidate bucket files) + snapshot expiry keeping
-    #: the newest ``expire_keep`` manifests. Cheap O(1) truncates and
-    #: tombstones accumulate physically until this runs.
+    #: (fold the delta files every merge appends into one row per key, drop
+    #: dead rows) + snapshot expiry keeping the newest ``expire_keep``
+    #: manifests. It also bounds the delta depth that reads and point
+    #: lookups pay; truncates and tombstones accumulate physically until
+    #: it runs.
     compact_every: int = 0
     expire_keep: int = 8
     #: tombstones older than this many LSNs behind the high-watermark are

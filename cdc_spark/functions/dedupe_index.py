@@ -16,9 +16,9 @@ index per batch either. The two lakes:
   derived from the batch plus a doc-id-pruned point lookup on the
   doc-major lake (old fingerprints to tombstone), never from an index scan.
 
-Both lakes are merge-on-read: their keys are uniform hashes, so a
-copy-on-write merge could never skip a file and would rewrite the whole
-index every batch. MOR commits append O(batch) range-sharded deltas; reads
+Like every LakeTable, both lakes are merge-on-read: commits append
+O(batch) range-sharded deltas (their keys are uniform hashes, so a
+rewrite-on-merge layout would rewrite the whole index every batch); reads
 LWW-resolve; normal lake maintenance compacts. Per-batch cost is therefore
 O(batch + files touched by the batch's keys) in reads, writes, AND
 shuffles — never O(index).
@@ -188,7 +188,6 @@ class PostingsIndex:
             key=doc_key,
             n_buckets=n_buckets,
             table=f"{table_prefix}_{doc_lake}",
-            merge_on_read=True,
         )
         self.post = LakeTable.open_or_create(
             spark,
@@ -197,7 +196,6 @@ class PostingsIndex:
             key=POSTING_KEY,
             n_buckets=n_buckets,
             table=f"{table_prefix}_postings",
-            merge_on_read=True,
         )
         self.last_update_stats: dict = {}
 
@@ -560,8 +558,6 @@ class MinHashIndex(PostingsIndex):
             spark, root, "bands", INDEX_FIELDS, INDEX_KEY, "minhash",
             n_buckets,
         )
-        self._ensure_mor(self.lake)
-        self._ensure_mor(self.post)
         last = self.lake.last_batch
         if self.post.last_batch["id"] < 0 <= last["id"]:
             # round-4 index upgraded in place: backfill the postings lake
@@ -587,27 +583,6 @@ class MinHashIndex(PostingsIndex):
             except ConcurrentCommitError:
                 pass  # a concurrent opener committed the same backfill
             self.post.refresh()
-
-    @staticmethod
-    def _ensure_mor(lake: LakeTable) -> None:
-        """Upgrade a round-4 (copy-on-write) index lake in place: its files
-        already hold one row per key, so flipping merge_on_read on is a
-        pure metadata commit (resolve over one-row-per-key is identity)."""
-        if lake.meta.get("merge_on_read"):
-            return
-        from ..lake import ConcurrentCommitError
-
-        meta = dict(lake.meta)
-        meta.update(
-            merge_on_read=True,
-            version=lake.version + 1,
-            parent=lake.version,
-        )
-        try:
-            lake._publish(lake.root, meta)
-        except ConcurrentCommitError:
-            pass  # another opener published the upgrade first
-        lake.refresh()
 
     def bands(self) -> DataFrame:
         """The live index, doc-major: (doc_id, band, bkey)."""

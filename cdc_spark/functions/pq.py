@@ -839,7 +839,6 @@ class PqIndex:
         self.codes_lake = LakeTable.open_or_create(
             spark, os.path.join(root, "codes"), fields=list(self.FIELDS),
             key=self.KEY, n_buckets=n_buckets, table="pq_codes",
-            merge_on_read=True,
         )
         self.last_update_stats: dict = {}
 

@@ -11,8 +11,7 @@ success marker, ``file_snapshot.py:113-119``).
 Layout (one table per directory):
 
     <root>/metadata/v<N>.json               -- manifests, atomic link publish
-    <root>/data/v<N>-<attempt>/_bucket=K/*.parquet
-                                            -- per-ATTEMPT staging dirs: a
+    <root>/data/v<N>-<attempt>/*.parquet    -- per-ATTEMPT staging dirs: a
                                                writer losing the manifest
                                                race leaves orphans (GC'd by
                                                expire_snapshots), never
@@ -23,7 +22,7 @@ Manifest fields:
     schema_id, schemas        -- full schema-version history (E3)
     schema_changes            -- RAW (lsn, change_json) history; validity is
                                  re-derived on every read via replay_changes
-    files                     -- [{path, bucket, schema_id, change_lsn,
+    files                     -- [{path, schema_id, change_lsn,
                                  min_key, max_key, rows}]
                                  (paths rel. root; change_lsn = the highest
                                  schema-change LSN applied at write time —
@@ -38,13 +37,18 @@ Manifest fields:
                                  commits are keyed by (checkpoint epoch,
                                  LSN high-watermark) per the north rule
 
+Manifests written before every table was merge-on-read may also carry a
+layout flag and a per-file bucket number; both are ignored (a copy-on-write
+file holds one row per key, so resolving it is the identity).
+
 Scale design:
-- Data files are hash-bucketed on the merge key: a copy-on-write merge
-  rewrites ONLY buckets containing batch keys (file pruning via the
-  manifest), so write amplification is bounded by batch key spread, not
-  table size, and each rewritten bucket comes out as exactly one file.
-  At 100 TB use thousands of buckets so one bucket ~= one executor's
-  working set.
+- Every table is merge-on-read: a merge appends the batch as key-range
+  sharded, key-sorted delta files and never reads or rewrites an old file,
+  so a commit costs O(batch), not O(table). Reads, point lookups and
+  point-set scans resolve the max-LSN row per key across files
+  (``resolve_live``); ``compact()`` folds the deltas back into
+  ``n_buckets`` range-clustered files with one row per key, so the delta
+  depth reads pay is bounded by how often maintenance runs.
 - Old-schema files are never rewritten on schema evolution; reads project
   them into the current schema lazily (add -> null, drop -> pruned at the
   parquet scan, retype -> try_cast), exactly Iceberg's lazy evolution.
@@ -65,7 +69,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import lww_dedup
+from .dedup import _col
 
 _SQL_TYPES = {"string": "STRING", "long": "BIGINT", "double": "DOUBLE",
               "boolean": "BOOLEAN", "int": "INT", "timestamp": "TIMESTAMP",
@@ -171,7 +175,17 @@ def sql_type(t: str) -> str:
     raise KeyError(f"unsupported column type {t!r}")
 
 
+def _ddl(fields: list[tuple[str, str]]) -> str:
+    """Spark DDL of ``fields`` + META_FIELDS: the typed scan schema of a
+    data file and the schema of an empty frame."""
+    return ", ".join(
+        f"`{n}` {sql_type(t)}" for n, t in list(fields) + META_FIELDS
+    )
+
+
 def bucket_expr(key: tuple[str, ...], n_buckets: int):
+    """Key-hash bucket of each row: the grain of the apply path's per-batch
+    lineage rows (the lake layout itself is range-clustered)."""
     cols = [F.coalesce(F.col(k).cast("string"), F.lit("")) for k in key]
     return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
 
@@ -302,7 +316,7 @@ def project_to(
 
 
 class LakeTable:
-    #: range shards per 'append' (merge-on-read) delta commit: each shard is
+    #: range shards per delta commit (``merge``): each shard is
     #: one key-sorted file with tight footer ranges, so later point-set
     #: reads (``files_for_key_values``) skip deltas that cannot contain the
     #: probed keys. Size to ~cluster write parallelism in production; small
@@ -324,24 +338,15 @@ class LakeTable:
         key: tuple[str, ...] = ("repo", "path"),
         n_buckets: int = 16,
         table: str = "repos",
-        merge_on_read: bool = False,
     ) -> "LakeTable":
-        """``merge_on_read=True`` creates an MOR table: commits are O(batch)
-        appends of key-range-sharded delta files (``strategy='append'``) and
-        the LWW winner per key is resolved at READ time (``_lww_resolve``);
-        ``compact()`` folds the deltas back to one row per key. This is the
-        layout for uniformly-hashed keys (e.g. fingerprint indexes), where
-        every batch touches every bucket, so a copy-on-write merge would
-        rewrite O(table) per batch. MOR files carry bucket = -1
-        (range-sharded, not hash-bucketed); point reads prune on footer key
-        ranges alone."""
+        """Publish an empty table (version 0). ``n_buckets`` is the number of
+        range-clustered files ``compact()`` folds the table into."""
         os.makedirs(os.path.join(root, "metadata"), exist_ok=True)
         meta = {
             "version": 0,
             "table": table,
             "key": list(key),
             "n_buckets": n_buckets,
-            "merge_on_read": bool(merge_on_read),
             "schema_id": 0,
             "schemas": [{"schema_id": 0, "fields": [list(f) for f in fields]}],
             "schema_changes": [],
@@ -465,8 +470,9 @@ class LakeTable:
         files: list[dict],
         target_fields: list[tuple[str, str]],
         changes: list[dict] | None = None,
-    ) -> DataFrame | None:
-        """Read manifest files projected to ``target_fields`` (+META).
+    ) -> DataFrame:
+        """Read manifest files projected to ``target_fields`` (+META); no
+        files give an empty frame of that schema.
         Files are grouped by (schema_id, change_lsn) so each group is one
         pruned, pushdown-friendly parquet scan whose per-column cast chain
         (the changes with ``lsn > change_lsn`` — an LSN comparison, robust
@@ -474,7 +480,7 @@ class LakeTable:
         into the scan projection. ``changes`` is ``_parsed_changes()``
         output: LSN-ordered ``(lsn, parsed_or_None)`` pairs."""
         if not files:
-            return None
+            return self.spark.createDataFrame([], _ddl(target_fields))
         by_grp: dict[tuple, list[str]] = {}
         for f in files:
             grp = (f["schema_id"], f.get("change_lsn"), f.get("change_idx"))
@@ -493,7 +499,10 @@ class LakeTable:
                 tail = [c for _l, c in changes[cidx:]]
             else:
                 tail = None
-            df = self.spark.read.parquet(*paths)
+            # typed scan under the manifest's schema, not one file's footer:
+            # no inference job, and a column stored narrower than declared
+            # (an INT32 _lsn written by older bootstraps) widens on read
+            df = self.spark.read.schema(_ddl(src_fields)).parquet(*paths)
             parts.append(project_to(df, src_fields, target_fields, tail))
         out = parts[0]
         for p in parts[1:]:
@@ -505,41 +514,45 @@ class LakeTable:
             return json.load(fh)
 
     def _lww_resolve(self, df: DataFrame) -> DataFrame:
-        """Per-key LWW winner for merge-on-read tables: deltas appended by
-        ``strategy='append'`` can carry several rows per key across files;
-        the visible row is the max-LSN one (``dedup.lww_dedup``, the same
-        reduce the copy-on-write merge runs at write time).
-        Partial-aggregated, so the shuffle carries one row per key per map
-        partition."""
-        return lww_dedup(df, key=self.key, order_col="_lsn")
+        """The max-LSN row per key: the delta files of several merges can
+        hold several rows per key. At an exact LSN tie a tombstone wins
+        (``dedupe_index.collapse_batch``'s rule). One partial-aggregated
+        ``max_by`` per column, not one over a row struct: Spark drops the
+        aggregates of columns a read never selects, so the scan stays
+        column-pruned (a struct would be read whole)."""
+        order = F.struct(F.col("_lsn"), F.col("_deleted"))
+        return df.groupBy(*[_col(k) for k in self.key]).agg(
+            *[
+                F.max_by(_col(c), order).alias(c)
+                for c in df.columns
+                if c not in self.key
+            ]
+        )
 
     def resolve_live(
         self, df: DataFrame, truncate_lsn: int | None = None
     ) -> DataFrame:
         """Apply the table's visibility rule to raw (+META) rows: truncate
-        watermark, LWW resolve (merge-on-read tables only), tombstone drop.
+        watermark, LWW resolve, tombstone drop. The resolve runs BEFORE
+        the tombstone drop, which would otherwise resurrect an older live
+        row of a deleted key.
         Callers that pre-filter a ``scan_for_keys`` frame MUST filter by
         whole keys or key PREFIXES only — a predicate that split a key's
         rows across the filter would corrupt the LWW resolve."""
         t = self.truncate_lsn if truncate_lsn is None else truncate_lsn
-        df = df.filter(F.col("_lsn") > F.lit(t))
-        if self._meta.get("merge_on_read"):
-            df = self._lww_resolve(df)
+        df = self._lww_resolve(df.filter(F.col("_lsn") > F.lit(t)))
         return df.filter(~F.col("_deleted"))
 
     def _live_view(self, files: list[dict]) -> DataFrame:
         """The table's ONE visibility rule — project ``files`` to the
-        current schema, resolve LWW winners (merge-on-read tables), and
-        drop tombstones + truncated rows. Shared by ``read`` and ``lookup``
-        so the predicate can never drift."""
-        fields = self.schema_fields()
-        df = self._read_files(files, fields, changes=self._parsed_changes())
-        if df is None:
-            ddl = ", ".join(
-                f"`{n}` {sql_type(t)}" for n, t in fields + META_FIELDS
+        current schema, resolve LWW winners, and drop tombstones +
+        truncated rows. Shared by ``read`` and ``lookup`` so the predicate
+        can never drift."""
+        return self.resolve_live(
+            self._read_files(
+                files, self.schema_fields(), changes=self._parsed_changes()
             )
-            df = self.spark.createDataFrame([], ddl)
-        return self.resolve_live(df)
+        )
 
     def read(self, include_meta: bool = False, version: int | None = None) -> DataFrame:
         """Live view: tombstones and truncated rows filtered out. Pass
@@ -572,39 +585,13 @@ class LakeTable:
 
     # -------------------------------------------------------------- lookups
     def _files_for_key(self, key_value: tuple) -> list[dict]:
-        """Manifest files that can contain ``key_value``: the key's hash
-        bucket, then min/max first-key-column footer-stat pruning within
-        it. Driver-side metadata math only — no scan."""
+        """Manifest files whose first-key-column footer [min, max] can
+        contain ``key_value``. Driver-side metadata math only — no scan,
+        no job."""
         kv = tuple(key_value)
         if len(kv) != len(self.key):
             raise ValueError(f"expected {len(self.key)} key values, got {len(kv)}")
-        # one-row local job: the bucket hash is the JVM's xxhash64, so it
-        # must be computed BY the JVM (no data read — a literal frame)
-        types = dict(self.schema_fields())
-        ddl = ", ".join(
-            f"`{k}` {sql_type(types.get(k, 'string'))}" for k in self.key
-        )
-        bucket = (
-            self.spark.createDataFrame([kv], ddl)
-            .select(bucket_expr(self.key, self.n_buckets).alias("b"))
-            .first()["b"]
-        )
-        k1 = kv[0]
-        out = []
-        for f in self._meta["files"]:
-            # bucket -1 = a range-sharded merge-on-read file (append delta
-            # or MOR compaction output): not hash-bucketed, can hold any
-            # key — prune it by range only
-            if f["bucket"] not in (bucket, -1):
-                continue
-            mn, mx = f.get("min_key"), f.get("max_key")
-            try:
-                if mn is not None and mx is not None and not mn <= k1 <= mx:
-                    continue
-            except TypeError:
-                pass  # mixed-type stats: keep the file
-            out.append(f)
-        return out
+        return self.files_for_key_values([kv[0]])
 
     def files_for_key_values(self, values) -> list[dict]:
         """Manifest files whose first-key-column footer ranges can contain
@@ -652,23 +639,17 @@ class LakeTable:
                 "files_total": len(meta["files"]),
                 "files_read": len(files),
             }
-            fields = self.schema_fields()
-            df = self._read_files(
-                files, fields, changes=self._parsed_changes()
+            return self._read_files(
+                files, self.schema_fields(), changes=self._parsed_changes()
             )
-            if df is None:
-                ddl = ", ".join(
-                    f"`{n}` {sql_type(t)}" for n, t in fields + META_FIELDS
-                )
-                df = self.spark.createDataFrame([], ddl)
-            return df
         finally:
             self._meta = saved
 
     def lookup(self, key_value: tuple) -> DataFrame:
-        """Point lookup for one key: scans ONLY the files whose bucket and
-        key range can contain it (typically one file regardless of table
-        size — the O(1)-ish read the per-file footer stats buy)."""
+        """Point lookup for one key: scans ONLY the files whose footer key
+        range can contain it (one compacted file plus the deltas whose
+        range covers the key — the O(1)-ish read the per-file footer stats
+        buy)."""
         live = self._live_view(self._files_for_key(key_value))
         cond = None
         for k, v in zip(self.key, key_value):
@@ -679,37 +660,38 @@ class LakeTable:
         )
 
     # -------------------------------------------------------------- merging
-    def _write_data(self, merged: DataFrame, out_dir: str) -> None:
-        """One data write for merge/compact, partitioned by bucket."""
-        merged.write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
+    def _shard(self, df: DataFrame, n_shards: int) -> DataFrame:
+        """Range-partition ``df`` on the key into ``n_shards`` partitions,
+        each written as one file with a tight footer range (point reads
+        skip files that miss a key)."""
+        return df.repartitionByRange(
+            max(1, int(n_shards)), *[F.col(k) for k in self.key]
+        )
 
-    def _stat_written(
-        self, out_dir: str, schema_id: int, change_lsn: int
+    def _write_files(
+        self, df: DataFrame, version: int, schema_id: int, change_lsn: int
     ) -> list[dict]:
-        """Walk the freshly written data dir (any partition depth) and stamp
-        each file's manifest entry with its footer key stats."""
+        """Write each partition of ``df`` (``_shard`` output) as one
+        key-sorted file to a fresh per-attempt staging dir and return their
+        manifest entries. A writer that loses the manifest race leaves only
+        orphans there (GC'd by expire_snapshots), never clobbers the
+        winner's published data. Empty files are not listed."""
+        rel = f"data/v{version}-{uuid.uuid4().hex[:8]}"
+        out_dir = os.path.join(self.root, rel)
+        df.sortWithinPartitions(*self.key).write.mode("overwrite").parquet(
+            out_dir
+        )
         out = []
-        for dirpath, _dirs, fnames in sorted(os.walk(out_dir)):
-            bucket = next(
-                (
-                    int(seg.split("=", 1)[1])
-                    for seg in dirpath.split(os.sep)
-                    if seg.startswith("_bucket=")
-                ),
-                None,
-            )
-            if bucket is None:
+        for part in sorted(os.listdir(out_dir)):
+            if not part.endswith(".parquet"):
                 continue
-            for part in sorted(fnames):
-                if not part.endswith(".parquet"):
-                    continue
-                full = os.path.join(dirpath, part)
-                mn, mx, nrows = _file_key_stats(full, self.key[0])
-                rel = os.path.relpath(full, self.root)
+            mn, mx, nrows = _file_key_stats(
+                os.path.join(out_dir, part), self.key[0]
+            )
+            if nrows:
                 out.append(
                     {
-                        "path": rel,
-                        "bucket": bucket,
+                        "path": f"{rel}/{part}",
                         "schema_id": schema_id,
                         "change_lsn": change_lsn,
                         "min_key": mn,
@@ -728,155 +710,60 @@ class LakeTable:
         new_schema_id: int | None = None,
         new_truncate_lsn: int | None = None,
         extra_summary: dict | None = None,
-        affected_buckets: list[int] | None = None,
         new_schema_changes: list | None = None,
     ) -> dict:
-        """Copy-on-write upsert of a deduped batch + single atomic commit.
+        """Append a batch as delta files + single atomic commit.
 
-        ``batch_df`` must carry the FINAL (post-batch) schema fields + META
-        and at most one row per key (LWW-deduped). ``new_schemas`` /
-        ``new_schema_id`` publish schema evolution that happened inside the
-        batch; ``new_truncate_lsn`` publishes a table truncate. Idempotent:
-        a batch_id at or below the last committed one is skipped wholesale
-        (exactly-once under Spark's replay-on-restart, E2).
-
-        The table layout decides the plan, reported as ``info["strategy"]``:
-
-        - ``append``: merge-on-read tables (see ``create``) commit the batch
-          as new delta files; no old file is read.
-        - ``agg``: copy-on-write tables union the touched buckets' files
-          with the batch, hash-partition the union by bucket (the plan's
-          one exchange), run the one LWW reduce (``dedup.lww_dedup``) per
-          (bucket, key) in place and write each touched bucket back as ONE
-          key-sorted file. Cost is O(touched buckets).
-        - ``None``: no batch rows (a manifest-only commit).
+        ``batch_df`` must carry the FINAL (post-batch) schema fields + META;
+        reads resolve the max-LSN row per key across every delta, so no old
+        file is read or rewritten and the commit costs O(batch).
+        ``new_schemas`` / ``new_schema_id`` publish schema evolution that
+        happened inside the batch; ``new_truncate_lsn`` publishes a table
+        truncate. Idempotent: a batch_id at or below the last committed one
+        is skipped wholesale (exactly-once under Spark's replay-on-restart,
+        E2). ``info["strategy"]`` is ``"append"``, or None for a
+        manifest-only commit (no batch rows).
         """
         cur = self._meta
         if batch_id <= cur["last_batch"]["id"]:
             return {"skipped": True, "version": cur["version"], "batch_id": batch_id}
 
-        schemas = new_schemas if new_schemas is not None else cur["schemas"]
         schema_id = new_schema_id if new_schema_id is not None else cur["schema_id"]
-        final_fields = [
-            tuple(f)
-            for s in schemas
-            if s["schema_id"] == schema_id
-            for f in s["fields"]
-        ]
         truncate_lsn = (
             max(cur["truncate_lsn"], new_truncate_lsn)
             if new_truncate_lsn is not None
             else cur["truncate_lsn"]
         )
         new_version = cur["version"] + 1
-        # the post-commit change history: old files are projected THROUGH it
-        # (stepwise retype folding) and new files are stamped with its length
         history = (
             new_schema_changes
             if new_schema_changes is not None
             else cur.get("schema_changes", [])
         )
-        base0 = next(
-            [tuple(f) for f in s["fields"]]
-            for s in cur["schemas"]
-            if s["schema_id"] == 0
-        )
-        _, aligned, _ = replay_changes(base0, history, self.key)
-        parsed_changes = [(int(l), c) for (l, _), c in zip(history, aligned)]
         # LSN stamp: every change in the post-commit history is folded into
         # the values this merge writes, so the files' unapplied tail is
         # exactly the changes with lsn > this stamp (late-arriving lower-LSN
         # control events land BELOW it and are never replayed onto values
         # that already reflect them — see the manifest docstring)
         change_lsn = max((int(l) for l, _ in history), default=-1)
-        files: list[dict] = []
-        rewritten, affected = 0, []
-        appended = False
-
-        mor = bool(cur.get("merge_on_read"))
+        written: list[dict] = []
         strategy = None
-        if batch_df is not None and mor:
-            # O(batch) delta commit: no old file is read or rewritten. The
-            # batch is key-range sharded + key-sorted so each delta file's
-            # footer ranges are tight — later point-set reads skip deltas
-            # whose range misses the probed keys. bucket -1 = "not
-            # hash-bucketed" (see _files_for_key / files_for_key_values).
-            b = batch_df.withColumn("_bucket", F.lit(-1).cast("int"))
-            merged = b.repartitionByRange(
-                max(1, int(self.append_shards)), F.col(self.key[0])
-            ).sortWithinPartitions(*self.key)
-            data_rel = f"data/v{new_version}-{uuid.uuid4().hex[:8]}"
-            out_dir = os.path.join(self.root, data_rel)
-            self._write_data(merged, out_dir)
-            files = self._stat_written(out_dir, schema_id, change_lsn)
-            rewritten = len(files)
-            files.extend(cur["files"])
-            appended = True
+        if batch_df is not None:
+            written = self._write_files(
+                self._shard(batch_df, self.append_shards), new_version,
+                schema_id, change_lsn,
+            )
             strategy = "append"
-        elif batch_df is not None:
-            b = batch_df.withColumn(
-                "_bucket", bucket_expr(self.key, self.n_buckets)
-            )
-            if affected_buckets is not None:
-                # caller already knows (e.g. from its lineage-metrics job) —
-                # saves one job per batch
-                affected = sorted(affected_buckets)
-            else:
-                # small driver-side control read: just the distinct bucket ids
-                affected = sorted(
-                    r[0] for r in b.select("_bucket").distinct().collect()
-                )
-        if affected:
-            touched = [f for f in cur["files"] if f["bucket"] in affected]
-            untouched = [f for f in cur["files"] if f["bucket"] not in affected]
-            strategy = "agg"
-            key = list(self.key)
-            # ONE exchange: hash-partitioning on _bucket puts each bucket in
-            # one task, so each touched bucket is written back as one file
-            merged = b.repartition(len(affected), "_bucket")
-            old = self._read_files(touched, final_fields, changes=parsed_changes)
-            if old is not None:
-                # rows killed by a truncate are GC'd while we rewrite
-                old = old.withColumn(
-                    "_bucket", bucket_expr(self.key, self.n_buckets)
-                ).filter(F.col("_lsn") > F.lit(truncate_lsn))
-                # the reduce groups by (_bucket, key) — the same groups, as
-                # the bucket is a function of the key — which that
-                # partitioning already clusters: no second (key) exchange
-                merged = lww_dedup(
-                    old.unionByName(b).repartition(len(affected), "_bucket"),
-                    key=["_bucket", *key],
-                    order_col="_lsn",
-                )
-            merged = merged.sortWithinPartitions("_bucket", *key)
-            # per-attempt unique staging dir: a writer that loses the manifest
-            # race must leave only orphan files, never clobber the winner's
-            # already-published data (its files are GC'd by expire_snapshots)
-            data_rel = f"data/v{new_version}-{uuid.uuid4().hex[:8]}"
-            out_dir = os.path.join(self.root, data_rel)
-            self._write_data(merged, out_dir)
-            files.extend(
-                self._stat_written(out_dir, schema_id, change_lsn)
-            )
-            rewritten = len(files)
-            files.extend(untouched)
-        elif not appended:
-            files = list(cur["files"])
 
         meta = {
             "version": new_version,
             "table": cur["table"],
             "key": cur["key"],
             "n_buckets": cur["n_buckets"],
-            "merge_on_read": mor,
             "schema_id": schema_id,
-            "schemas": schemas,
-            "schema_changes": (
-                new_schema_changes
-                if new_schema_changes is not None
-                else cur.get("schema_changes", [])
-            ),
-            "files": files,
+            "schemas": new_schemas if new_schemas is not None else cur["schemas"],
+            "schema_changes": history,
+            "files": written + cur["files"],
             "truncate_lsn": truncate_lsn,
             "last_batch": {"id": batch_id, "lsn_hwm": max(lsn_hwm, cur["last_batch"]["lsn_hwm"])},
             "parent": cur["version"],
@@ -890,61 +777,39 @@ class LakeTable:
             "skipped": False,
             "version": new_version,
             "batch_id": batch_id,
-            "affected_buckets": affected,
-            "files_written": rewritten,
+            "files_written": len(written),
             "strategy": strategy,
         }
 
     # ----------------------------------------------------------- compaction
     def compact(self, tombstone_watermark_lsn: int | None = None) -> dict:
-        """Rewrite all buckets dropping truncated rows and tombstones whose
+        """Fold the delta files into ``n_buckets`` range-clustered files with
+        one row per key, dropping truncated rows and tombstones whose
         LSN is below ``tombstone_watermark_lsn`` (only safe once the source
         guarantees no event older than that watermark can still arrive —
         the engine analog of advancing the reference's replication slot via
         ``send_feedback``, ``postgres_logical.py:186-198``)."""
         cur = self._meta
-        fields = self.schema_fields()
-        parsed_changes = self._parsed_changes()
-        df = self._read_files(cur["files"], fields, changes=parsed_changes)
-        if df is None:
+        if not cur["files"]:
             return {"version": cur["version"], "compacted": 0}
-        df = df.filter(F.col("_lsn") > F.lit(cur["truncate_lsn"]))
-        if cur.get("merge_on_read"):
-            # fold the append deltas: resolve BEFORE the tombstone sweep —
-            # dropping a tombstone first would resurrect an older live row
-            # for the same key still sitting in an earlier delta
-            df = self._lww_resolve(df)
+        parsed_changes = self._parsed_changes()
+        df = self._read_files(
+            cur["files"], self.schema_fields(), changes=parsed_changes
+        ).filter(F.col("_lsn") > F.lit(cur["truncate_lsn"]))
+        # the range exchange clusters every key's rows in one partition, so
+        # the resolve runs in place (no second exchange). It runs BEFORE
+        # the tombstone sweep: dropping a tombstone first would resurrect
+        # an older live row for the same key still sitting in an earlier
+        # delta
+        df = self._lww_resolve(self._shard(df, self.n_buckets))
         if tombstone_watermark_lsn is not None:
             df = df.filter(
                 (~F.col("_deleted")) | (F.col("_lsn") > F.lit(tombstone_watermark_lsn))
             )
         new_version = cur["version"] + 1
-        data_rel = f"data/v{new_version}-{uuid.uuid4().hex[:8]}"
-        out_dir = os.path.join(self.root, data_rel)
-        if cur.get("merge_on_read"):
-            # MOR tables stay RANGE-clustered (bucket -1): their keys are
-            # uniform hashes, so hash buckets would spread every file's
-            # footer range across the whole keyspace and point-set pruning
-            # would never skip a compacted file again
-            out = (
-                df.withColumn("_bucket", F.lit(-1).cast("int"))
-                .repartitionByRange(
-                    self.n_buckets, *[F.col(k) for k in self.key]
-                )
-                .sortWithinPartitions(*self.key)
-            )
-        else:
-            out = (
-                df.withColumn(
-                    "_bucket", bucket_expr(self.key, self.n_buckets)
-                )
-                .repartition(self.n_buckets, "_bucket")
-                .sortWithinPartitions("_bucket", *self.key)
-            )
-        self._write_data(out, out_dir)
-        change_lsn = max((l for l, _ in parsed_changes), default=-1)
-        files = self._stat_written(
-            out_dir, cur["schema_id"], change_lsn
+        files = self._write_files(
+            df, new_version, cur["schema_id"],
+            max((l for l, _ in parsed_changes), default=-1),
         )
         meta = dict(cur)
         meta.update(
@@ -1035,10 +900,10 @@ class LakeTable:
                     pass
                 for sub in sorted(os.listdir(full)):
                     subp = os.path.join(full, sub)
-                    # emptiness must be checked RECURSIVELY: data files
-                    # may sit at any partition depth below the version dir
-                    # (_stat_written walks it the same way), and a direct-
-                    # children check would rmtree live data
+                    # emptiness must be checked RECURSIVELY: older lakes
+                    # keep live data files in bucket partition dirs below
+                    # the version dir, and a direct-children check would
+                    # rmtree them
                     if os.path.isdir(subp) and not any(
                         x.endswith(".parquet")
                         for _, _, fn in os.walk(subp)

@@ -118,9 +118,15 @@ def bootstrap(
         n_buckets=cfg.n_buckets, table=table,
     )
     df = project_columns(initial, columns)
-    batch = df.withColumn("_lsn", F.lit(lsn_watermark)).withColumn(
+    # _lsn is BIGINT in every data file: a bare literal below 2**31 would be
+    # written as INT32
+    batch = df.withColumn("_lsn", F.lit(lsn_watermark).cast("long")).withColumn(
         "_deleted", F.lit(False)
     ).withColumn("_extra", F.lit(None).cast("map<string,string>"))
+    # snapshot 0 is a whole table, not one batch's delta: shard it like a
+    # compaction (n_buckets range files), so the first compaction's input
+    # is not a few files many times the size of every delta
+    lake.append_shards = lake.n_buckets
     info = lake.merge(
         batch, batch_id=0, lsn_hwm=lsn_watermark,
         extra_summary={"bootstrap": True, "lsn_watermark": lsn_watermark},
@@ -133,7 +139,7 @@ def bootstrap(
     meta["version"] = lake.version + 1
     meta["parent"] = lake.version
     LakeTable._publish(root, meta)
-    return lake.refresh()
+    return LakeTable(spark, root)
 
 
 def snapshot_boundary_filter(df: DataFrame, lake: LakeTable) -> DataFrame:

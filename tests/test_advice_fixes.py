@@ -114,11 +114,14 @@ def test_concurrent_commit_loser_does_not_clobber(spark, tmpdir_factory_clean):
     # every referenced file survives
     import glob
 
-    n_files_before = len(glob.glob(os.path.join(root, "data", "*", "*", "*.parquet")))
+    def n_files():
+        return len(glob.glob(os.path.join(root, "data", "**", "*.parquet"),
+                             recursive=True))
+
+    n_files_before = n_files()
     info = lake_b.expire_snapshots(keep_last=10, orphan_grace_s=0)
     assert info["orphans_removed"] >= 1
-    n_files_after = len(glob.glob(os.path.join(root, "data", "*", "*", "*.parquet")))
-    assert n_files_after < n_files_before
+    assert n_files() < n_files_before
     assert sorted(r["content"] for r in lake_b.refresh().read().collect()) == [
         "AAA", "BBB",
     ]

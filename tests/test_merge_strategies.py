@@ -1,20 +1,23 @@
-"""A copy-on-write merge runs one plan, 'agg' (union the touched buckets'
-files with the batch, repartition by bucket, one LWW reduce): it must match
-the LSN oracle and write each touched bucket back as exactly one file."""
+"""Every lake merge takes one plan, 'append': the deduped batch becomes
+new key-range-sharded delta files, no old file is read or rewritten, and
+reads resolve the max-LSN row per key. The lake must match the LSN oracle,
+and a merge must write only its batch's winners."""
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from cdc_spark.apply import CdcApply
-from cdc_spark.config import BASE_FIELDS, EngineConfig
+from cdc_spark.config import EngineConfig
 from cdc_spark.lake import LakeTable
 from cdc_spark.loggen import change_log
 from cdc_spark.oracle import assert_matches, replay
+from cdc_spark.snapshot import bootstrap
 
 
 def test_join_and_agg_strategies_identical(spark, tmpdir_factory_clean):
-    """Every COW merge takes 'agg', and the lake equals the LSN oracle —
+    """Every merge takes 'append', and the lake equals the LSN oracle —
     also for a column whose name holds a dot (a quoted Postgres
     identifier) that joins mid-log, so later batches reduce it as a plain
     column name."""
@@ -31,75 +34,80 @@ def test_join_and_agg_strategies_identical(spark, tmpdir_factory_clean):
     for i in range(3):
         b = log.filter(F.pmod(F.xxhash64("lsn", F.lit(7)), F.lit(3)) == i)
         infos.extend(applier.apply_batch(b, i))
-    assert {i["strategy"] for i in infos} == {"agg"}
+    assert {i["strategy"] for i in infos} == {"append"}
     lake = applier.lake_for("repos")
     assert "a.b" in lake.read().columns
     assert_matches(lake.read().toPandas(), replay(log.toPandas(), cfg.base_fields))
 
 
-def test_cow_merge_writes_one_file_per_affected_bucket(
-    spark, tmpdir_factory_clean
-):
-    """Small batches into a lake many times their size: after every merge
-    each bucket the batch touched holds exactly one data file, so COW
-    buckets do not grow a file per merge."""
-    root = tmpdir_factory_clean("onefile")
+def test_merge_appends_only_the_batch_winners(spark, tmpdir_factory_clean):
+    """Small batches into a bootstrapped lake: each merge adds only new
+    files, whose rows sum to that batch's winners (upserts + deletes in the
+    metrics table), and keeps every earlier file."""
+    root = tmpdir_factory_clean("append")
     cfg = EngineConfig(
-        lake_root=root, checkpoint=os.path.join(root, "_ckpt"), n_buckets=4
+        lake_root=root, checkpoint=os.path.join(root, "_ckpt"), n_buckets=8
+    )
+    log = change_log(spark, 1500, n_repos=40, n_paths=20, zipf=1.0,
+                     delete_rate=0.05, dup_rate=0.03, seed=71)
+    watermark = 900
+    pre = replay(log.filter(F.col("lsn") <= watermark).toPandas(),
+                 cfg.base_fields)
+    bootstrap(
+        spark, cfg,
+        spark.createDataFrame(
+            pre[[n for n, _ in cfg.base_fields]],
+            ", ".join(f"`{n}` string" for n, _ in cfg.base_fields),
+        ),
+        lsn_watermark=watermark,
     )
     applier = CdcApply(spark, cfg)
-    # ~800 live keys from the first 3000 events, then 150-event batches:
-    # the lake stays > 4x every batch
-    log = change_log(spark, 3450, n_repos=40, n_paths=20, zipf=1.0,
-                     delete_rate=0.05, dup_rate=0.03, seed=71)
-    bounds = [0, 3000, 3150, 3300, 3450]
-    infos = []
+    bounds = [watermark, 1100, 1300, 1500]
     for i, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+        before = {f["path"] for f in applier.lake_for("repos").meta["files"]}
         batch = log.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
         (info,) = applier.apply_batch(batch, i)
-        assert info["affected_buckets"]
         files = applier.lake_for("repos").meta["files"]
-        for bkt in info["affected_buckets"]:
-            assert sum(f["bucket"] == bkt for f in files) == 1, (i, bkt)
-        infos.append(info)
-    assert {i["strategy"] for i in infos} == {"agg"}
+        assert before <= {f["path"] for f in files}, i
+        new = [f for f in files if f["path"] not in before]
+        met = applier.metrics().filter(F.col("batch_id") == i).toPandas()
+        winners = int(met["upserts"].sum() + met["deletes"].sum())
+        assert info["strategy"] == "append"
+        assert info["files_written"] == len(new)
+        assert sum(f["rows"] for f in new) == winners > 0, i
     lake = applier.lake_for("repos")
-    assert sum(f["rows"] for f in lake.meta["files"]) > 4 * 150
     assert_matches(lake.read().toPandas(), replay(log.toPandas(), cfg.base_fields))
 
 
-def test_cow_merge_shuffles_once_by_bucket(spark, tmpdir_factory_clean,
-                                           monkeypatch):
-    """The COW merge plan has ONE exchange, hash-partitioned on the bucket:
-    the LWW reduce groups by (bucket, key) inside that partitioning and
-    adds no key exchange of its own. The later batch still wins."""
-    root = tmpdir_factory_clean("oneexchange")
+def test_typed_scan_widens_int32_lsn_files(spark, tmpdir_factory_clean):
+    """Files are read under the manifest's schema, not one file's footer:
+    a file whose _lsn was stored as INT32 (as bootstraps below 2**31 once
+    wrote it) reads as BIGINT next to INT64 files, and the later row
+    wins."""
     lake = LakeTable.create(
-        spark, os.path.join(root, "t"), fields=list(BASE_FIELDS), n_buckets=4
+        spark, os.path.join(tmpdir_factory_clean("typed"), "t"),
+        fields=[("k", "long"), ("v", "string")], key=("k",), n_buckets=2,
     )
-    ddl = ("repo STRING, path STRING, `commit` STRING, lang STRING, "
-           "content STRING, _lsn BIGINT, _deleted BOOLEAN, "
-           "_extra MAP<STRING,STRING>")
 
-    def batch(lsn0):
+    def batch(rows, lsn_type):
         return spark.createDataFrame(
-            [(f"repo-{i}", "a.py", "c", "py", f"v{lsn0 + i}", lsn0 + i,
-              False, None) for i in range(40)],
-            ddl,
-        )
+            rows, "k BIGINT, v STRING, _lsn BIGINT, _deleted BOOLEAN, "
+                  "_extra MAP<STRING,STRING>",
+        ).withColumn("_lsn", F.col("_lsn").cast(lsn_type))
 
-    plans = []
-    write = LakeTable._write_data
-
-    def spy(self, merged, out_dir):
-        plans.append(merged._jdf.queryExecution().executedPlan().toString())
-        write(self, merged, out_dir)
-
-    monkeypatch.setattr(LakeTable, "_write_data", spy)
-    lake.merge(batch(100), batch_id=0, lsn_hwm=200)
-    info = lake.merge(batch(300), batch_id=1, lsn_hwm=400)
-    assert info["strategy"] == "agg" and len(info["affected_buckets"]) > 1
-    exchanges = [l for l in plans[-1].splitlines() if "Exchange " in l]
-    assert len(exchanges) == 1 and "_bucket" in exchanges[0], plans[-1]
-    got = {r["repo"]: r["content"] for r in lake.read().collect()}
-    assert got == {f"repo-{i}": f"v{300 + i}" for i in range(40)}
+    lake.merge(batch([(1, "a", 5, False, None), (2, "b", 5, False, None)],
+                     "int"), batch_id=0, lsn_hwm=5)
+    lake.merge(batch([(2, "b2", 7, False, None)], "long"),
+               batch_id=1, lsn_hwm=7)
+    stored = {
+        str(pq.read_schema(os.path.join(lake.root, f["path"]))
+            .field("_lsn").type)
+        for f in lake.meta["files"]
+    }
+    assert stored == {"int32", "int64"}
+    got = lake.read(include_meta=True)
+    assert dict(got.dtypes)["_lsn"] == "bigint"
+    assert {(r["k"], r["v"], r["_lsn"]) for r in got.collect()} == {
+        (1, "a", 5), (2, "b2", 7)
+    }
+    assert lake.lookup((2,)).collect()[0]["v"] == "b2"

@@ -236,13 +236,12 @@ def test_file_skipping_soak_equivalence(spark, tmpdir_factory_clean):
 
 
 def test_point_lookup_prunes_to_containing_files(spark, tmpdir_factory_clean):
-    """lookup() must scan only files whose bucket + footer key range can
-    contain the key — one file here despite two merges' worth of files
-    (a merge-on-read table: each merge appends key-range-sharded deltas)."""
+    """lookup() must scan only files whose footer key range can contain
+    the key — one file here despite two merges' worth of files (each merge
+    appends key-range-sharded deltas)."""
     root = tmpdir_factory_clean("lookup")
     lake = LakeTable.create(
         spark, os.path.join(root, "t"), fields=list(BASE_FIELDS), n_buckets=1,
-        merge_on_read=True,
     )
     lake.merge(_mk_batch(spark, [f"repo-{c}" for c in "abcdefgh"], 100),
                batch_id=0, lsn_hwm=200)

@@ -1,6 +1,6 @@
-"""Round-4 VERDICT item 5: lake-sized batches (the bucket-chunked and
-broadcast-join merge strategies they once took are gone) merge through the
-one copy-on-write plan, 'agg', and match the LSN oracle."""
+"""Round-4 VERDICT item 5: lake-sized batches (the bucket-chunked,
+broadcast-join and copy-on-write merge plans they once took are gone)
+merge through the one plan, 'append', and match the LSN oracle."""
 
 import os
 
@@ -28,10 +28,11 @@ def _run(spark, root, zipf=2.0):
 
 
 def test_chunked_strategy_identical_and_selected(spark, tmpdir_factory_clean):
-    """~1000-row batches spread over 8 buckets (the shape the deleted
-    'chunked' strategy bin-packed) take 'agg' and match the oracle."""
+    """~1000-row batches spread over the whole key space (the shape the
+    deleted 'chunked' strategy bin-packed) take 'append' and match the
+    oracle."""
     lake, log, infos = _run(spark, tmpdir_factory_clean("agg"))
-    assert {i["strategy"] for i in infos} == {"agg"}
+    assert {i["strategy"] for i in infos} == {"append"}
     assert_matches(
         lake.read().toPandas(), replay(log.toPandas(), EngineConfig().base_fields)
     )
@@ -41,9 +42,9 @@ def test_chunked_falls_back_to_agg_when_one_bucket_too_big(
     spark, tmpdir_factory_clean
 ):
     """Hot-key batches (zipf=8: one repo carries most rows, so one bucket
-    dwarfs the rest) take 'agg' too, result unchanged."""
+    dwarfs the rest) take 'append' too, result unchanged."""
     lake, log, infos = _run(spark, tmpdir_factory_clean("ckagg"), zipf=8.0)
-    assert {i["strategy"] for i in infos} == {"agg"}
+    assert {i["strategy"] for i in infos} == {"append"}
     assert_matches(
         lake.read().toPandas(), replay(log.toPandas(), EngineConfig().base_fields)
     )

@@ -346,7 +346,7 @@ def test_postings_backfill_retries_after_create_crash(
     LakeTable.create(
         spark, os.path.join(root, "postings"),
         fields=list(POSTING_FIELDS), key=POSTING_KEY,
-        table="minhash_postings", merge_on_read=True,
+        table="minhash_postings",
     )  # create published, backfill never ran
     re = MinHashIndex(spark, root)
     assert {

@@ -1,12 +1,10 @@
-"""Round-5 VERDICT item 1 substrate: merge-on-read LakeTable mode.
+"""Round-5 VERDICT item 1 substrate: the merge-on-read LakeTable layout,
+since made the only one.
 
-A fingerprint index's keys are uniform hashes, so a copy-on-write merge can
-never skip a file (every batch's key range spans every file's range) —
-write amplification is O(table) per batch. MOR commits append O(batch)
-key-range-sharded delta files instead; reads LWW-resolve per key; compact()
-folds the deltas back. These tests pin the mode's semantics: append cost,
-read equivalence with COW, tombstones, truncate, idempotency, point-set
-file pruning, and the resurrect-guard ordering in compact."""
+Commits append O(batch) key-range-sharded delta files; reads LWW-resolve
+per key; compact() folds the deltas back. These tests pin the layout's
+semantics: append cost, tombstones, truncate, idempotency, point-set file
+pruning, and the resurrect-guard ordering in compact."""
 
 import os
 
@@ -17,11 +15,21 @@ from cdc_spark.lake import LakeTable
 FIELDS = [("k", "long"), ("v", "string")]
 
 
-def _mk(spark, root, mor=True, n_buckets=4):
+def _mk(spark, root, n_buckets=4):
     return LakeTable.create(
         spark, root, fields=list(FIELDS), key=("k",),
-        n_buckets=n_buckets, table="t", merge_on_read=mor,
+        n_buckets=n_buckets, table="t",
     )
+
+
+def _ranges_hold_rows(lake):
+    """Every manifest file carries its footer [min, max] key range, and
+    the file's rows lie inside it."""
+    for f in lake.meta["files"]:
+        assert f["min_key"] is not None and f["min_key"] <= f["max_key"], f
+        ks = lake.spark.read.parquet(os.path.join(lake.root, f["path"]))
+        got = ks.agg(F.min("k"), F.max("k")).first()
+        assert (got[0], got[1]) == (f["min_key"], f["max_key"]), f
 
 
 def _batch(spark, rows, lsn, deleted=()):
@@ -50,7 +58,7 @@ def test_append_merge_never_reads_or_rewrites_old_files(
     v2_files = {f["path"] for f in lake.meta["files"]}
     # every old file survives untouched; only new delta files were written
     assert v1_files <= v2_files
-    assert all(f["bucket"] == -1 for f in lake.meta["files"])
+    _ranges_hold_rows(lake)
     # read resolves the LWW winner per key
     assert _rows(lake) == {(1, "a"), (2, "b2"), (3, "c")}
 
@@ -93,8 +101,11 @@ def test_mor_compact_folds_deltas_and_keeps_result(
     lake.compact()
     assert _rows(lake) == before
     assert len(lake.meta["files"]) < n_before
-    # compacted files are range-clustered (bucket -1) with one row per key
-    assert all(f["bucket"] == -1 for f in lake.meta["files"])
+    # compacted files are range-clustered (disjoint footer ranges) with
+    # one row per key
+    _ranges_hold_rows(lake)
+    spans = sorted((f["min_key"], f["max_key"]) for f in lake.meta["files"])
+    assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), spans
     total = sum(f["rows"] for f in lake.meta["files"])
     assert total == lake.read(include_meta=True).count()
 
@@ -153,13 +164,15 @@ def test_scan_for_keys_version_reads_pre_batch_state(
 def test_cow_strategies_rejected_on_mor_and_vice_versa(
     spark, tmpdir_factory_clean
 ):
-    """The table's merge_on_read flag alone picks append vs COW (merge
-    takes no strategy override); manifest-only commits (no batch) are
-    legal on both and report no strategy."""
-    mor = _mk(spark, tmpdir_factory_clean("mor8"))
-    cow = _mk(spark, tmpdir_factory_clean("mor9"), mor=False)
-    assert cow.merge(None, batch_id=0, lsn_hwm=1)["strategy"] is None
-    assert mor.merge(None, batch_id=0, lsn_hwm=1)["strategy"] is None
+    """One layout, no strategy override: a batch commits as 'append', and
+    a manifest-only commit (no batch) is legal and reports no strategy,
+    writing no file."""
+    lake = _mk(spark, tmpdir_factory_clean("mor8"))
+    info = lake.merge(None, batch_id=0, lsn_hwm=1)
+    assert info["strategy"] is None and info["files_written"] == 0
+    assert lake.meta["files"] == []
+    info = lake.merge(_batch(spark, [(1, "a")], 2), batch_id=1, lsn_hwm=2)
+    assert info["strategy"] == "append" and info["files_written"] >= 1
 
 
 def test_mor_resolve_spans_schema_epochs(spark, tmpdir_factory_clean):

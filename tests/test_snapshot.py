@@ -70,6 +70,40 @@ def test_bootstrap_then_stream(spark, tmpdir_factory_clean):
     assert_matches(got, want)
 
 
+def test_bootstrap_lsn_is_bigint_for_small_batches(spark, tmpdir_factory_clean):
+    """A bootstrap at a watermark below 2**31 stamps _lsn as BIGINT like
+    every merge, so a read over the bootstrap files plus one small batch's
+    files works (an INT32 _lsn used to fail that read with a parquet
+    column type mismatch, crash-looping foreachBatch)."""
+    import pyarrow.parquet as pq
+
+    root = tmpdir_factory_clean("bs32")
+    cfg = EngineConfig(
+        lake_root=root, checkpoint=os.path.join(root, "_ckpt"), n_buckets=8
+    )
+    log = change_log(spark, 301, n_repos=40, n_paths=10, zipf=1.0,
+                     delete_rate=0.0, seed=67)
+    watermark = 300
+    pre = replay(log.filter(F.col("lsn") <= watermark).toPandas(), cfg.base_fields)
+    initial = spark.createDataFrame(
+        pre[[n for n, _ in cfg.base_fields]],
+        ", ".join(f"`{n}` string" for n, _ in cfg.base_fields),
+    )
+    lake = bootstrap(spark, cfg, initial, lsn_watermark=watermark)
+    boot_files = [f["path"] for f in lake.meta["files"]]
+
+    applier = CdcApply(spark, cfg)
+    # one update: it touches a single key, so the bootstrap's other files
+    # stay as they were written
+    applier.apply_batch(snapshot_boundary_filter(log, lake), 0)
+    got = applier.lake_for("repos").read().toPandas()
+    assert_matches(got, replay(log.toPandas(), cfg.base_fields))
+    assert {
+        str(pq.read_schema(os.path.join(lake.root, p)).field("_lsn").type)
+        for p in boot_files
+    } == {"int64"}
+
+
 def test_csv_export_layout_and_marker(spark, tmpdir_factory_clean):
     root = tmpdir_factory_clean("ex")
     cfg = EngineConfig(
