@@ -16,9 +16,11 @@ This is the consumer the reference leaves as ``NotImplementedError``
    by (epoch, lsn_hwm) (E1/E2): the deduped batch is appended as
    key-range-sharded delta files, no old file is read or rewritten, and
    reads resolve the max-LSN row per key (see ``LakeTable.merge``);
-5. a per-bucket lineage row (applied LSN range, upsert/delete counts, commit
-   latency) appended to a queryable metrics table (C5 — the engine analog of
-   the reference's DogStatsd timings, ``cdc/utils/stats.py:44-65``).
+5. one lineage row per (table, batch) — applied LSN range, upsert/delete
+   counts and commit latency — appended to a queryable metrics table (C5 —
+   the engine analog of the reference's DogStatsd timings,
+   ``cdc/utils/stats.py:44-65``). The counts come from the merge's own
+   write (``LakeTable.merge`` info), so no extra job counts them.
 """
 
 from __future__ import annotations
@@ -33,7 +35,6 @@ from .config import BASE_FIELDS, DML_OPS, EngineConfig
 from .dedup import lww_dedup
 from .lake import (
     LakeTable,
-    bucket_expr,
     chain_for_column,
     fold_cast_expr,
     replay_changes,
@@ -43,10 +44,24 @@ from .parse import BASE_COLUMNS
 
 
 METRICS_DDL = (
-    "table STRING, batch_id BIGINT, bucket INT, min_lsn BIGINT, max_lsn BIGINT, "
+    "table STRING, batch_id BIGINT, min_lsn BIGINT, max_lsn BIGINT, "
     "upserts BIGINT, deletes BIGINT, lake_version BIGINT, skipped BOOLEAN, "
     "commit_latency_s DOUBLE"
 )
+
+
+def read_metrics(spark: SparkSession, lake_root: str) -> DataFrame:
+    """The lineage/metrics table under ``lake_root``: one row per (table,
+    batch). At-least-once appended — a crash between the lake commit and
+    the metrics write replays as a 'skipped' row next to the real one —
+    so rows dedupe on (table, batch_id, skipped), which keeps the real
+    row's counts. Scanned under ``METRICS_DDL`` (no schema-inference
+    job)."""
+    return (
+        spark.read.schema(METRICS_DDL)
+        .parquet(os.path.join(lake_root, "_metrics", "*"))
+        .dropDuplicates(["table", "batch_id", "skipped"])
+    )
 
 
 class CdcApply:
@@ -91,6 +106,9 @@ class CdcApply:
                 F.max("lsn").alias("lsn_hwm"),
                 F.max(F.when(F.col("op") == "truncate", F.col("lsn"))).alias(
                     "tr_lsn"
+                ),
+                F.max(F.when(F.col("op").isin(*DML_OPS), F.col("lsn"))).alias(
+                    "dml_lsn"
                 ),
                 F.sort_array(
                     F.collect_set(
@@ -243,28 +261,11 @@ class CdcApply:
         # reduce, partial-aggregated below its key exchange
         deduped = lww_dedup(projected, key=key, order_col="_lsn").persist()
         try:
-            # ONE job yields the per-bucket lineage stats
-            bstats = sorted(
-                deduped.groupBy(
-                    bucket_expr(lake.key, lake.n_buckets).alias("bucket")
-                )
-                .agg(
-                    F.min("_lsn").alias("min_lsn"),
-                    F.max("_lsn").alias("max_lsn"),
-                    F.sum(F.when(~F.col("_deleted"), 1).otherwise(0)).alias(
-                        "upserts"
-                    ),
-                    F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias(
-                        "deletes"
-                    ),
-                )
-                .collect(),
-                key=lambda r: r["bucket"],
-            )
+            has_rows = ctrl["dml_lsn"] is not None and ctrl["dml_lsn"] > t_eff
             info = lake.merge(
-                # no rows for this table (control events only): a
-                # manifest-only commit, no empty delta file
-                deduped if bstats else None,
+                # no rows for this table past the truncate (control events
+                # only): a manifest-only commit, no write job
+                deduped if has_rows else None,
                 batch_id=batch_id,
                 lsn_hwm=ctrl["lsn_hwm"],
                 new_schemas=schemas if changes else None,
@@ -274,7 +275,7 @@ class CdcApply:
                 ),
                 new_truncate_lsn=t_new,
             )
-            self._write_metrics(table, batch_id, bstats, info, t0)
+            self._write_metrics(table, batch_id, info, t0)
             if self.cfg.neardup_index:
                 # run even when the LAKE merge was a skipped replay: a
                 # crash between lake commit and index update would
@@ -578,48 +579,35 @@ class CdcApply:
 
     # -------------------------------------------------------------- metrics
     def _write_metrics(
-        self,
-        table: str,
-        batch_id: int,
-        bstats: list,
-        info: dict,
-        t0: float,
+        self, table: str, batch_id: int, info: dict, t0: float
     ) -> None:
         # per-table subdir: concurrent per-table appends must not share a
         # Hadoop _temporary staging dir
         path = os.path.join(self.cfg.lake_root, "_metrics", table)
         latency = time.time() - t0
         if info.get("skipped"):
-            rows = [(table, batch_id, None, None, None, None, None,
-                     info["version"], True, latency)]
+            row = (table, batch_id, None, None, None, None,
+                   info["version"], True, latency)
         else:
-            rows = [
-                (table, batch_id, r["bucket"], r["min_lsn"], r["max_lsn"],
-                 r["upserts"], r["deletes"], info["version"], False, latency)
-                for r in bstats
-            ] or [(table, batch_id, None, None, None, 0, 0, info["version"],
-                   False, latency)]
-        # O(n_buckets) rows: write driver-side (pyarrow) — a Spark write job
-        # per batch just for lineage rows is pure fixed cost
+            row = (table, batch_id, info["min_lsn"], info["max_lsn"],
+                   info["rows"] - info["deletes"], info["deletes"],
+                   info["version"], False, latency)
+        # one row: write driver-side (pyarrow) — a Spark write job per batch
+        # just for a lineage row is pure fixed cost
         import pandas as pd
 
         os.makedirs(path, exist_ok=True)
         pd.DataFrame(
-            rows,
-            columns=["table", "batch_id", "bucket", "min_lsn", "max_lsn",
-                     "upserts", "deletes", "lake_version", "skipped",
-                     "commit_latency_s"],
+            [row],
+            columns=["table", "batch_id", "min_lsn", "max_lsn", "upserts",
+                     "deletes", "lake_version", "skipped", "commit_latency_s"],
         ).astype(
-            {"bucket": "Int32", "min_lsn": "Int64", "max_lsn": "Int64",
-             "upserts": "Int64", "deletes": "Int64"}
+            {"min_lsn": "Int64", "max_lsn": "Int64", "upserts": "Int64",
+             "deletes": "Int64"}
         ).to_parquet(os.path.join(path, f"b{batch_id}-{int(t0 * 1000)}.parquet"))
 
     def metrics(self) -> DataFrame:
-        """Queryable lineage/metrics table. At-least-once appended (a crash
-        between lake commit and metrics write replays as a 'skipped' row),
-        so readers dedupe on (table, batch_id, bucket)."""
-        return (
-            self.spark.read.parquet(
-                os.path.join(self.cfg.lake_root, "_metrics", "*")
-            ).dropDuplicates(["table", "batch_id", "bucket"])
-        )
+        """Queryable lineage/metrics table (see :func:`read_metrics`): one
+        row per (table, batch), plus a 'skipped' row for each replayed
+        batch."""
+        return read_metrics(self.spark, self.cfg.lake_root)

@@ -56,8 +56,7 @@ class EngineConfig:
     """Tuning knobs for the apply pipeline.
 
     n_buckets: the number of range-clustered files ``LakeTable.compact``
-        folds a table into (size it so one file fits an executor), and the
-        grain of the per-bucket lineage rows in the metrics table. Merges
+        folds a table into (size it so one file fits an executor). Merges
         append O(batch) deltas whatever its value.
     shuffle_partitions: not read by the engine — the session's
         ``spark.sql.shuffle.partitions`` decides every shuffle's width. The

@@ -66,7 +66,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import _col
@@ -181,13 +181,6 @@ def _ddl(fields: list[tuple[str, str]]) -> str:
     return ", ".join(
         f"`{n}` {sql_type(t)}" for n, t in list(fields) + META_FIELDS
     )
-
-
-def bucket_expr(key: tuple[str, ...], n_buckets: int):
-    """Key-hash bucket of each row: the grain of the apply path's per-batch
-    lineage rows (the lake layout itself is range-clustered)."""
-    cols = [F.coalesce(F.col(k).cast("string"), F.lit("")) for k in key]
-    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
 
 
 def _file_key_stats(path: str, key_col: str) -> tuple:
@@ -722,7 +715,10 @@ class LakeTable:
         truncate. Idempotent: a batch_id at or below the last committed one
         is skipped wholesale (exactly-once under Spark's replay-on-restart,
         E2). ``info["strategy"]`` is ``"append"``, or None for a
-        manifest-only commit (no batch rows).
+        manifest-only commit (no batch rows). ``info`` also carries the
+        commit's lineage, counted on the write itself: ``rows`` appended,
+        ``deletes`` among them, and their ``min_lsn`` / ``max_lsn`` (0, 0,
+        None, None for a manifest-only commit).
         """
         cur = self._meta
         if batch_id <= cur["last_batch"]["id"]:
@@ -748,11 +744,22 @@ class LakeTable:
         change_lsn = max((int(l) for l, _ in history), default=-1)
         written: list[dict] = []
         strategy = None
+        counts = {"rows": 0, "deletes": 0, "min_lsn": None, "max_lsn": None}
         if batch_df is not None:
+            # observed ABOVE the range exchange: below it, the range
+            # partitioner's sampling job would run the counters a second time
+            obs = Observation()
             written = self._write_files(
-                self._shard(batch_df, self.append_shards), new_version,
-                schema_id, change_lsn,
+                self._shard(batch_df, self.append_shards).observe(
+                    obs,
+                    F.count(F.lit(1)).alias("rows"),
+                    F.count(F.when(F.col("_deleted"), 1)).alias("deletes"),
+                    F.min("_lsn").alias("min_lsn"),
+                    F.max("_lsn").alias("max_lsn"),
+                ),
+                new_version, schema_id, change_lsn,
             )
+            counts = obs.get
             strategy = "append"
 
         meta = {
@@ -779,6 +786,7 @@ class LakeTable:
             "batch_id": batch_id,
             "files_written": len(written),
             "strategy": strategy,
+            **counts,
         }
 
     # ----------------------------------------------------------- compaction

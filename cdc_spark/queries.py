@@ -473,7 +473,7 @@ ORDER BY gap_start
 
 def q_lineage_metrics(spark, sf_dir):
     """C5: per-bucket lineage of a deduped batch — applied LSN range +
-    upsert/delete counts (the queryable metrics table's shape)."""
+    upsert/delete counts."""
     from .dedup import lww_dedup
 
     chg = change_view(spark, sf_dir).select("repo", "path", "lsn", "op")

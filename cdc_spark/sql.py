@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .apply import read_metrics
 from .config import EngineConfig
 from .lake import LakeTable
 
@@ -61,12 +62,9 @@ def register_all(
 def register_metrics(
     spark: SparkSession, cfg: EngineConfig, name: str = "lake_metrics"
 ) -> DataFrame:
-    import os
-
-    df = (
-        spark.read.parquet(os.path.join(cfg.lake_root, "_metrics", "*"))
-        .dropDuplicates(["table", "batch_id", "bucket"])
-    )
+    """Register ``name`` as a temp view over the lineage/metrics table
+    (the same reader as ``CdcApply.metrics()``)."""
+    df = read_metrics(spark, cfg.lake_root)
     df.createOrReplaceTempView(name)
     return df
 

@@ -111,3 +111,37 @@ def test_typed_scan_widens_int32_lsn_files(spark, tmpdir_factory_clean):
         (1, "a", 5), (2, "b2", 7)
     }
     assert lake.lookup((2,)).collect()[0]["v"] == "b2"
+
+
+def test_merge_info_counts_match_the_batch(spark, tmpdir_factory_clean):
+    """The merge counts what it appends on its own write: over a batch
+    written as several shards, rows / deletes / min_lsn / max_lsn equal a
+    direct aggregation of the batch, once (the range partitioner's sampling
+    pass must not count again). A manifest-only commit counts nothing."""
+    lake = LakeTable.create(
+        spark, os.path.join(tmpdir_factory_clean("counts"), "t"),
+        fields=[("k", "long"), ("v", "string")], key=("k",), n_buckets=2,
+    )
+    batch = spark.range(3000).select(
+        F.col("id").alias("k"),
+        F.col("id").cast("string").alias("v"),
+        (F.col("id") * 3 + 11).alias("_lsn"),
+        (F.col("id") % 7 == 0).alias("_deleted"),
+        F.lit(None).cast("map<string,string>").alias("_extra"),
+    )
+    want = batch.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.count(F.when(F.col("_deleted"), 1)).alias("deletes"),
+        F.min("_lsn").alias("min_lsn"),
+        F.max("_lsn").alias("max_lsn"),
+    ).collect()[0].asDict()
+    info = lake.merge(batch, batch_id=0, lsn_hwm=want["max_lsn"])
+    assert info["files_written"] > 1
+    assert {k: info[k] for k in want} == want
+    assert want["rows"] == 3000 and want["deletes"] == 429
+    empty = lake.merge(None, batch_id=1, lsn_hwm=want["max_lsn"])
+    assert empty["strategy"] is None and empty["files_written"] == 0
+    assert {k: empty[k] for k in want} == {
+        "rows": 0, "deletes": 0, "min_lsn": None, "max_lsn": None
+    }
+    assert lake.merge(batch, batch_id=1, lsn_hwm=0)["skipped"]

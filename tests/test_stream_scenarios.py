@@ -100,17 +100,49 @@ def test_metrics_lineage(spark, tmpdir_factory_clean):
     log = change_log(spark, 2000, n_repos=20, delete_rate=0.1, seed=43)
     cfg = _cfg(root)
     applier = CdcApply(spark, cfg)
-    applier.apply_batch(log.filter(F.col("lsn") <= 1000), 0)
-    applier.apply_batch(log.filter(F.col("lsn") > 1000), 1)
+    appended = {}
+    for i, batch in enumerate(
+        [log.filter(F.col("lsn") <= 1000), log.filter(F.col("lsn") > 1000)]
+    ):
+        before = {f["path"] for f in applier.lake_for("repos").meta["files"]}
+        applier.apply_batch(batch, i)
+        appended[i] = sum(
+            f["rows"] for f in applier.lake_for("repos").meta["files"]
+            if f["path"] not in before
+        )
     m = applier.metrics().toPandas()
-    assert set(m["batch_id"]) == {0, 1}
+    assert not m["skipped"].any()
+    # exactly one lineage row per (table, batch)
+    assert sorted(zip(m["table"], m["batch_id"])) == [("repos", 0), ("repos", 1)]
     assert (m["upserts"] + m["deletes"] > 0).all()
     # lsn ranges don't cross batch boundaries
     assert m[m.batch_id == 0]["max_lsn"].max() <= 1000
     assert m[m.batch_id == 1]["min_lsn"].min() > 1000
-    # per-bucket lineage covers every affected bucket of the lake
-    lake = applier.lake_for("repos")
-    assert set(m["bucket"]) <= set(range(lake.n_buckets))
+    # the counts are the rows the merge appended
+    for i, n in appended.items():
+        row = m[m.batch_id == i].iloc[0]
+        assert row["upserts"] + row["deletes"] == n > 0, i
+
+
+def test_metrics_keep_the_real_row_of_a_replayed_batch(
+    spark, tmpdir_factory_clean
+):
+    """A replayed batch adds a 'skipped' row under the same (table,
+    batch_id); the reader keeps it next to the real row, whose counts
+    survive."""
+    root = tmpdir_factory_clean("mxr")
+    log = change_log(spark, 600, n_repos=8, delete_rate=0.1, seed=44)
+    applier = CdcApply(spark, _cfg(root))
+    (first,) = applier.apply_batch(log, 0)
+    (again,) = applier.apply_batch(log, 0)
+    assert again["skipped"]
+    m = applier.metrics().toPandas()
+    assert list(m["batch_id"]) == [0, 0]
+    assert sorted(m["skipped"]) == [False, True]
+    real = m[~m["skipped"]].iloc[0]
+    assert real["upserts"] + real["deletes"] == first["rows"] > 0
+    assert m["upserts"].sum() == first["rows"] - first["deletes"]
+    assert real["lake_version"] == first["version"]
 
 
 def test_compaction_preserves_state(spark, tmpdir_factory_clean):
