@@ -22,7 +22,9 @@ Spark-first shape (every step mirrors the IVF discipline in
 - Codebook means are computed EXACTLY (floor-scaled BIGINT sums,
   floor-division) and distances ranked on rounded/integerized values, so
   codes and ranks are bit-reproducible across engines and partitionings
-  (the ``_ivf_update`` / integer-space discipline).
+  (the ``similarity._lloyd_update`` integer-space discipline, shared
+  with IVF; nearest-codebook assignment is ``similarity._nearest``, the
+  one kernel IVF uses too).
 - ADC search is a broadcast of the per-query LUT (q x m x ksub rows —
   KB-scale) against the codes table, one partial-aggregated sum per
   (query, candidate): the codes table never shuffles its payload, and no
@@ -44,6 +46,8 @@ from pyspark.sql import functions as F
 
 from .similarity import (
     _CSCALE,
+    _lloyd_update,
+    _nearest,
     _train_sample,
     EMB_DIM,
     IVF_LLOYD_ITERS,
@@ -100,153 +104,13 @@ def _subvectors(e, m: int, dsub: int, keys=("vec_id",)):
     )
 
 
-def _pq_assign(sub, books, sim_round: int = 6):
-    """Nearest codebook entry per (vec_id, sub) — value-identical to the
-    canonical broadcast-join x ksub explode + ``round(_l2, 6)`` +
-    ``min_by(code, struct(d, code))``, computed as an Arrow-batched NumPy
-    kernel (guide §4.2: the per-candidate ``_l2`` fold is an interpreted
-    lambda, and the join multiplies every subvector row ksub times).
-
-    Exactness: distances accumulate in the canonical left-fold order
-    ((x-y)*(x-y) then add, no FMA), so raw doubles match the JVM's bit
-    for bit. The rounded comparison is reproduced without rounding
-    everything: the rounded-min winner must lie within 1e-6 of the raw
-    min (round(.,6) moves a value by at most 5e-7 and is monotone), so
-    only candidates inside that window are decided by exact decimal
-    HALF_UP rounding — ``Decimal(repr(x))`` uses the same
-    shortest-decimal representation as the JVM's
-    ``BigDecimal.valueOf(double)``, so the tie rule is identical. The
-    winner's rounded distance is emitted so the (pass-through for unique
-    vec_ids) min_by aggregate keeps merging duplicate vec_id rows exactly
-    as before. The codebooks are an m x ksub control-plane read — the
-    same rows the broadcast shipped."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    import numpy as np
-
-    brows = books.collect()
-    by_sub: dict = {}
-    for r in brows:
-        by_sub.setdefault(int(r["sub"]), []).append(
-            (int(r["code"]), list(r["cv"]))
-        )
-    bk = {
-        s: (
-            np.array([c for c, _ in sorted(entries)], dtype=np.int64),
-            np.array([cv for _, cv in sorted(entries)], dtype=np.float64),
-        )
-        for s, entries in by_sub.items()
-    }
-    id_t = sub.schema["vec_id"].dataType
-    sub_t = sub.schema["sub"].dataType
-    out_schema = StructType(
-        [
-            StructField("vec_id", id_t, True),
-            StructField("sub", sub_t, True),
-            StructField("code", LongType(), True),
-            StructField("d", DoubleType(), True),
-        ]
-    )
-
-    def gen(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        import pyarrow as pa
-
-        quant = Decimal(1).scaleb(-sim_round)
-
-        def dec_round(x: float) -> float:
-            return float(
-                Decimal(repr(x)).quantize(quant, rounding=ROUND_HALF_UP)
-            )
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            vid = rb.column(0)
-            subs = rb.column(1).to_numpy(zero_copy_only=False)
-            sv = rb.column(2).flatten().to_numpy(zero_copy_only=False)
-            dsub = sv.size // n
-            SV = sv.reshape(n, dsub)
-            code_out = np.zeros(n, dtype=np.int64)
-            d_out = np.zeros(n, dtype=np.float64)
-            for s in np.unique(subs):
-                rows = np.nonzero(subs == s)[0]
-                codes, CV = bk[int(s)]
-                S = SV[rows]
-                D = np.zeros((rows.size, codes.size), dtype=np.float64)
-                for j in range(codes.size):
-                    acc = np.zeros(rows.size, dtype=np.float64)
-                    cvj = CV[j]
-                    for t in range(dsub):
-                        diff = S[:, t] - cvj[t]
-                        acc = acc + diff * diff
-                    D[:, j] = acc
-                dmin = D.min(axis=1)
-                cand = D <= (dmin + 2e-6)[:, None]
-                ncand = cand.sum(axis=1)
-                easy = ncand == 1
-                ei = np.argmax(cand, axis=1)  # the single candidate
-                code_out[rows[easy]] = codes[ei[easy]]
-                for ri in np.nonzero(easy)[0]:
-                    d_out[rows[ri]] = dec_round(float(D[ri, ei[ri]]))
-                for ri in np.nonzero(~easy)[0]:
-                    cs = np.nonzero(cand[ri])[0]
-                    best = min(
-                        (Decimal(repr(float(D[ri, j]))).quantize(
-                            quant, rounding=ROUND_HALF_UP
-                        ), int(codes[j]))
-                        for j in cs
-                    )
-                    code_out[rows[ri]] = best[1]
-                    d_out[rows[ri]] = float(best[0])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    vid,
-                    rb.column(1),
-                    pa.array(code_out),
-                    pa.array(d_out),
-                ],
-                names=["vec_id", "sub", "code", "d"],
-            )
-
-    per_row = sub.select("vec_id", "sub", "sv").mapInArrow(gen, out_schema)
-    return per_row.groupBy("vec_id", "sub").agg(
-        F.min_by(F.col("code"), F.struct(F.col("d"), F.col("code"))).alias(
-            "code"
-        )
-    )
-
-
-def _pq_update(sub, assign, dsub: int):
-    """Lloyd update keyed (sub, code): exact integer means, one
-    partial-aggregated groupBy (the ``_ivf_update`` arithmetic) — but
-    UNSCALED back to vector units: IVF leaves its centroids x_CSCALE
-    because cosine is scale-invariant; PQ's L2 is absolute, so a scaled
-    codebook would rank every candidate by centroid norm instead of
-    query distance (same-integer / same-divisor division is deterministic
-    and identical across engines)."""
-    sums = [
-        F.sum(F.floor(F.element_at("sv", d + 1) * _CSCALE)).alias(f"s{d}")
-        for d in range(dsub)
-    ]
-    g = sub.join(assign, ["vec_id", "sub"]).groupBy("sub", "code").agg(
-        F.count("*").alias("n"), *sums
-    )
-    means = [
-        F.expr(
-            f"CAST((s{d} - (((s{d} % n) + n) % n)) DIV n AS DOUBLE)"
-            f" / {_CSCALE}"
-        )
-        for d in range(dsub)
-    ]
-    return g.select("sub", "code", F.array(*means).alias("cv"))
+def _pq_assign(sub, books):
+    """Nearest (sub, code, cv) codebook entry per subvector: (vec_id, sub,
+    code), by ``similarity._nearest`` under squared L2 grouped by the
+    subspace. The codebooks are an m x ksub control-plane read: the rows
+    the canonical broadcast join ships."""
+    return _nearest(sub.select("vec_id", "sub", "sv"), books, "l2", "code",
+                    group_col="sub")
 
 
 def pq_codebooks(e, n_vecs: int, m: int = PQ_M, ksub: int = PQ_KSUB,
@@ -284,9 +148,14 @@ def pq_codebooks(e, n_vecs: int, m: int = PQ_M, ksub: int = PQ_KSUB,
         "sub", "code", F.col("sv").alias("cv")
     )
     for _ in range(iters):
-        books = _pq_update(t, _pq_assign(t, books), dsub).localCheckpoint(
-            eager=False
-        )
+        # UNSCALED back to vector units: IVF leaves its centroids x_CSCALE
+        # because cosine is scale-invariant; PQ's L2 is absolute, so a
+        # scaled codebook would rank every candidate by centroid norm
+        # instead of query distance
+        books = _unscale(
+            _lloyd_update(t, _pq_assign(t, books), dsub, vec="sv"),
+            ("sub", "code"),
+        ).localCheckpoint(eager=False)
     return books
 
 
@@ -574,11 +443,12 @@ WHERE rank <= {k} ORDER BY query_id, rank
 IVFPQ_NPROBE = 2
 
 
-def _unscale(cents):
-    """IVF centroids come out of the integer-mean Lloyd x_CSCALE (cosine
-    is scale-invariant there); residual arithmetic needs true units."""
+def _unscale(cents, keys=("cent_id",)):
+    """Centroids come out of the integer-mean Lloyd x_CSCALE (cosine is
+    scale-invariant there); residual and L2 arithmetic need true units.
+    ``keys`` are the columns passed through next to ``cv``."""
     return cents.select(
-        "cent_id",
+        *keys,
         F.transform("cv", lambda x: x / F.lit(float(_CSCALE))).alias("cv"),
     )
 

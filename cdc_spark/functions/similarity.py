@@ -4,12 +4,22 @@ Baseline: brute-force cosine top-k — a broadcast join of the (tiny) query
 set against all candidates, dot products via zip_with/aggregate (codegen).
 Scale path: LSH sign-projection buckets — candidates only within a bucket,
 so the shuffle is by bucket key and cost scales with bucket occupancy.
+
+Quantizers: IVF (flat and two-level) here and PQ (``pq.py``) share one
+nearest-centroid kernel, ``_nearest`` (an Arrow/NumPy ``mapInArrow``
+replacing the canonical broadcast join + ``round(_cos|_l2, 6)`` +
+``max_by``/``min_by``, bit-identical on every legal input: NULL and NaN
+vectors, zero vectors under cosine raise DIVIDE_BY_ZERO as ANSI Spark
+does, groups with no centroids drop out), and one exact integer-mean
+Lloyd step, ``_lloyd_update``. ``q_cosine_topk`` reuses the kernel's
+blocked fold, ``_fold``.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import functions as F
 
 N_QUERIES = 8
@@ -75,13 +85,13 @@ def q_cosine_topk(spark, sf_dir):
     Scoring is an Arrow-batched NumPy kernel (guide §4.2: the
     zip_with/aggregate dot products are interpreted lambda expressions,
     and the canonical per-pair form recomputed both norms 8x per
-    candidate). The kernel accumulates the fold in the SAME left-to-right
-    order as the canonical ``aggregate(zip_with(...), 0.0, +)`` — product
-    then add per dimension, no FMA — so the raw doubles are bit-identical
-    and Spark's own round(4) yields the exact oracle values. The query
-    side is an N_QUERIES-row control-plane read (the broadcast crossJoin
-    collected the same rows to the driver before)."""
-    import numpy as np
+    candidate). It is the shared ``_fold``, so the raw doubles are the
+    canonical ``crossJoin`` + ``_cos`` ones bit for bit and Spark's own
+    round(4) yields the exact oracle values; as there, a zero vector
+    raises DIVIDE_BY_ZERO and a NULL vector scores NULL (ranked last).
+    The query side is an N_QUERIES-row control-plane read: the same rows
+    the broadcast crossJoin ships."""
+    import pyarrow as pa
 
     e = _emb(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -91,47 +101,39 @@ def q_cosine_topk(spark, sf_dir):
         key=lambda r: r["vec_id"],
     )
     q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["v"] for r in q_rows], dtype=np.float64)
-
-    def _seq_norm(M):
-        # sqrt of the sequential fold of squares: ((0 + x0*x0) + x1*x1)...
-        acc = np.zeros(M.shape[0], dtype=np.float64)
-        for d in range(M.shape[1]):
-            acc = acc + M[:, d] * M[:, d]
-        return np.sqrt(acc)
-
-    qn = _seq_norm(Q)
+    q_take = _vectors(
+        pa.array([r["v"] for r in q_rows], pa.list_(pa.float64()))
+    )
+    # one block per query length: a pair of other lengths scores NULL
+    q_blocks = [
+        q_take(np.arange(q_ids.size), dim)
+        for dim in {len(r["v"]) for r in q_rows if r["v"] is not None}
+    ]
 
     def gen(batches):
-        import pyarrow as pa
-
         for rb in batches:
             n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False)
-            lists = rb.column(1)
-            flat = lists.flatten().to_numpy(zero_copy_only=False)
-            C = flat.reshape(n, -1)
-            dim = C.shape[1]
-            cn = _seq_norm(C)
-            for qi in range(len(q_ids)):
-                acc = np.zeros(n, dtype=np.float64)
-                qv = Q[qi]
-                for d in range(dim):
-                    acc = acc + qv[d] * C[:, d]
-                cos = acc / (qn[qi] * cn)
-                mask = ids != q_ids[qi]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(
-                            np.full(int(mask.sum()), q_ids[qi], np.int64)
-                        ),
-                        pa.array(ids[mask]),
-                        pa.array(cos[mask]),
-                    ],
-                    names=["query_id", "cand_id", "_raw"],
-                )
+            ids = rb.column(0).fill_null(0).to_numpy(zero_copy_only=False)
+            valid = rb.column(0).is_valid().to_numpy(zero_copy_only=False)
+            pairs = valid[:, None] & (ids[:, None] != q_ids[None, :])
+            cos = np.zeros(pairs.shape)
+            scored = np.zeros(pairs.shape, dtype=bool)
+            take = _vectors(rb.column(1))
+            for q_live, Q in q_blocks:
+                live, C = take(np.arange(n), Q.shape[1])
+                at = np.ix_(live, q_live)
+                cos[at] = _fold(C, Q, "cos", divided=pairs[at])
+                scored[at] = True
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.broadcast_to(q_ids, pairs.shape)[pairs]),
+                    pa.array(
+                        np.broadcast_to(ids[:, None], pairs.shape)[pairs]
+                    ),
+                    pa.array(cos[pairs], mask=~scored[pairs]),
+                ],
+                names=["query_id", "cand_id", "_raw"],
+            )
 
     scored_raw = e.select(
         F.col("vec_id").alias("cand_id"), "v"
@@ -234,194 +236,235 @@ IVF_LLOYD_ITERS = 2
 _CSCALE = 10_000
 
 
-def _nearest_kernel(rows_df, cents_by_group, in_cols, out_cell_col,
-                    group_col=None, sim_round: int = 6):
-    """Shared Arrow/NumPy kernel for the nearest-centroid assignments —
-    value-identical to the canonical broadcast-(cross)join +
-    ``round(_cos, 6)`` + ``max_by(id, struct(sim, -id))`` (guide §4.2: the
-    per-candidate cosine is three interpreted lambda folds, recomputed for
-    every (vector, centroid) pair).
+#: nearest-centroid picks compare scores rounded to this many decimals —
+#: the canonical ``round(_cos|_l2, 6)``, which the oracle SQL hard-codes
+SIM_ROUND = 6
 
-    Exactness: dot and norm folds accumulate left-to-right exactly like
-    ``aggregate(zip_with(...), 0.0, +)`` (product then add, no FMA); the
-    vector's own norm is computed once per row and each centroid's once
-    per task — the same expressions the canonical form evaluates, so the
-    doubles match bit for bit. The rounded-max winner must lie within
-    1e-6 of the raw max (round(.,6) moves a value <= 5e-7 and is
-    monotone), so only candidates inside that window are decided by exact
-    shortest-decimal HALF_UP rounding (ties -> smaller id, matching the
-    ``-id`` struct component); non-finite cosines (zero vectors) fall
-    back to a scalar replication of Spark's ordering (NaN greatest). The
-    winner's rounded sim is emitted so the pass-through max_by aggregate
-    keeps merging duplicate vec_ids exactly as before.
 
-    ``cents_by_group``: {group -> (ids int64[], CV float64[k, dim], NB
-    float64[k])}; ``group_col=None`` means one global group keyed None."""
-    import numpy as np
+def _vectors(col):
+    """``take(rows, dim) -> (live, V)`` over an Arrow list<double> column:
+    the rows of ``rows`` whose vector is exactly ``dim`` non-NULL doubles,
+    and those vectors as a float64 [len(live), dim] matrix. Every other row
+    (a NULL vector, a NULL element, another length) scores NULL under the
+    canonical fold: zip_with pads the shorter side with NULL, and NULL
+    propagates through the aggregate."""
+    import pyarrow.compute as pc
+
+    flat = col.flatten()  # NULL list slots are skipped
+    vals = flat.to_numpy(zero_copy_only=False)
+    lens = pc.list_value_length(col).fill_null(-1).to_numpy().astype(np.int64)
+    size = np.maximum(lens, 0)
+    start = np.cumsum(size) - size
+    if flat.null_count:
+        nulls = np.concatenate(
+            ([0], np.cumsum(flat.is_null().to_numpy(zero_copy_only=False)))
+        )
+        lens[nulls[start + size] > nulls[start]] = -1
+
+    def take(rows, dim):
+        live = rows[lens[rows] == dim]
+        return live, vals[start[live, None] + np.arange(dim)]
+
+    return take
+
+
+def _norm(M):
+    """sqrt of the left fold of squares per row: the canonical _cos norm."""
+    acc = np.zeros(M.shape[0])
+    for d in range(M.shape[1]):
+        acc += M[:, d] * M[:, d]
+    return np.sqrt(acc)
+
+
+def _fold(S, C, metric, divided=True):
+    """The canonical score of every row of ``S`` against every row of ``C``
+    as one [rows, centroids] matrix, folded over the dimensions left to
+    right exactly like ``aggregate(zip_with(...), 0.0, +)``: product (or
+    squared difference) then add, no FMA, so every element is the double
+    the JVM computes. ``cos`` divides the dot fold by the product of the
+    two norm folds; like ANSI Spark, a zero divisor among the ``divided``
+    pairs raises DIVIDE_BY_ZERO."""
+    acc = np.zeros((S.shape[0], C.shape[0]))
+    for d in range(S.shape[1]):
+        if metric == "cos":
+            acc += S[:, d, None] * C[None, :, d]
+        else:
+            diff = S[:, d, None] - C[None, :, d]
+            acc += diff * diff
+    if metric != "cos":
+        return acc
+    den = _norm(S)[:, None] * _norm(C)[None, :]
+    if (divided & (den == 0.0)).any():
+        raise ZeroDivisionError(
+            "[DIVIDE_BY_ZERO] Division by zero: a cosine's norm product is "
+            "0.0 (a zero vector)"
+        )
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return acc / den
+
+
+def _round(x):
+    """Spark's ``round(x, SIM_ROUND)`` over a float64 array: HALF_UP on
+    the shortest decimal form of each double (what ``BigDecimal(d)``
+    reads); NaN, ±inf and doubles >= 2^52 (integers) are unchanged. It is
+    computed on the scaled binary value, which is within 3e-16 (relative)
+    of the scaled decimal form; only an element within 1e-12 of a half-way
+    point is rounded through ``Decimal`` instead."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    scale = 10.0**SIM_ROUND
+    big = np.abs(x) >= 2.0**52
+    with np.errstate(invalid="ignore", over="ignore"):
+        y = np.abs(x) * scale
+        f = np.floor(y)
+        frac = y - f
+        out = np.where(big, x, np.copysign(f + (frac > 0.5), x) / scale) + 0.0
+        clear = np.abs(frac - 0.5) > 1e-12 * (1 + y)
+        halfway = np.isfinite(x) & ~big & ~clear
+    quant = Decimal(1).scaleb(-SIM_ROUND)
+    for i in zip(*np.nonzero(halfway)):
+        out[i] = float(
+            Decimal(repr(float(x[i]))).quantize(quant, rounding=ROUND_HALF_UP)
+        ) + 0.0
+    return out
+
+
+def _argbest(S, maximize):
+    """Per row, the column of the best score in Spark's ordering (NaN above
+    every number, so NaN wins a max and loses a min), ties to the first
+    column: the smallest id."""
+    if maximize:
+        return np.argmax(S, axis=1)
+    K = np.where(np.isnan(S), -np.inf, -S)
+    j = np.argmax(K, axis=1)
+    # a row of only +inf and NaN: the first +inf wins, else the first NaN
+    lost = np.isneginf(K[np.arange(len(K)), j])
+    j[lost] = np.argmax(S[lost] == np.inf, axis=1)
+    return j
+
+
+def _pick(M, maximize):
+    """(j, score) per row of the score matrix ``M``: the winning column
+    under the canonical compare of rounded scores, ties to the smaller id,
+    and its rounded score. Rounding moves a score by at most 5e-7 and is
+    monotone, so the rounded winner lies within 1e-6 of the raw one: only
+    rows with a second candidate inside a 2e-6 window are rounded in full
+    and picked again."""
+    rows = np.arange(len(M))
+    j = _argbest(M, maximize)
+    with np.errstate(invalid="ignore"):
+        near = (np.abs(M - M[rows, j][:, None]) <= 2e-6).sum(axis=1) > 1
+    j[near] = _argbest(_round(M[near]), maximize)
+    return j, _round(M[rows, j])
+
+
+def _nearest(rows, cents, metric, id_col, group_col=None):
+    """Nearest centroid per row of ``rows`` (keys..., vector): one
+    Arrow/NumPy ``mapInArrow`` kernel plus a pass-through aggregate,
+    value-identical to the canonical plan — a broadcast equi-join on
+    ``group_col`` (a crossJoin when None) + ``round(_cos|_l2, 6)`` +
+    ``max_by(id, struct(sim, -id))`` for ``cos``, ``min_by(id, struct(d,
+    id))`` for ``l2``, grouped by the keys. Returns (keys..., id_col).
+
+    ``cents`` is the (``id_col``, [``group_col``,] cv) table, collected: an
+    O(nlist) control-plane read of the rows the broadcast ships. Per group,
+    one ``_fold`` scores every row against every centroid and ``_pick``
+    applies the rounded compare. As in the inner join, a row whose group
+    has no centroids emits nothing. A row whose vector scores NULL ties on
+    every centroid, so the smallest id wins with a NULL score. The winner's
+    rounded score is emitted, so the aggregate merges duplicate keys
+    exactly as the canonical one does."""
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    fields = [rows_df.schema[c] for c in in_cols[:-1]]
-    out_schema = StructType(
-        fields
+    keys = rows.columns[:-1]
+    by: dict = {}
+    for r in sorted(cents.collect(), key=lambda r: r[id_col]):
+        g = None if group_col is None else r[group_col]
+        by.setdefault(g, []).append(r)
+    arrays = {
+        g: (
+            np.array([r[id_col] for r in rs], dtype=np.int64),
+            np.array([r["cv"] for r in rs], dtype=np.float64),
+        )
+        for g, rs in by.items()
+    }
+    schema = StructType(
+        [rows.schema[c] for c in keys]
         + [
-            StructField(out_cell_col, LongType(), True),
-            StructField("_sim", DoubleType(), True),
+            StructField(id_col, LongType(), True),
+            StructField("_score", DoubleType(), True),
         ]
     )
 
     def gen(batches):
-        import math
-        from decimal import ROUND_HALF_UP, Decimal
-
         import pyarrow as pa
-
-        quant = Decimal(1).scaleb(-sim_round)
-
-        def dec_round(x: float) -> float:
-            if not math.isfinite(x):
-                return x
-            return float(
-                Decimal(repr(x)).quantize(quant, rounding=ROUND_HALF_UP)
-            )
 
         for rb in batches:
             n = rb.num_rows
-            if n == 0:
-                continue
-            v = rb.column(len(in_cols) - 1)
-            flat = v.flatten().to_numpy(zero_copy_only=False)
-            dim = flat.size // n
-            V = flat.reshape(n, dim)
-            na = np.zeros(n, dtype=np.float64)
-            for d in range(dim):
-                na = na + V[:, d] * V[:, d]
-            na = np.sqrt(na)
+            take = _vectors(rb.column(len(keys)))
             if group_col is None:
-                groups = {None: np.arange(n)}
+                parts = [(np.arange(n), arrays[None])] if arrays else []
             else:
-                gi = in_cols.index(group_col)
-                gvals = rb.column(gi).to_numpy(zero_copy_only=False)
-                groups = {
-                    int(g): np.nonzero(gvals == g)[0]
-                    for g in np.unique(gvals)
-                }
-            cell_out = np.zeros(n, dtype=np.int64)
-            sim_out = np.zeros(n, dtype=np.float64)
-            for g, rows in groups.items():
-                ids, CV, NB = cents_by_group[g]
-                S = V[rows]
-                C = np.zeros((rows.size, ids.size), dtype=np.float64)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    for j in range(ids.size):
-                        acc = np.zeros(rows.size, dtype=np.float64)
-                        cvj = CV[j]
-                        for d in range(dim):
-                            acc = acc + S[:, d] * cvj[d]
-                        C[:, j] = acc / (na[rows] * NB[j])
-                finite = np.isfinite(C).all(axis=1)
-                if finite.all():
-                    cmax = C.max(axis=1)
-                    cand = C >= (cmax - 2e-6)[:, None]
-                    easy = cand.sum(axis=1) == 1
-                    ei = np.argmax(cand, axis=1)
-                    cell_out[rows[easy]] = ids[ei[easy]]
-                    for ri in np.nonzero(easy)[0]:
-                        sim_out[rows[ri]] = dec_round(float(C[ri, ei[ri]]))
-                    for ri in np.nonzero(~easy)[0]:
-                        cs = np.nonzero(cand[ri])[0]
-                        # max by (rounded sim, -id): sort desc sim, asc id
-                        best = max(
-                            (
-                                Decimal(repr(float(C[ri, j]))).quantize(
-                                    quant, rounding=ROUND_HALF_UP
-                                ),
-                                -int(ids[j]),
-                            )
-                            for j in cs
-                        )
-                        cell_out[rows[ri]] = -best[1]
-                        sim_out[rows[ri]] = float(best[0])
-                else:
-                    for ri in range(rows.size):
-                        # scalar fallback mirroring Spark struct ordering
-                        # (NaN greatest, then -id)
-                        best = max(
-                            range(ids.size),
-                            key=lambda j: (
-                                (2, -int(ids[j]))
-                                if math.isnan(C[ri, j])
-                                else (1, dec_round(float(C[ri, j])),
-                                      -int(ids[j]))
-                            ),
-                        )
-                        cell_out[rows[ri]] = ids[best]
-                        sim_out[rows[ri]] = dec_round(float(C[ri, best]))
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(i) for i in range(len(in_cols) - 1)]
-                + [pa.array(cell_out), pa.array(sim_out)],
-                names=in_cols[:-1] + [out_cell_col, "_sim"],
+                g = rb.column(keys.index(group_col))
+                gv = g.fill_null(0).to_numpy(zero_copy_only=False)
+                ok = g.is_valid().to_numpy(zero_copy_only=False)
+                parts = [
+                    (np.flatnonzero(ok & (gv == k)), arrays[k])
+                    for k in map(int, np.unique(gv[ok]))
+                    if k in arrays
+                ]
+            keep = np.zeros(n, dtype=bool)
+            cid = np.zeros(n, dtype=np.int64)
+            score = np.zeros(n)
+            scored = np.zeros(n, dtype=bool)
+            for at, (ids, CV) in parts:
+                keep[at] = True
+                cid[at] = ids[0]
+                live, V = take(at, CV.shape[1])
+                j, s = _pick(_fold(V, CV, metric), metric == "cos")
+                cid[live], score[live], scored[live] = ids[j], s, True
+            out = pa.RecordBatch.from_arrays(
+                [rb.column(i) for i in range(len(keys))]
+                + [pa.array(cid), pa.array(score, mask=~scored)],
+                names=keys + [id_col, "_score"],
             )
+            yield out if keep.all() else out.filter(pa.array(keep))
 
-    return rows_df.select(*in_cols).mapInArrow(gen, out_schema)
-
-
-def _cent_arrays(rows):
-    """{group -> (ids, CV, NB)} from collected centroid rows; norms use the
-    same left-fold-of-squares the canonical _cos evaluates."""
-    import numpy as np
-
-    out = {}
-    for g, entries in rows.items():
-        entries = sorted(entries)
-        ids = np.array([i for i, _ in entries], dtype=np.int64)
-        CV = np.array([cv for _, cv in entries], dtype=np.float64)
-        nb = np.zeros(len(entries), dtype=np.float64)
-        for d in range(CV.shape[1] if len(entries) else 0):
-            nb = nb + CV[:, d] * CV[:, d]
-        out[g] = (ids, CV, np.sqrt(nb))
-    return out
+    if metric == "cos":
+        pick = F.max_by(id_col, F.struct("_score", -F.col(id_col)))
+    else:
+        pick = F.min_by(id_col, F.struct("_score", id_col))
+    return rows.mapInArrow(gen, schema).groupBy(*keys).agg(pick.alias(id_col))
 
 
-def _ivf_assign(e, cents, sim_round: int = 6):
-    """Nearest centroid per vector — canonical semantics (broadcast
-    crossJoin + round(_cos, 6) + partial-aggregated max_by with ties to
-    the smaller cent_id), computed by the shared ``_nearest_kernel``; the
-    centroid table is an O(nlist) control-plane read (the same rows the
-    broadcast shipped)."""
-    rows: dict = {None: []}
-    for r in cents.collect():
-        rows[None].append((int(r["cent_id"]), list(r["cv"])))
-    per_row = _nearest_kernel(
-        e.select("vec_id", "v"), _cent_arrays(rows),
-        ["vec_id", "v"], "cell", sim_round=sim_round,
-    )
-    return per_row.groupBy("vec_id").agg(
-        F.max_by(
-            F.col("cell"), F.struct(F.col("_sim"), (-F.col("cell")))
-        ).alias("cell")
-    )
-
-
-def _ivf_update(e, assign, dim: int):
-    """Lloyd update: per-cell dimension-wise mean, computed EXACTLY —
-    components floor-scaled to BIGINT, summed (order-free), floor-divided.
-    One partial-aggregated groupBy; empty cells drop out (both engines)."""
+def _lloyd_update(pts, assign, dim: int, vec: str = "v"):
+    """One Lloyd update: per centroid, the dimension-wise mean of the
+    ``vec`` arrays assigned to it, computed EXACTLY — components
+    floor-scaled by _CSCALE to BIGINT, summed (order-free), floor-divided.
+    ``assign`` is (vec_id, [group,] id) and its columns other than vec_id
+    key the output (keys..., cv); ``pts`` joins it on their shared
+    columns. One partial-aggregated groupBy; empty centroids drop out
+    (both engines). The means stay x_CSCALE (cosine is scale-invariant);
+    ``pq._unscale`` divides them back."""
+    on = [c for c in assign.columns if c in pts.columns]
+    keys = [c for c in assign.columns if c != "vec_id"]
     sums = [
-        F.sum(F.floor(F.element_at("v", d + 1) * _CSCALE)).alias(f"s{d}")
+        F.sum(F.floor(F.element_at(vec, d + 1) * _CSCALE)).alias(f"s{d}")
         for d in range(dim)
     ]
-    g = e.join(assign, "vec_id").groupBy("cell").agg(
-        F.count("*").alias("n"), *sums
-    )
+    g = pts.join(assign, on).groupBy(*keys).agg(F.count("*").alias("n"), *sums)
     means = [
-        F.expr(
-            f"CAST((s{d} - (((s{d} % n) + n) % n)) DIV n AS DOUBLE)"
-        )
+        F.expr(f"CAST((s{d} - (((s{d} % n) + n) % n)) DIV n AS DOUBLE)")
         for d in range(dim)
     ]
-    return g.select(
-        F.col("cell").alias("cent_id"), F.array(*means).alias("cv")
-    )
+    return g.select(*keys, F.array(*means).alias("cv"))
+
+
+def _ivf_assign(e, cents):
+    """Nearest (cent_id, cv) centroid per vector: (vec_id, cell), by
+    ``_nearest`` under cosine."""
+    return _nearest(e.select("vec_id", "v"),
+                    cents.withColumnRenamed("cent_id", "cell"), "cos", "cell")
 
 
 def ivf_centroids(e, dim: int = 64, iters: int = IVF_LLOYD_ITERS,
@@ -435,7 +478,8 @@ def ivf_centroids(e, dim: int = 64, iters: int = IVF_LLOYD_ITERS,
         F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
     )
     for _ in range(iters):
-        cents = _ivf_update(e, _ivf_assign(e, cents), dim)
+        cents = _lloyd_update(e, _ivf_assign(e, cents), dim)
+        cents = cents.withColumnRenamed("cell", "cent_id")
     return cents
 
 
@@ -501,41 +545,11 @@ def _seed_cents(t, n: int, id_col: str):
 
 
 def _sub_assign(tc, subs):
-    """Nearest sub-centroid WITHIN each vector's coarse cell — canonical
-    semantics (equi-join on coarse + round(_cos, 6) + max_by with ties to
-    the smaller sub_id), via the shared ``_nearest_kernel`` grouped by the
-    coarse id; the sub table is an O(nlist) control-plane read."""
-    rows: dict = {}
-    for r in subs.collect():
-        rows.setdefault(int(r["coarse"]), []).append(
-            (int(r["sub_id"]), list(r["cv"]))
-        )
-    per_row = _nearest_kernel(
-        tc.select("vec_id", "coarse", "v"), _cent_arrays(rows),
-        ["vec_id", "coarse", "v"], "sub_id", group_col="coarse",
-    )
-    return per_row.groupBy("vec_id", "coarse").agg(
-        F.max_by(
-            F.col("sub_id"), F.struct(F.col("_sim"), (-F.col("sub_id")))
-        ).alias("sub_id")
-    )
-
-
-def _sub_update(tc, sa, dim: int):
-    """Lloyd update keyed by (coarse, sub): same exact integer-mean as
-    ``_ivf_update``, one partial-aggregated groupBy."""
-    sums = [
-        F.sum(F.floor(F.element_at("v", d + 1) * _CSCALE)).alias(f"s{d}")
-        for d in range(dim)
-    ]
-    g = tc.join(sa, ["vec_id", "coarse"]).groupBy("coarse", "sub_id").agg(
-        F.count("*").alias("n"), *sums
-    )
-    means = [
-        F.expr(f"CAST((s{d} - (((s{d} % n) + n) % n)) DIV n AS DOUBLE)")
-        for d in range(dim)
-    ]
-    return g.select("coarse", "sub_id", F.array(*means).alias("cv"))
+    """Nearest (coarse, sub_id, cv) sub-centroid WITHIN each vector's
+    coarse cell: (vec_id, coarse, sub_id), by ``_nearest`` under cosine
+    grouped by the coarse id."""
+    return _nearest(tc.select("vec_id", "coarse", "v"), subs, "cos",
+                    "sub_id", group_col="coarse")
 
 
 def ivf_centroids_two_level(e, n_vecs: int, nlist: int, dim: int = EMB_DIM,
@@ -568,7 +582,8 @@ def ivf_centroids_two_level(e, n_vecs: int, nlist: int, dim: int = EMB_DIM,
     )
     coarse = _seed_cents(t, ncoarse, "cent_id")
     for _ in range(iters):
-        coarse = _ivf_update(t, _ivf_assign(t, coarse), dim)
+        coarse = _lloyd_update(t, _ivf_assign(t, coarse), dim)
+        coarse = coarse.withColumnRenamed("cell", "cent_id")
     coarse = coarse.localCheckpoint(eager=False)
     # sample pinned to coarse cells once; sub-seeds = first nsub per cell
     tc = (
@@ -587,7 +602,7 @@ def ivf_centroids_two_level(e, n_vecs: int, nlist: int, dim: int = EMB_DIM,
         )
     )
     for _ in range(iters):
-        subs = _sub_update(tc, _sub_assign(tc, subs), dim)
+        subs = _lloyd_update(tc, _sub_assign(tc, subs), dim)
     return coarse, subs.localCheckpoint(eager=False), nsub
 
 
