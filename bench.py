@@ -13,6 +13,7 @@ events/sec.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -21,7 +22,28 @@ import tempfile
 import time
 
 
+@contextlib.contextmanager
+def tmpfs_local_dir():
+    """A fresh ``spark.local.dir`` for one run, on tmpfs when ``/dev/shm``
+    exists (shuffle files without disk-seek noise), else None (Spark's
+    default). Removed on every exit path, so runs never share or leak
+    shuffle files."""
+    if not os.path.isdir("/dev/shm"):
+        yield None
+        return
+    local_dir = tempfile.mkdtemp(prefix="spark_local_", dir="/dev/shm")
+    try:
+        yield local_dir
+    finally:
+        shutil.rmtree(local_dir, ignore_errors=True)
+
+
 def main() -> None:
+    with tmpfs_local_dir() as local_dir:
+        _bench(local_dir)
+
+
+def _bench(local_dir: str | None) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -41,9 +63,8 @@ def main() -> None:
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
-    if os.path.isdir("/dev/shm"):
-        os.makedirs("/dev/shm/spark_local", exist_ok=True)
-        builder = builder.config("spark.local.dir", "/dev/shm/spark_local")
+    if local_dir:
+        builder = builder.config("spark.local.dir", local_dir)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -38,10 +38,25 @@ import tempfile
 import time
 
 
+def _driver_memory_gb(want: int = 24) -> int:
+    """``want`` GB of driver heap, capped at three quarters of the host's
+    physical memory (read from the host, so the probe never asks the JVM
+    for more than the machine has)."""
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return max(1, min(want, host * 3 // 4))
+
+
 def main() -> None:
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from bench import tmpfs_local_dir
+
+    with tmpfs_local_dir() as local_dir:
+        _run(local_dir)
+
+
+def _run(local_dir: str | None) -> None:
     sections = set(sys.argv[1:]) or {"ivf50k", "realistic", "embedding"}
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
@@ -51,13 +66,12 @@ def main() -> None:
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", f"{_driver_memory_gb()}g")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
-    if os.path.isdir("/dev/shm"):
-        os.makedirs("/dev/shm/spark_local", exist_ok=True)
-        builder = builder.config("spark.local.dir", "/dev/shm/spark_local")
+    if local_dir:
+        builder = builder.config("spark.local.dir", local_dir)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

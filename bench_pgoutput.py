@@ -22,13 +22,14 @@ import sys
 import time
 
 BASE = "/tmp/bench_pgoutput"
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 
 def _one(cpus: int, n: int) -> dict:
     """Run encode-once + timed decode in a FRESH process (clean JVM)."""
     code = f"""
 import sys, time, shutil
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {HERE!r})
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[{cpus}]")
          .appName("pgo-probe")
@@ -56,7 +57,7 @@ print("RESULT", n_bin, round(bin_s, 2), n_txt, round(txt_s, 2))
     out = subprocess.run(
         [sys.executable, "-c", code],
         capture_output=True, text=True, timeout=3000,
-        env={**os.environ, "PYTHONPATH": "/root/repo"},
+        env={**os.environ, "PYTHONPATH": HERE},
     )
     line = [l for l in out.stdout.splitlines() if l.startswith("RESULT")]
     if not line:

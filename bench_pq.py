@@ -20,12 +20,13 @@ import subprocess
 import sys
 
 BASE = "/tmp/bench_pq"
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 
 def _one(cpus: int, n: int, dim: int) -> dict:
     code = f"""
 import sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {HERE!r})
 from pyspark.sql import SparkSession, functions as F
 spark = (SparkSession.builder.master("local[{cpus}]")
          .appName("pq-probe")
@@ -79,7 +80,7 @@ print("RESULT", round(enc_s, 2), round(search_s, 2), n_out,
     out = subprocess.run(
         [sys.executable, "-c", code],
         capture_output=True, text=True, timeout=3000,
-        env={**os.environ, "PYTHONPATH": "/root/repo"},
+        env={**os.environ, "PYTHONPATH": HERE},
     )
     line = [l for l in out.stdout.splitlines() if l.startswith("RESULT")]
     if not line:

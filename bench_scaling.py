@@ -27,9 +27,15 @@ import time
 
 def run_child(cpus: int, per_batch: int, n_batches: int) -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from bench import tmpfs_local_dir
+
+    with tmpfs_local_dir() as local_dir:
+        _child(cpus, per_batch, n_batches, local_dir)
+
+
+def _child(cpus: int, per_batch: int, n_batches: int, local_dir) -> None:
     from pyspark.sql import SparkSession
 
-    local_dir = "/dev/shm/spark_local" if os.path.isdir("/dev/shm") else None
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(f"cdc-scaling-{cpus}")
@@ -40,7 +46,6 @@ def run_child(cpus: int, per_batch: int, n_batches: int) -> None:
         .config("spark.ui.enabled", "false")
     )
     if local_dir:
-        os.makedirs(local_dir, exist_ok=True)
         b = b.config("spark.local.dir", local_dir)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

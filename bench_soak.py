@@ -22,11 +22,18 @@ import time
 
 
 def main() -> None:
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from bench import tmpfs_local_dir
+
+    with tmpfs_local_dir() as local_dir:
+        _soak(local_dir)
+
+
+def _soak(local_dir: str | None) -> None:
     n_events = int(os.environ.get("SOAK_EVENTS", 40_000_000))
     n_batches = int(os.environ.get("SOAK_BATCHES", 10))
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     neardup = os.environ.get("SOAK_NEARDUP", "0") == "1"
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pyspark.sql import SparkSession
 
     builder = (
@@ -39,9 +46,8 @@ def main() -> None:
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
-    if os.path.isdir("/dev/shm"):
-        os.makedirs("/dev/shm/spark_local", exist_ok=True)
-        builder = builder.config("spark.local.dir", "/dev/shm/spark_local")
+    if local_dir:
+        builder = builder.config("spark.local.dir", local_dir)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

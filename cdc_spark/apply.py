@@ -9,7 +9,10 @@ This is the consumer the reference leaves as ``NotImplementedError``
    and it is O(tables + schema changes), never O(rows);
 2. DML rows are interpreted under the schema epoch their LSN falls in and
    projected into the batch-final schema (schema-evolution events replayed
-   at the correct LSN, E3);
+   at the correct LSN, E3). The lake owns the schema: ``LakeTable.evolve``
+   plans the epochs from its recorded history, ``LakeTable.merge`` records
+   the batch's control events, and each epoch's staged rows are lifted by
+   ``lake.project_to`` — the same cast-chain fold reads use;
 3. one LWW max-LSN reduce per (repo, path), a single pass over the batch
    (A2/A3);
 4. merge into the lake with one idempotent commit per (batch, table), keyed
@@ -31,15 +34,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import BASE_FIELDS, DML_OPS, EngineConfig
-from .dedup import lww_dedup
-from .lake import (
-    LakeTable,
-    chain_for_column,
-    fold_cast_expr,
-    replay_changes,
-    sql_type,
-)
+from .config import DML_OPS, EngineConfig
+from .dedup import lww_dedup, sql_ident
+from .lake import LakeTable, project_to, sql_str, sql_type
 from .parse import BASE_COLUMNS
 
 
@@ -62,6 +59,32 @@ def read_metrics(spark: SparkSession, lake_root: str) -> DataFrame:
         .parquet(os.path.join(lake_root, "_metrics", "*"))
         .dropDuplicates(["table", "batch_id", "skipped"])
     )
+
+
+def _stage_epoch(fields, key, consumed: str) -> list[str]:
+    """``selectExpr`` text staging one epoch's DML rows under the epoch's
+    own ``fields``: key columns as delivered, every other field's raw string
+    interpreted as its epoch type (NULL on tombstones), the ``_lsn`` /
+    ``_deleted`` bookkeeping, and the ``_extra`` payload residue not
+    ``consumed`` by the final schema — kept so a late-delivered add-column
+    can resurrect values (see lake.py ``META_FIELDS``)."""
+    live = "op <> 'delete'"
+    out = []
+    for name, typ in fields:
+        col = sql_ident(name)
+        if name in key:
+            out.append(col)
+            continue
+        raw = col if name in BASE_COLUMNS else f"element_at(extra, {sql_str(name)})"
+        out.append(
+            f"CASE WHEN {live} THEN try_cast({raw} AS {sql_type(typ)}) END AS {col}"
+        )
+    return out + [
+        "lsn AS _lsn",
+        "op = 'delete' AS _deleted",
+        f"CASE WHEN {live} THEN map_filter(coalesce(extra, map()), "
+        f"(k, v) -> NOT k IN ({consumed})) END AS _extra",
+    ]
 
 
 class CdcApply:
@@ -147,53 +170,13 @@ class CdcApply:
         lake = self.lake_for(table)
         key = lake.key
 
-        # -- schema epochs, reconstructed from the GLOBAL change history.
-        # Control events can arrive out of order across microbatches (a
-        # retype may be delivered before its add); applying changes in
-        # arrival order would corrupt the schema, so the lake metadata keeps
-        # the full (lsn, change) history and every batch recomputes the
-        # epoch chain from the base schema in LSN order.
+        # -- schema epochs (E3): the lake merges the batch's control events
+        # into its global (lsn, change) history and replays the epoch chain
         # (collect_set dedupes duplicate-delivered control events; A3)
-        batch_changes = sorted(
-            {(c["lsn"], c["schema_change"]) for c in (ctrl["changes"] or [])}
-        )
-        history = {int(l): c for l, c in lake.meta.get("schema_changes", [])}
-        new_history = False
-        for c_lsn, c_json in batch_changes:
-            if c_lsn in history:
-                if history[c_lsn] != c_json:
-                    raise ValueError(
-                        f"conflicting schema changes at lsn {c_lsn}"
-                    )
-                continue  # duplicate redelivery
-            history[c_lsn] = c_json
-            new_history = True
-        all_changes = sorted(history.items())
-        # invalid control payloads (unparseable JSON, add of an existing
-        # column, any action on a key column, unknown action) are SKIPPED,
-        # not raised: a poison control frame must not crash-loop the stream
-        # (same policy as the reference's GenericMessage fallback). The skip
-        # is deterministic — every reader replays the same raw history
-        # through lake.replay_changes, and the oracle (oracle.replay)
-        # applies the identical rule.
-        final_fields, aligned, epochs = replay_changes(
-            lake.schema_fields(0), all_changes, key
-        )
-        changes = new_history  # did the schema state move this batch?
-
-        # final schema -> id: reuse an existing entry when fields match,
-        # else append a fresh version (files reference entries append-only)
-        schemas = [dict(s) for s in lake.meta["schemas"]]
-        schema_id = None
-        for s in schemas:
-            if [tuple(f) for f in s["fields"]] == final_fields:
-                schema_id = s["schema_id"]
-                break
-        if schema_id is None:
-            schema_id = max(s["schema_id"] for s in schemas) + 1
-            schemas.append(
-                {"schema_id": schema_id, "fields": [list(f) for f in final_fields]}
-            )
+        batch_changes = [
+            (c["lsn"], c["schema_change"]) for c in (ctrl["changes"] or [])
+        ]
+        _, final_fields, aligned, epochs = lake.evolve(batch_changes)
 
         # -- truncate watermark: rows at or below it are dead (F3)
         t_new = ctrl["tr_lsn"]
@@ -205,54 +188,22 @@ class CdcApply:
             & (F.col("lsn") > F.lit(t_eff))
         )
 
-        # -- epoch projection into the batch-final schema (E3)
-        base = set(BASE_COLUMNS)
+        # -- epoch projection into the batch-final schema (E3): each epoch's
+        # rows are staged under the epoch's own types, then lifted by the
+        # lake's read-side projection, so writes and reads fold one
+        # cast-chain rule
+        consumed = ", ".join(sql_str(n) for n, _ in final_fields)
         parts = []
         for i, (lb, fields, aidx) in enumerate(epochs):
             ub = epochs[i + 1][0] if i + 1 < len(epochs) else None
-            sub = data.filter(F.col("lsn") > F.lit(lb)) if lb >= 0 else data
-            if ub is not None:
-                sub = sub.filter(F.col("lsn") < F.lit(ub))
-            epoch_types = dict(fields)
+            bounds = [f"lsn > {lb}"] if lb >= 0 else []
+            bounds += [f"lsn < {ub}"] if ub is not None else []
+            sub = data.where(" AND ".join(bounds)) if bounds else data
+            staged = sub.selectExpr(*_stage_epoch(fields, key, consumed))
             # valid changes applied after this epoch (aligned index skips
             # the invalid entries)
             tail = [c for c in aligned[aidx:] if c is not None]
-            is_del = F.col("op") == "delete"
-            exprs = [F.col(f"`{k}`") for k in key]
-            for name, t_final in final_fields:
-                if name in key:
-                    continue
-                if name not in epoch_types:
-                    e = F.lit(None).cast(sql_type(t_final))
-                else:
-                    raw_sql = (
-                        f"`{name}`" if name in base else f"element_at(extra, '{name}')"
-                    )
-                    # interpret the raw string under the epoch's type, then
-                    # fold every subsequent retype STEPWISE into the final
-                    # type — a direct epoch->final cast diverges from the
-                    # oracle on lossy intermediates ('007'->7->'7')
-                    mode, casts = chain_for_column(
-                        name, tail, True, [epoch_types[name]]
-                    )
-                    if mode == "value":
-                        e = F.expr(fold_cast_expr(raw_sql, casts, t_final))
-                    else:  # dropped after this epoch (re-add -> NULL)
-                        e = F.lit(None).cast(sql_type(t_final))
-                # tombstones carry no payload
-                exprs.append(F.when(~is_del, e).alias(name))
-            exprs.append(F.col("lsn").alias("_lsn"))
-            exprs.append(is_del.alias("_deleted"))
-            # payload residue not consumed by the final schema: kept so a
-            # late-delivered add-column can resurrect values (see lake.py
-            # META_FIELDS)
-            consumed = [n for n, _ in final_fields]
-            leftover = F.map_filter(
-                F.coalesce(F.col("extra"), F.expr("map()")),
-                lambda k, _: ~k.isin(*consumed),
-            )
-            exprs.append(F.when(~is_del, leftover).alias("_extra"))
-            parts.append(sub.select(*exprs))
+            parts.append(project_to(staged, fields, final_fields, tail))
         projected = parts[0]
         for p in parts[1:]:
             projected = projected.unionByName(p)
@@ -268,12 +219,8 @@ class CdcApply:
                 deduped if has_rows else None,
                 batch_id=batch_id,
                 lsn_hwm=ctrl["lsn_hwm"],
-                new_schemas=schemas if changes else None,
-                new_schema_id=schema_id if changes else None,
-                new_schema_changes=(
-                    [[l, c] for l, c in all_changes] if changes else None
-                ),
                 new_truncate_lsn=t_new,
+                schema_changes=batch_changes,
             )
             self._write_metrics(table, batch_id, info, t0)
             if self.cfg.neardup_index:

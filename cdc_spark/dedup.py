@@ -31,10 +31,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as SQL identifier text: backquoted, inner backquotes
+    doubled, so a dot, quote or backquote in a column name stays part of
+    the name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _col(name: str):
-    """``name`` as a literal column reference (dots and backquotes
-    escaped)."""
-    return F.col("`" + name.replace("`", "``") + "`")
+    """``name`` as a literal column reference (see :func:`sql_ident`)."""
+    return F.col(sql_ident(name))
 
 
 def lww_dedup(

@@ -69,7 +69,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import _col
+from .dedup import _col, sql_ident
 
 _SQL_TYPES = {"string": "STRING", "long": "BIGINT", "double": "DOUBLE",
               "boolean": "BOOLEAN", "int": "INT", "timestamp": "TIMESTAMP",
@@ -175,11 +175,17 @@ def sql_type(t: str) -> str:
     raise KeyError(f"unsupported column type {t!r}")
 
 
+def sql_str(s: str) -> str:
+    """``s`` as a SQL string literal: backslashes and quotes escaped, so a
+    column name from a schema-change event reads back byte for byte."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _ddl(fields: list[tuple[str, str]]) -> str:
     """Spark DDL of ``fields`` + META_FIELDS: the typed scan schema of a
     data file and the schema of an empty frame."""
     return ", ".join(
-        f"`{n}` {sql_type(t)}" for n, t in list(fields) + META_FIELDS
+        f"{sql_ident(n)} {sql_type(t)}" for n, t in list(fields) + META_FIELDS
     )
 
 
@@ -217,7 +223,7 @@ def _file_key_stats(path: str, key_col: str) -> tuple:
 
 
 def chain_for_column(
-    name: str, tail: list[dict], present: bool, start_casts: list[str]
+    name: str, tail: list[dict], present: bool
 ) -> tuple[str, list[str]]:
     """Walk the schema-change tail (changes applied AFTER a value was stored)
     for one column and return how to materialize it under the head schema:
@@ -233,7 +239,7 @@ def chain_for_column(
     never '007') so lazy projection byte-matches the oracle's per-event
     ``convert`` replay even through lossy intermediate types."""
     mode = "value" if present else "absent"
-    casts = list(start_casts)
+    casts: list[str] = []
     for ch in tail:
         if ch is None or ch.get("column") != name:
             continue
@@ -281,30 +287,25 @@ def project_to(
     src = dict(src_fields)
     exprs = []
     for name, typ in dst_fields + META_FIELDS:
+        col = sql_ident(name)
+        # column added after these rows were written: resurrect the value
+        # from the row's unconsumed payload residue
+        residue = f"element_at(`_extra`, {sql_str(name)})"
         if name in _META_NAMES:
-            exprs.append(f"try_cast(`{name}` AS {sql_type(typ)}) AS `{name}`")
-            continue
-        if changes_tail is None:
-            if name in src:
-                exprs.append(f"try_cast(`{name}` AS {sql_type(typ)}) AS `{name}`")
-            else:
-                # column added after this file was written: resurrect the
-                # value from the row's unconsumed payload residue
-                exprs.append(
-                    f"try_cast(element_at(`_extra`, '{name}') AS {sql_type(typ)}) "
-                    f"AS `{name}`"
-                )
-            continue
-        mode, casts = chain_for_column(name, changes_tail, name in src, [])
-        if mode == "value":
-            e = fold_cast_expr(f"`{name}`", casts, typ)
-        elif mode == "extra":
-            e = fold_cast_expr(f"element_at(`_extra`, '{name}')", casts, typ)
-        elif mode == "null":
-            e = f"CAST(NULL AS {sql_type(typ)})"
-        else:  # no lineage in the tail: legacy resurrect
-            e = f"try_cast(element_at(`_extra`, '{name}') AS {sql_type(typ)})"
-        exprs.append(f"{e} AS `{name}`")
+            e = f"try_cast({col} AS {sql_type(typ)})"
+        elif changes_tail is None:
+            e = f"try_cast({col if name in src else residue} AS {sql_type(typ)})"
+        else:
+            mode, casts = chain_for_column(name, changes_tail, name in src)
+            if mode == "value":
+                e = fold_cast_expr(col, casts, typ)
+            elif mode == "extra":
+                e = fold_cast_expr(residue, casts, typ)
+            elif mode == "null":
+                e = f"CAST(NULL AS {sql_type(typ)})"
+            else:  # no lineage in the tail: legacy resurrect
+                e = f"try_cast({residue} AS {sql_type(typ)})"
+        exprs.append(f"{e} AS {col}")
     return df.selectExpr(*exprs)
 
 
@@ -442,21 +443,39 @@ class LakeTable:
                 return [tuple(f) for f in s["fields"]]
         raise KeyError(f"unknown schema_id {sid}")
 
+    # ----------------------------------------------------- schema evolution
+    def evolve(self, batch_changes=()) -> tuple[list, list, list, list]:
+        """Plan in-stream schema evolution (E3) for a batch's raw
+        ``(lsn, change_json)`` control events, against the manifest's
+        history. Driver-side and pure: nothing is written (``merge``
+        publishes the result).
+
+        Control events can arrive out of order across batches (a retype may
+        be delivered before its add), so the batch's events are merged into
+        the GLOBAL history and the epoch chain is replayed from the base
+        schema in LSN order. A duplicate redelivery is skipped; a different
+        JSON at a stored LSN raises ``ValueError``. Invalid payloads are
+        skipped by :func:`replay_changes`, which every reader and the oracle
+        share.
+
+        Returns ``(history, final_fields, aligned, epochs)``: the merged
+        ``[lsn, change_json]`` history in LSN order (the manifest's
+        ``schema_changes`` format) and :func:`replay_changes` over it."""
+        history = {int(l): c for l, c in self._meta.get("schema_changes", [])}
+        for c_lsn, c_json in sorted((int(l), c) for l, c in batch_changes):
+            if history.setdefault(c_lsn, c_json) != c_json:
+                raise ValueError(f"conflicting schema changes at lsn {c_lsn}")
+        merged = [[l, c] for l, c in sorted(history.items())]
+        return (merged, *replay_changes(self.schema_fields(0), merged, self.key))
+
     # -------------------------------------------------------------- reading
-    def _parsed_changes(self, meta: dict | None = None) -> list:
+    def _parsed_changes(self) -> list:
         """The manifest's raw change history replayed through the validity
         filter — a list of ``(lsn, parsed_dict_or_None)`` pairs in LSN order
         (None = skipped poison entry). Per-file ``change_lsn`` stamps select
         each file's unapplied tail as ``lsn > stamp``."""
-        m = meta or self._meta
-        base = next(
-            [tuple(f) for f in s["fields"]]
-            for s in m["schemas"]
-            if s["schema_id"] == 0
-        )
-        raw = m.get("schema_changes", [])
-        _, aligned, _ = replay_changes(base, raw, tuple(m["key"]))
-        return [(int(l), c) for (l, _), c in zip(raw, aligned)]
+        history, _, aligned, _ = self.evolve()
+        return [(l, c) for (l, _), c in zip(history, aligned)]
 
     def _read_files(
         self,
@@ -562,7 +581,7 @@ class LakeTable:
         live = self._live_view(self._meta["files"])
         if include_meta:
             return live
-        return live.select(*[f"`{n}`" for n, _ in self.schema_fields()])
+        return live.select(*[sql_ident(n) for n, _ in self.schema_fields()])
 
     def diff(self, v_old: int, v_new: int | None = None) -> DataFrame:
         """Release notes between two retained snapshots: (key..., change_op)
@@ -649,7 +668,7 @@ class LakeTable:
             c = F.col(k) == F.lit(v)
             cond = c if cond is None else (cond & c)
         return live.filter(cond).select(
-            *[f"`{n}`" for n, _ in self.schema_fields()]
+            *[sql_ident(n) for n, _ in self.schema_fields()]
         )
 
     # -------------------------------------------------------------- merging
@@ -699,22 +718,24 @@ class LakeTable:
         batch_df: DataFrame | None,
         batch_id: int,
         lsn_hwm: int,
-        new_schemas: list[dict] | None = None,
-        new_schema_id: int | None = None,
         new_truncate_lsn: int | None = None,
         extra_summary: dict | None = None,
-        new_schema_changes: list | None = None,
+        schema_changes=(),
     ) -> dict:
         """Append a batch as delta files + single atomic commit.
 
         ``batch_df`` must carry the FINAL (post-batch) schema fields + META;
         reads resolve the max-LSN row per key across every delta, so no old
         file is read or rewritten and the commit costs O(batch).
-        ``new_schemas`` / ``new_schema_id`` publish schema evolution that
-        happened inside the batch; ``new_truncate_lsn`` publishes a table
-        truncate. Idempotent: a batch_id at or below the last committed one
-        is skipped wholesale (exactly-once under Spark's replay-on-restart,
-        E2). ``info["strategy"]`` is ``"append"``, or None for a
+        ``schema_changes`` are the batch's raw ``(lsn, change_json)`` control
+        events: the merge plans them with :meth:`evolve` (raising on a
+        conflict before any file is written) and, when the history grew,
+        records it with the schema entry whose fields equal the replayed
+        final fields, appending the next schema id when none does.
+        ``new_truncate_lsn`` publishes a table truncate. Idempotent: a
+        batch_id at or below the last committed one is skipped wholesale
+        (exactly-once under Spark's replay-on-restart, E2).
+        ``info["strategy"]`` is ``"append"``, or None for a
         manifest-only commit (no batch rows). ``info`` also carries the
         commit's lineage, counted on the write itself: ``rows`` appended,
         ``deletes`` among them, and their ``min_lsn`` / ``max_lsn`` (0, 0,
@@ -724,18 +745,23 @@ class LakeTable:
         if batch_id <= cur["last_batch"]["id"]:
             return {"skipped": True, "version": cur["version"], "batch_id": batch_id}
 
-        schema_id = new_schema_id if new_schema_id is not None else cur["schema_id"]
+        history, final_fields, _, _ = self.evolve(schema_changes)
+        schemas, schema_id = cur["schemas"], cur["schema_id"]
+        if len(history) != len(cur.get("schema_changes", [])):
+            # files reference schema entries, so entries are append-only
+            final = [list(f) for f in final_fields]
+            schema_id = next(
+                (s["schema_id"] for s in schemas if s["fields"] == final), None
+            )
+            if schema_id is None:
+                schema_id = max(s["schema_id"] for s in schemas) + 1
+                schemas = schemas + [{"schema_id": schema_id, "fields": final}]
         truncate_lsn = (
             max(cur["truncate_lsn"], new_truncate_lsn)
             if new_truncate_lsn is not None
             else cur["truncate_lsn"]
         )
         new_version = cur["version"] + 1
-        history = (
-            new_schema_changes
-            if new_schema_changes is not None
-            else cur.get("schema_changes", [])
-        )
         # LSN stamp: every change in the post-commit history is folded into
         # the values this merge writes, so the files' unapplied tail is
         # exactly the changes with lsn > this stamp (late-arriving lower-LSN
@@ -768,7 +794,7 @@ class LakeTable:
             "key": cur["key"],
             "n_buckets": cur["n_buckets"],
             "schema_id": schema_id,
-            "schemas": new_schemas if new_schemas is not None else cur["schemas"],
+            "schemas": schemas,
             "schema_changes": history,
             "files": written + cur["files"],
             "truncate_lsn": truncate_lsn,

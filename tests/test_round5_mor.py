@@ -8,11 +8,13 @@ pruning, and the resurrect-guard ordering in compact."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdc_spark.lake import LakeTable
 
 FIELDS = [("k", "long"), ("v", "string")]
+ADD_W = '{"action": "add", "column": "w", "type": "long"}'
 
 
 def _mk(spark, root, n_buckets=4):
@@ -182,21 +184,12 @@ def test_mor_resolve_spans_schema_epochs(spark, tmpdir_factory_clean):
     columns (added column -> NULL on old rows)."""
     lake = _mk(spark, tmpdir_factory_clean("mor11"))
     lake.merge(_batch(spark, [(1, "a"), (2, "b")], 1), batch_id=0, lsn_hwm=1)
-    schemas = [
-        {"schema_id": 0, "fields": [["k", "long"], ["v", "string"]]},
-        {
-            "schema_id": 1,
-            "fields": [["k", "long"], ["v", "string"], ["w", "long"]],
-        },
-    ]
     b2 = spark.createDataFrame(
         [(2, "b2", 7, 2, False, None)],
         "k BIGINT, v STRING, w BIGINT, _lsn BIGINT, _deleted BOOLEAN, "
         "_extra MAP<STRING,STRING>",
     )
-    lake.merge(
-        b2, batch_id=1, lsn_hwm=2, new_schemas=schemas, new_schema_id=1
-    )
+    lake.merge(b2, batch_id=1, lsn_hwm=2, schema_changes=[(2, ADD_W)])
     got = {
         (r["k"], r["v"], r["w"]) for r in lake.read().collect()
     }
@@ -211,6 +204,47 @@ def test_mor_resolve_spans_schema_epochs(spark, tmpdir_factory_clean):
     assert {
         (r["k"], r["v"], r["w"]) for r in lake.read().collect()
     } == got
+
+
+def test_redelivered_schema_change_adds_no_schema_entry(
+    spark, tmpdir_factory_clean
+):
+    lake = _mk(spark, tmpdir_factory_clean("evo1"))
+    lake.merge(None, batch_id=0, lsn_hwm=5, schema_changes=[(5, ADD_W)])
+    assert lake.meta["schema_id"] == 1 and len(lake.meta["schemas"]) == 2
+    before = (lake.meta["schemas"], lake.meta["schema_changes"])
+    lake.merge(None, batch_id=1, lsn_hwm=6, schema_changes=[(5, ADD_W)])
+    assert (lake.meta["schemas"], lake.meta["schema_changes"]) == before
+    assert lake.meta["schema_id"] == 1
+
+
+def test_conflicting_schema_change_raises_before_any_write(
+    spark, tmpdir_factory_clean
+):
+    lake = _mk(spark, tmpdir_factory_clean("evo2"))
+    lake.merge(None, batch_id=0, lsn_hwm=5, schema_changes=[(5, ADD_W)])
+    version, data_dir = lake.version, os.path.join(lake.root, "data")
+    conflict = '{"action": "drop", "column": "v"}'
+    with pytest.raises(ValueError, match="conflicting schema changes"):
+        lake.merge(
+            _batch(spark, [(1, "a")], 6), batch_id=1, lsn_hwm=6,
+            schema_changes=[(5, conflict)],
+        )
+    assert not os.path.exists(data_dir) or not os.listdir(data_dir)
+    assert lake.refresh().version == version
+
+
+def test_add_then_drop_reuses_schema_zero(spark, tmpdir_factory_clean):
+    lake = _mk(spark, tmpdir_factory_clean("evo3"))
+    drop_w = '{"action": "drop", "column": "w"}'
+    lake.merge(None, batch_id=0, lsn_hwm=5, schema_changes=[(5, ADD_W)])
+    lake.merge(
+        _batch(spark, [(1, "a")], 7), batch_id=1, lsn_hwm=7,
+        schema_changes=[(6, drop_w)],
+    )
+    assert lake.meta["schema_id"] == 0 and len(lake.meta["schemas"]) == 2
+    assert lake.schema_fields() == FIELDS
+    assert _rows(lake) == {(1, "a")}
 
 
 def test_mor_lookup_and_time_travel(spark, tmpdir_factory_clean):

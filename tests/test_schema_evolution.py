@@ -4,6 +4,7 @@ than data that post-dates them (out-of-order across batch boundaries)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdc_spark.apply import CdcApply
@@ -105,3 +106,34 @@ def test_late_delivered_add_column_resurrects_values(spark, tmpdir_factory_clean
     want = replay(log.toPandas(), cfg.base_fields)
     assert "stars" in got.columns and want["stars"].notna().any()
     assert_matches(got, want)
+
+
+@pytest.mark.parametrize("name", ["o'brien", "x`y", "back\\slash"])
+def test_added_column_names_are_quoted(spark, tmpdir_factory_clean, name):
+    """A schema-change ``add`` names a column from outside the program: a
+    quote, backquote or backslash in it must neither break the batch's SQL
+    nor change the values read back — on the apply staging, the late-add
+    resurrect from ``_extra``, the retype fold, ``read`` and ``lookup``."""
+    root = tmpdir_factory_clean("quoted")
+    changes = {
+        300: {"action": "add", "column": name, "type": "long"},
+        700: {"action": "retype", "column": name, "type": "string"},
+    }
+    log = change_log(
+        spark, 1000, n_repos=8, n_paths=4, schema_changes=changes, seed=31,
+    )
+    cfg = _cfg(root)
+    applier = CdcApply(spark, cfg)
+    # batch 0: the DML up to lsn 500, whose rows past 300 carry the column
+    # in `extra` before the add arrives; batch 1: the rest and both events
+    early = (F.col("op") != "schema_change") & (F.col("lsn") <= 500)
+    applier.apply_batch(log.filter(early), 0)
+    applier.apply_batch(log.filter(~early), 1)
+    lake = applier.lake_for("repos")
+    got = lake.read().toPandas()
+    want = replay(log.toPandas(), cfg.base_fields)
+    assert name in got.columns and want[name].notna().any()
+    assert_matches(got, want)
+    row = want[want[name].notna()].iloc[0]
+    hit = lake.lookup((row["repo"], row["path"])).collect()
+    assert [r[name] for r in hit] == [row[name]]
